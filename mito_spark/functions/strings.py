@@ -82,8 +82,11 @@ def equal_fold(a, b) -> Column:
 
 
 def fields(s) -> Column:
-    """Whitespace split dropping empties (strings.go:648)."""
-    return F.filter(F.split(F.trim(_c(s)), r"\s+"), lambda x: x != F.lit(""))
+    """Whitespace split dropping empties (strings.go:648) — the one
+    tokenizer every operator uses; lowercasing callers pass
+    ``F.lower(col)``. ``array_remove`` rather than a ``filter`` lambda:
+    lambda HOFs run interpreted, outside whole-stage codegen."""
+    return F.array_remove(F.split(F.trim(_c(s)), r"\s+"), "")
 
 
 def has_prefix(s, p) -> Column:

@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table
-from mito_spark.operators.text import _tokens
+from mito_spark.functions.strings import fields
 
 # 13 is the standard decontamination shingle width (GPT-3/Gopher).
 NGRAM_N = 13
@@ -97,7 +97,7 @@ def decontaminate(
       already precludes.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.lower(F.col("text")))
+    toks = fields(F.lower(F.col("text")))
     per_doc = (
         docs.select("doc_id", toks.alias("toks"))
         .where(F.size("toks") >= n)
@@ -214,7 +214,7 @@ def repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda x: x != F.lit(""),
     )
     staged = docs.select(
-        "doc_id", _tokens(F.lower(F.col("text"))).alias("toks"), lines.alias("lines")
+        "doc_id", fields(F.lower(F.col("text"))).alias("toks"), lines.alias("lines")
     )
     tk, ln = F.col("toks"), F.col("lines")
     metrics = staged.select(
@@ -395,7 +395,7 @@ def bloom_decontaminate_report(
     same measure-don't-trust contract as minhash_estimate_report.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.lower(F.col("text")))
+    toks = fields(F.lower(F.col("text")))
     per_doc = (
         docs.select("doc_id", toks.alias("toks"))
         .where(F.size("toks") >= n)
@@ -675,7 +675,7 @@ def decontam_ngram_ladder(
     """
     docs = load_table(spark, sf_dir, "documents")
     staged_toks = docs.select(
-        "doc_id", _tokens(F.lower(F.col("text"))).alias("toks")
+        "doc_id", fields(F.lower(F.col("text"))).alias("toks")
     )
     rung_structs = [
         F.when(

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table, spread
+from mito_spark.functions.strings import fields
 
 NUM_HASHES = 16
 # 8 bands × 2 rows: candidate probability 1-(1-j²)⁸ ≈ 0.90 at j=0.5,
@@ -79,10 +80,6 @@ def auto_lsh_bands(
 SIMHASH_BITS = 60
 SIMHASH_MAX_DIST = 3
 SIMHASH_CHUNKS = SIMHASH_MAX_DIST + 1  # pigeonhole guarantee
-
-
-def _tokens(col: Column) -> Column:
-    return F.filter(F.split(F.trim(F.lower(col)), r"\s+"), lambda x: x != F.lit(""))
 
 
 def _hash60(s: Column, seed: Column | None = None) -> Column:
@@ -147,7 +144,7 @@ def _shingles(col: Column, n: int) -> Column:
     (bag-of-words dedup — catches permuted/near-identical docs).
     Expression form for cold paths/tests; hot paths use
     ``_staged_shingles`` (see ``_shingles_from``)."""
-    return _shingles_from(_tokens(col), n)
+    return _shingles_from(fields(F.lower(col)), n)
 
 
 def _staged_shingles(
@@ -157,7 +154,7 @@ def _staged_shingles(
     projection so the shingle HOF's lambda input is an attribute
     lookup, not a re-evaluated split expression. CollapseProject keeps
     the staging because the consumer references the alias twice."""
-    toks = docs.select(id_col, _tokens(F.col(text_col)).alias("toks"))
+    toks = docs.select(id_col, fields(F.lower(F.col(text_col))).alias("toks"))
     return toks.select(id_col, _shingles_from(F.col("toks"), n).alias("sh"))
 
 
@@ -398,7 +395,7 @@ def simhash_signature(col: Column, bits: int = SIMHASH_BITS) -> Column:
     """SimHash over the token multiset: per bit j, sign of
     Σ_tokens (2·bit_j(h(token)) − 1); signature packed into a bigint.
     Nested HOFs — per-row O(tokens×bits), JVM-side."""
-    toks = _tokens(col)
+    toks = fields(F.lower(col))
     hashes = F.transform(toks, lambda t: _hash60(t))
     # 2^j lookup table as a literal array (shiftleft's bit-count arg
     # must be a Python int, not a Column, so we index instead of shift)
@@ -1818,7 +1815,7 @@ def _token_window_chunks(docs: DataFrame, chunk_tokens: int) -> DataFrame:
     """(doc_id, chunk_idx, h) aligned token-window chunk hashes — the
     ingest unit shared by ``dedup_paragraphs`` and its streaming twin
     (``streaming/stateful.streaming_paragraph_dedup``)."""
-    toks = docs.select("doc_id", _tokens(F.lower(F.col("text"))).alias("toks"))
+    toks = docs.select("doc_id", fields(F.lower(F.col("text"))).alias("toks"))
     n_chunk_expr = F.ceil(F.size("toks") / F.lit(chunk_tokens)).cast("int")
     return (
         toks.select(
@@ -2132,7 +2129,7 @@ def simhash_estimate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
     pairs = _simhash_chunk_pairs(sigd)
     tc = (
-        docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("t"))
+        docs.select("doc_id", F.explode(fields(F.lower(F.col("text")))).alias("t"))
         .select("doc_id", _hash60(F.col("t")).alias("h"))
         .groupBy("doc_id", "h")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -2883,7 +2880,7 @@ def dedup_weighted_jaccard(
     )
     tf = (
         docs.join(cdocs, "doc_id")  # verify explodes ONLY candidate docs
-        .select("doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("tok"))
+        .select("doc_id", F.explode(fields(F.lower(F.col("text")))).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
         .localCheckpoint()

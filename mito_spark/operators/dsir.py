@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table
-from mito_spark.operators.dedup import _hash60, _tokens
+from mito_spark.functions.strings import fields
+from mito_spark.operators.dedup import _hash60
 
 N_BUCKETS = 512
 
@@ -50,7 +51,7 @@ def dsir_importance_weights(
     terms = docs.select(
         "doc_id",
         "lang",
-        F.explode(_tokens(F.lower(F.col("text")))).alias("tok"),
+        F.explode(fields(F.lower(F.col("text")))).alias("tok"),
     ).withColumn("bucket", _hash60(F.col("tok")) % n_buckets)
     raw_ct = terms.groupBy("bucket").agg(F.count(F.lit(1)).alias("cr"))
     tgt_ct = (

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table
+from mito_spark.functions.strings import fields
 
 # RE2 ∩ Java-regex portable patterns (no lookarounds, no backrefs).
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -160,9 +161,7 @@ def domain_mix(spark: SparkSession, sf_dir: str, salt: str = MIX_SALT) -> DataFr
     side is touched twice but shuffled zero extra times. Output is the
     per-source rebalance manifest (before/after tokens, docs kept)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(
-        F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != F.lit(""))
-    )
+    toks = F.size(fields(F.lower(F.col("text"))))
     with_toks = docs.select("source", "doc_id", toks.alias("n_tokens"))
     totals = with_toks.groupBy("source").agg(F.sum("n_tokens").alias("src_tokens"))
     # try_divide: a zero-token source (degenerate corpus) must yield a
@@ -249,9 +248,7 @@ def domain_mix_temperature(
     keep, broadcast back. Output: per-source manifest (natural tokens,
     target share, keep fraction, kept tokens)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(
-        F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != F.lit(""))
-    )
+    toks = F.size(fields(F.lower(F.col("text"))))
     with_toks = docs.select("source", "doc_id", toks.alias("n_tokens"))
     totals = with_toks.groupBy("source").agg(F.sum("n_tokens").alias("src_tokens"))
     w = Window.partitionBy()
@@ -358,9 +355,7 @@ def domain_epoch_plan(
     token columns integer-floored identically.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(
-        F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != F.lit(""))
-    )
+    toks = F.size(fields(F.lower(F.col("text"))))
     totals = (
         docs.select("source", toks.alias("n_tokens"))
         .groupBy("source")

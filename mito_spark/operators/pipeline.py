@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table
+from mito_spark.functions.strings import fields
 from mito_spark.operators.decontam import (
     CONTAM_DEN,
     CONTAM_NUM,
@@ -27,7 +28,7 @@ from mito_spark.operators.decontam import (
     _ngrams,
     _shingle_hashes,
 )
-from mito_spark.operators.text import _LANG_MARKERS, _STOPWORDS, _tokens
+from mito_spark.operators.text import _LANG_MARKERS, _STOPWORDS
 
 
 def training_corpus(
@@ -54,7 +55,7 @@ def training_corpus(
     staged = docs.select(
         "doc_id",
         "text",
-        _tokens(F.lower(F.col("text"))).alias("toks"),
+        fields(F.lower(F.col("text"))).alias("toks"),
         lines_expr.alias("lines"),
     )
     toks = F.col("toks")
@@ -173,7 +174,7 @@ def training_corpus(
 
     # --- chunking (same construction as text.chunk_documents) --------
     stride = chunk_tokens - overlap
-    rechunk = deduped.select("doc_id", _tokens(F.col("text")).alias("_dtoks"))
+    rechunk = deduped.select("doc_id", fields(F.col("text")).alias("_dtoks"))
     dtoks = F.col("_dtoks")
     starts = F.sequence(F.lit(1), F.greatest(F.size(dtoks) - overlap, F.lit(1)), F.lit(stride))
     chunks = F.transform(

@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table, spread
-from mito_spark.operators.text import SURPRISAL_PER_DOC_CTE, _tokens
+from mito_spark.functions.strings import fields
+from mito_spark.operators.text import SURPRISAL_PER_DOC_CTE
 
 MIN_WORDS, MAX_WORDS = 50, 100_000
 MIN_MEAN_WLEN, MAX_MEAN_WLEN = 3.0, 10.0
@@ -49,7 +50,7 @@ def c4_quality_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
     low = F.lower(F.col("text"))
-    toks = _tokens(low)
+    toks = fields(low)
     n_words = F.size(toks).cast("bigint")
     nonspace = F.length(F.regexp_replace(low, r"\s", ""))
     symbols = F.length(F.regexp_replace(low, r"[a-z0-9\s]", ""))
@@ -66,7 +67,7 @@ def c4_quality_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
         (low.contains("{") | low.contains("}")).alias("has_brace"),
     )
     top = (
-        docs.select("doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("term"))
+        docs.select("doc_id", F.explode(fields(F.lower(F.col("text")))).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("n"))
         .groupBy("doc_id")
@@ -243,7 +244,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str, v: int = VOCAB_SIZE) -> Dat
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
     terms = docs.select(
-        "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(fields(F.lower(F.col("text")))).alias("term")
     )
     vocab = (
         terms.groupBy("term")
@@ -306,7 +307,7 @@ def seq_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~log2(max_len) rows at any corpus size.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    n = F.size(_tokens(F.lower(F.col("text")))).cast("bigint")
+    n = F.size(fields(F.lower(F.col("text")))).cast("bigint")
     base = docs.select(n.alias("n_tokens")).where(F.col("n_tokens") > 0)
     binned = base.select(
         "n_tokens",
@@ -376,7 +377,7 @@ def text_zipf_profile(
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
     wc = (
-        docs.select(F.explode(_tokens(F.lower(F.col("text")))).alias("w"))
+        docs.select(F.explode(fields(F.lower(F.col("text")))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -673,7 +674,7 @@ def source_token_drift(
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
     tok = (
-        docs.select("source", F.explode(_tokens(F.lower(F.col("text")))).alias("w"))
+        docs.select("source", F.explode(fields(F.lower(F.col("text")))).alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint()  # one scan feeds corpus top-V, totals, KL
@@ -893,11 +894,9 @@ def lexical_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup and a (source, token)-distinct rollup — two shuffles, both
     map-side combinable; output is |sources| rows.
     """
-    from mito_spark.operators.text import _tokens
-
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
-        "source", "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("w")
+        "source", "doc_id", F.explode(fields(F.lower(F.col("text")))).alias("w")
     )
     per_doc = (
         t.groupBy("source", "doc_id")
@@ -1028,7 +1027,7 @@ def ngram_entropy_report(
         ).otherwise(F.array().cast("array<string>"))
 
     staged = (
-        docs.select(_tokens(F.lower(F.col("text"))).alias("toks"))
+        docs.select(fields(F.lower(F.col("text"))).alias("toks"))
         .select(
             "toks", *[gram_col(n).alias(f"g{n}") for n in range(2, max_n + 1)]
         )
@@ -1167,7 +1166,7 @@ def term_burstiness_report(
     docs = spread(load_table(spark, sf_dir, "documents"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     tf = (
-        docs.select("doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("w"))
+        docs.select("doc_id", F.explode(fields(F.lower(F.col("text")))).alias("w"))
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("tf"))
     )

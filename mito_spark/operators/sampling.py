@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table
+from mito_spark.functions.strings import fields
 
 
 def hash_split(col: Column, weights: dict[str, float], salt: str = "split:v1") -> Column:
@@ -89,7 +90,7 @@ def token_pack_bins(
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != F.lit("")))
+    toks = F.size(fields(F.lower(F.col("text"))))
     w = Window.partitionBy("lang").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
     with_bins = docs.select(
         "lang", "doc_id", toks.alias("n_tokens")
@@ -316,9 +317,7 @@ def packing_efficiency_report(
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(
-        F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != F.lit(""))
-    )
+    toks = F.size(fields(F.lower(F.col("text"))))
     w = Window.partitionBy("lang").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -467,13 +466,11 @@ def bootstrap_ci_report(
     yields a NULL mean via try_divide and drops out of the percentile
     on both engines identically.
     """
-    from mito_spark.operators.text import _tokens
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "source",
         F.col("doc_id").cast("string").alias("did"),
-        F.size(_tokens(F.lower(F.col("text")))).cast("bigint").alias("x"),
+        F.size(fields(F.lower(F.col("text")))).cast("bigint").alias("x"),
     )
     cuts = _POIS1_CDF
 
@@ -614,10 +611,9 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines). Output ordered (cnt desc, token asc).
     """
     docs = load_table(spark, sf_dir, "documents")
-    from mito_spark.operators.text import _tokens
 
     vocab = (
-        docs.select(F.explode(_tokens(F.lower(F.col("text")))).alias("token"))
+        docs.select(F.explode(fields(F.lower(F.col("text")))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -703,10 +699,9 @@ def subsample_frequent_words(
     by a property test).
     """
     docs = load_table(spark, sf_dir, "documents")
-    from mito_spark.operators.text import _tokens
 
     vocab = (
-        docs.select(F.explode(_tokens(F.lower(F.col("text")))).alias("token"))
+        docs.select(F.explode(fields(F.lower(F.col("text")))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

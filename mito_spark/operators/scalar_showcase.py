@@ -197,7 +197,7 @@ def collections_showcase2(spark: SparkSession, sf_dir: str) -> DataFrame:
     through values_sorted. The oracle computes each expected value
     independently, so Spark must reproduce the op semantics exactly."""
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != F.lit(""))
+    toks = strings.fields(F.col("text"))
     nested = F.array(F.slice(toks, 1, 3), F.slice(toks, 4, 3))
     df = docs.select("doc_id", "n_chars", nested.alias("nested"), toks.alias("toks"))
     flat = C.flatten_deep(df, "nested")

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table
+from mito_spark.functions.strings import fields
 
 
 def _profile_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,10 +250,9 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions can never add or drop an output row.
     """
     from mito_spark.engine import spread
-    from mito_spark.operators.text import _tokens
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toks = docs.select(F.explode(_tokens(F.lower(F.col("text")))).alias("term"))
+    toks = docs.select(F.explode(fields(F.lower(F.col("text")))).alias("term"))
     # one MG scan feeds both the total and the candidate set; the fold
     # sees only int64 hashes (narrow Arrow boundary, see docstring)
     summary = (
@@ -581,10 +581,9 @@ def cms_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole measurement is hash-oracled.
     """
     from mito_spark.engine import spread
-    from mito_spark.operators.text import _tokens
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toks = docs.select(_tokens(F.lower(F.col("text"))).alias("toks"))
+    toks = docs.select(fields(F.lower(F.col("text"))).alias("toks"))
     idx = F.sequence(F.lit(1), F.greatest(F.size("toks") - (CMS_GRAM - 1), F.lit(1)))
     # element_at unroll (r13): full windows take CMS_GRAM O(1) lookups;
     # the greatest(…,1) partial tail on short docs keeps the exact
@@ -824,10 +823,9 @@ def hll_calibration_report(
     """
     from mito_spark.engine import spread
     from mito_spark.operators.dedup import _hash60
-    from mito_spark.operators.text import _tokens
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toks = _tokens(F.lower(F.col("text")))
+    toks = fields(F.lower(F.col("text")))
     bi_idx = F.when(
         F.size("toks") >= 2, F.sequence(F.lit(1), F.size("toks") - 1)
     ).otherwise(F.array().cast("array<int>"))

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table, spread
+from mito_spark.functions.strings import fields
 
 # Simulated-snapshot buckets (of 100): [0,5) removed in the new
 # snapshot, [80,90) edited between snapshots, [90,100) newly added.
@@ -173,7 +174,6 @@ def ingest_delta_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     just the pieces — is hash-proven.
     """
     from mito_spark.operators.dedup import incremental_dedup_frames
-    from mito_spark.operators.text import _tokens
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     base = docs.select(
@@ -187,7 +187,7 @@ def ingest_delta_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = batch.select(
         "doc_id",
         "source",
-        F.size(_tokens(F.lower(F.col("text")))).alias("n_words"),
+        F.size(fields(F.lower(F.col("text")))).alias("n_words"),
     ).join(flags.select("doc_id", "dup_of"), "doc_id", "left")
     cat = (
         F.when(F.col("dup_of").isNotNull(), F.lit("dup"))

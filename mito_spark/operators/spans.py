@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table, spread
-from mito_spark.operators.text import _tokens
+from mito_spark.functions.strings import fields
 
 WINDOW = 8  # tokens per span; 2107.06499 uses 50 BPE tokens at web scale
 
@@ -43,7 +43,7 @@ def _window_hashes(docs: DataFrame, w: int, keep_toks: bool) -> DataFrame:
     size-w+1) with a negative stop generates a DESCENDING sequence in
     Spark."""
     toks = docs.select(
-        "doc_id", _tokens(F.lower(F.col("text"))).alias("toks")
+        "doc_id", fields(F.lower(F.col("text"))).alias("toks")
     )
     cols = ["doc_id"] + (["toks"] if keep_toks else [])
     return toks.select(
@@ -278,7 +278,7 @@ def boilerplate_ngrams(
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
-        "doc_id", _tokens(F.lower(F.col("text"))).alias("toks")
+        "doc_id", fields(F.lower(F.col("text"))).alias("toks")
     )
     grams_col = F.when(
         F.size("toks") >= n,

@@ -14,12 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table, spread
-
-
-def _tokens(col: Column) -> Column:
-    """Whitespace tokenization dropping empties (Go strings.Fields
-    semantics, reference lib/strings.go:648)."""
-    return F.filter(F.split(F.trim(col), r"\s+"), lambda x: x != F.lit(""))
+from mito_spark.functions.strings import fields
 
 
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -30,7 +25,7 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     regexp_extract_all JVM-side, ~chars/4 heuristic checked against it.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = fields(F.col("text"))
     bpe_ish = F.size(
         F.regexp_extract_all(F.col("text"), F.lit(r"([A-Za-z]+|[0-9]|[^A-Za-z0-9\s])"), F.lit(1))
     )
@@ -76,7 +71,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the codegen'd plan.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.lower(F.col("text")))
+    toks = fields(F.lower(F.col("text")))
     scored = docs.select(
         "doc_id",
         "lang",
@@ -138,7 +133,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the score bit-identical across engines.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.lower(F.col("text")))
+    toks = fields(F.lower(F.col("text")))
     n_tok = F.size(toks)
     sw = F.array(*[F.lit(w) for w in _STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
@@ -195,7 +190,7 @@ def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     reordered or repeated-word variants collide (this is the key the
     near-dup stage buckets on). Pure built-ins, no shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.lower(F.col("text")))
+    toks = fields(F.lower(F.col("text")))
     canon = F.array_join(F.array_sort(F.array_distinct(toks)), " ")
     return docs.select("doc_id", F.md5(canon).alias("fingerprint"))
 
@@ -229,7 +224,7 @@ def chunk_documents(
     """
     stride = chunk_tokens - overlap
     docs = load_table(spark, sf_dir, "documents")
-    toks_f = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    toks_f = docs.select("doc_id", fields(F.col("text")).alias("toks"))
     starts = F.sequence(
         F.lit(1),
         F.greatest(F.size("toks") - overlap, F.lit(1)),
@@ -291,7 +286,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, top_k: int = 3) -> DataFra
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()  # scalar, computed once (cheap metadata count)
     terms = docs.select(
-        "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(fields(F.lower(F.col("text")))).alias("term")
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = terms.select("doc_id", "term").distinct().groupBy("term").agg(
@@ -354,7 +349,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     terms = docs.select(
-        "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(fields(F.lower(F.col("text")))).alias("term")
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("n"))
     cf = terms.groupBy("term").agg(F.count(F.lit(1)).alias("cf"))
@@ -421,7 +416,7 @@ def _winnow_fps(docs: DataFrame, k: int, w: int) -> DataFrame:
     """(doc_id, n_grams, f) with f = the winnowed fingerprint set.
     Tokens -> gram hashes -> window minima staged as separate
     projections (interpreted-HOF rule, see winnow_fingerprints)."""
-    staged = docs.select("doc_id", _tokens(F.lower(F.col("text"))).alias("toks"))
+    staged = docs.select("doc_id", fields(F.lower(F.col("text"))).alias("toks"))
     toks = F.col("toks")
     n_grams = F.greatest(F.size(toks) - (k - 1), F.lit(1))
     # element_at unroll (r13): full k-windows take k O(1) lookups; the
@@ -642,7 +637,7 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mito_spark.engine import spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toked = docs.select("doc_id", _tokens(F.lower(F.col("text"))).alias("toks"))
+    toked = docs.select("doc_id", fields(F.lower(F.col("text"))).alias("toks"))
     pairs_col = F.when(
         F.size("toks") >= 2,
         F.transform(
@@ -800,7 +795,7 @@ def kn_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mito_spark.engine import spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toked = docs.select("doc_id", _tokens(F.lower(F.col("text"))).alias("toks"))
+    toked = docs.select("doc_id", fields(F.lower(F.col("text"))).alias("toks"))
     pairs_col = F.when(
         F.size("toks") >= 2,
         F.transform(
@@ -949,7 +944,7 @@ def bpe_merge_candidates(
     from mito_spark.engine import spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    staged = docs.select("doc_id", _tokens(F.lower(F.col("text"))).alias("toks"))
+    staged = docs.select("doc_id", fields(F.lower(F.col("text"))).alias("toks"))
     pairs_col = F.when(
         F.size("toks") >= 2,
         F.transform(
@@ -1051,7 +1046,7 @@ def _bpe_learn(
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     cur = docs.select(
-        "doc_id", _tokens(F.lower(F.col("text"))).alias("toks")
+        "doc_id", fields(F.lower(F.col("text"))).alias("toks")
     ).localCheckpoint()
     # one probe decides the merge-application shape for ALL rounds:
     # arrays only shrink, so a corpus with no long docs now never has
@@ -1267,7 +1262,7 @@ def bpe_encode(
 
     _merges, cur = _bpe_learn(spark, sf_dir, rounds)
     docs = spread(load_table(spark, sf_dir, "documents"))
-    t0 = docs.select("doc_id", F.size(_tokens(F.lower(F.col("text")))).alias("n_tokens_raw"))
+    t0 = docs.select("doc_id", F.size(fields(F.lower(F.col("text")))).alias("n_tokens_raw"))
     enc = cur.select("doc_id", F.size("toks").alias("n_tokens_bpe"))
     return (
         t0.join(enc, "doc_id")
@@ -1363,7 +1358,7 @@ def _bpe_learn_bytes(
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     words = (
-        docs.select(F.explode(_tokens(F.lower(F.col("text")))).alias("w"))
+        docs.select(F.explode(fields(F.lower(F.col("text")))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("wc"))
     )
@@ -1493,7 +1488,7 @@ def tokenizer_fertility(
     docs = spread(load_table(spark, sf_dir, "documents"))
     base = docs.select(
         "doc_id",
-        F.size(_tokens(F.lower(F.col("text")))).alias("n_words"),
+        F.size(fields(F.lower(F.col("text")))).alias("n_words"),
         F.length("text").cast("bigint").alias("n_chars"),
     )
     langs = lang_id(spark, sf_dir).select("doc_id", "predicted_lang")
@@ -1601,7 +1596,7 @@ def tokenizer_fertility_subword(
     )
     docs = spread(load_table(spark, sf_dir, "documents"))
     dw = (
-        docs.select("doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("w"))
+        docs.select("doc_id", F.explode(fields(F.lower(F.col("text")))).alias("w"))
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("dwc"))
     )
@@ -1743,7 +1738,7 @@ def rake_keywords(
     # not consume the shared space, so adjacent stopwords both match);
     # the >= 2-space runs they leave are exactly the phrase breaks
     canon = F.concat(
-        F.lit(" "), F.array_join(_tokens(F.lower(F.col("text"))), " "), F.lit(" ")
+        F.lit(" "), F.array_join(fields(F.lower(F.col("text"))), " "), F.lit(" ")
     )
     pat = "(?<= )(" + "|".join(_RAKE_STOPWORDS) + ")(?= )"
     phrases = F.filter(
@@ -1872,7 +1867,7 @@ def _ulm_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     return (
-        docs.select(F.explode(_tokens(F.lower(F.col("text")))).alias("w"))
+        docs.select(F.explode(fields(F.lower(F.col("text")))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("wc"))
         .where(F.length("w") <= ULM_MAXW)
@@ -2565,7 +2560,7 @@ def collocation_pmi_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
     staged = (
-        docs.select(_tokens(F.lower(F.col("text"))).alias("toks"))
+        docs.select(fields(F.lower(F.col("text"))).alias("toks"))
         .select("toks", pair_structs.alias("pairs"))
         .localCheckpoint()
     )
@@ -2681,7 +2676,7 @@ def unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = spread(load_table(spark, sf_dir, "documents"))
     usage = docs.select(
-        "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("w")
+        "doc_id", F.explode(fields(F.lower(F.col("text")))).alias("w")
     ).where(F.length("w") <= ULM_MAXW)
     per_doc = (
         usage.join(F.broadcast(segp), "w")
@@ -2834,7 +2829,7 @@ def _wp_learn(
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     cur = docs.select(
-        "doc_id", _tokens(F.lower(F.col("text"))).alias("toks")
+        "doc_id", fields(F.lower(F.col("text"))).alias("toks")
     ).localCheckpoint()
     has_long = bool(cur.where(F.size("toks") > BPE_FOLD_MAX_TOKENS).take(1))
     out: list[tuple[int, str, str, int, int, int]] = []
@@ -2955,7 +2950,7 @@ def wordpiece_encode(
     _merges, cur = _wp_learn(spark, sf_dir, rounds)
     docs = spread(load_table(spark, sf_dir, "documents"))
     t0 = docs.select(
-        "doc_id", F.size(_tokens(F.lower(F.col("text")))).alias("n_tokens_raw")
+        "doc_id", F.size(fields(F.lower(F.col("text")))).alias("n_tokens_raw")
     )
     enc = cur.select("doc_id", F.size("toks").alias("n_tokens_wp"))
     return (
@@ -3091,7 +3086,7 @@ def _wps_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     return (
-        docs.select(F.explode(_tokens(F.lower(F.col("text")))).alias("w"))
+        docs.select(F.explode(fields(F.lower(F.col("text")))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("wc"))
         .where(F.length("w") <= WPS_MAXW)
@@ -3346,7 +3341,7 @@ def wordpiece_encode_subword(
     )
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
-        "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("w")
+        "doc_id", F.explode(fields(F.lower(F.col("text")))).alias("w")
     )
     return (
         toks.join(st, "w", "left")
@@ -3531,7 +3526,7 @@ def tokenizer_compression_curve(
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     words = (
-        docs.select(F.explode(_tokens(F.lower(F.col("text")))).alias("w"))
+        docs.select(F.explode(fields(F.lower(F.col("text")))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("wc"))
     )
@@ -3686,7 +3681,7 @@ def stupid_backoff_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
         (_split_bucket(F.col("doc_id"), "sbsplit:v1:") < SB_TRAIN_BUCKETS).alias(
             "is_train"
         ),
-        _tokens(F.lower(F.col("text"))).alias("toks"),
+        fields(F.lower(F.col("text"))).alias("toks"),
     )
     nullstr = F.lit(None).cast("string")
     gram_t = "array<struct<lvl:int,g1:string,g2:string,g3:string>>"
@@ -3944,7 +3939,7 @@ def textrank_keywords(
     sized.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toks = docs.select("doc_id", _tokens(F.lower(F.col("text"))).alias("toks"))
+    toks = docs.select("doc_id", fields(F.lower(F.col("text"))).alias("toks"))
     vocab = (
         toks.select(F.explode("toks").alias("w"))
         .groupBy("w")

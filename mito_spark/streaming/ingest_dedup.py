@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mito_spark.functions.strings import fields
 from mito_spark.operators.dedup import incremental_dedup_frames
 from mito_spark.sources.http_source import parse_json_pages, register
 from mito_spark.streaming.continuation import ContinuationDriver
@@ -75,14 +76,12 @@ def _flag_page(
     non-dup bills 'accepted' exactly as before. Quality rejects, like
     dups, NEVER enter the canon: a later page duplicating a rejected
     doc is judged against what the corpus actually kept."""
-    from mito_spark.operators.text import _tokens
-
     flags = incremental_dedup_frames(
         page_docs, canon, threshold=threshold, shingle=shingle
     ).withColumn("page", F.lit(page))
     if min_words > 0:
         nw = page_docs.select(
-            "doc_id", F.size(_tokens(F.lower(F.col("text")))).alias("_nw")
+            "doc_id", F.size(fields(F.lower(F.col("text")))).alias("_nw")
         )
         flags = (
             flags.join(nw, "doc_id")

@@ -810,7 +810,7 @@ def streaming_hll_distinct(items: DataFrame) -> DataFrame:
 
     Expects an (source, item) frame: tokenize upstream with the SAME
     JVM expressions as the batch op so the hashed items are identical
-    (the test streams ``explode(_tokens(lower(text)))``)."""
+    (the test streams ``explode(fields(lower(text)))``)."""
     return items.groupBy("source").applyInPandasWithState(
         _hll_step_factory(),
         outputStructType=HLL_OUTPUT_SCHEMA,
@@ -1190,9 +1190,9 @@ def burstiness_stream_rows(docs: DataFrame) -> DataFrame:
     sees exactly the batch tf values."""
     from pyspark.sql import functions as F
 
-    from mito_spark.operators.text import _tokens
+    from mito_spark.functions.strings import fields
 
-    base = docs.select(_tokens(F.lower(F.col("text"))).alias("toks"))
+    base = docs.select(fields(F.lower(F.col("text"))).alias("toks"))
     pairs = base.select(
         F.explode(
             F.transform(

@@ -68,9 +68,9 @@ def test_repetition_flag_on_degenerate_docs(spark):
     # substitution of load_table semantics: call the column program
     # directly through a local copy of the projection
     from mito_spark.operators.decontam import _max_run_len, _ngrams
-    from mito_spark.operators.text import _tokens
+    from mito_spark.functions.strings import fields
 
-    toks = _tokens(F.lower(F.col("text")))
+    toks = fields(F.lower(F.col("text")))
     n_tok = F.size(toks)
     run2 = _max_run_len(_ngrams(toks, 2))
     out = {

@@ -1,6 +1,7 @@
-"""Degenerate-corpus robustness: every documents/embeddings operator
-must run (error-as-value, never task failure) on adversarial inputs —
-empty text, whitespace-only text, single-char docs, zero vectors.
+"""Degenerate-corpus robustness: every ``degenerate``-tagged operator
+(the documents/embeddings operators) must run (error-as-value, never
+task failure) on adversarial inputs — empty text, whitespace-only
+text, single-char docs, zero vectors.
 This probe found the funnel ANSI bugs and the zero-norm cosine
 failures; it stays as the regression net."""
 
@@ -8,299 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-DOC_OPS = [
-    "text_token_count",
-    "text_lang_id",
-    "text_quality",
-    "text_fingerprint",
-    "text_chunking",
-    "text_tfidf_top_terms",
-    "text_surprisal",
-    "repetition_quality",
-    "decontaminate",
-    "pii_redaction",
-    "stratified_sample",
-    "domain_mix",
-    "domain_mix_temperature",
-    "bm25_search",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_connected_components",
-    "dedup_containment",
-    "training_corpus_pipeline",
-    # r5 wave 2
-    "exact_substring_spans",
-    "span_rewrite",
-    "c4_quality_filters",
-    "surprisal_buckets",
-    "vocab_coverage",
-    "seq_length_histogram",
-    "hybrid_search_rrf",
-    "jaccard_prefix_join",
-    # r6
-    "text_bigram_surprisal",
-    # r8: KN perplexity (empty/whitespace/single-token docs must get
-    # n_bigrams=0 + NULLs; the 1-real-doc corpus exercises the
-    # counts-of-counts discount fallback path); weighted sampling
-    # (the n_chars=0 doc is excluded by the w>0 rule, strata smaller
-    # than k return whole strata)
-    "kn_bigram_perplexity",
-    "weighted_sample_es",
-    "bpe_merge_candidates",
-    "bpe_learn_merges",
-    "boilerplate_ngrams",
-    # r7
-    "bpe_learn_merges_bytes",
-    "bpe_encode",
-    "text_zipf_profile",
-    # r8: perplexity filter (all-NULL-ppl corpora leave percentile()
-    # NULL cutoffs; every doc must land in 'unscored'/keep=false, not
-    # crash) and heavy hitters (tiny corpus: every term is a hitter;
-    # empty/whitespace docs contribute no tokens)
-    "doc_perplexity_filter",
-    "heavy_hitters",
-    # r8: fertility on a corpus whose docs are empty/whitespace/1-token
-    # (zero-word docs land in 'und' with NULL ratios, not crash)
-    "tokenizer_fertility",
-    # r9: subword fertility on zero-word docs ('und' rows with NULL
-    # ratios via the left join; 1-char words are 1 piece + marker)
-    "tokenizer_fertility_subword",
-    "filter_attribution_report",
-    # r8 session 2: RAKE on empty/whitespace/1-token docs (no phrases
-    # -> no rows for that doc, not a crash); the minhash calibration /
-    # dedup attribution / source overlap compositions on a corpus too
-    # small for any band collision (empty candidate set -> empty or
-    # all-false reports)
-    "rake_keywords",
-    "minhash_estimate_report",
-    "dedup_attribution_report",
-    "source_overlap_matrix",
-    # r9: paragraph dedup (empty/whitespace docs -> 0 chunks, NULL
-    # fraction, keep=true), canonical-quality pick and novelty decay
-    # on a corpus too small for candidates/with degenerate shingles
-    "dedup_paragraphs",
-    "dedup_canonical_quality",
-    "ngram_novelty_report",
-    # r9: simhash calibration on empty/whitespace docs (zero-norm
-    # vectors excluded from the cosine; all-zero signatures collide)
-    "simhash_estimate_report",
-    # r9: b-bit calibration (empty corpus -> empty candidate set) and
-    # the CMS report (zero-gram corpus -> the n_tokens==0 early return;
-    # whitespace docs produce the '' gram, counted identically on both
-    # engines)
-    "bbit_minhash_report",
-    "cms_calibration_report",
-    # r9: bloom decontamination (short docs -> zero shingles -> empty
-    # probe set and empty pair frame; the keep-all clamped sample
-    # threshold path)
-    "bloom_decontaminate_report",
-    # r9 session 2: unigram-LM trainer (empty/whitespace docs add no
-    # word types; 1-char words are single-piece Viterbi paths; on a
-    # fully degenerate corpus both surfaces return the agreed empty
-    # forms — train: per-round rows with n_vocab=0/nll=0, vocab: 0 rows)
-    "unigram_lm_train",
-    "unigram_lm_vocab",
-    # r9 session 3: HLL calibration (empty/whitespace docs add no
-    # token/bigram/gram5 items but still count in doc/source domains;
-    # a domain with zero items is absent from BOTH legs identically)
-    "hll_calibration_report",
-    # r9 session 3: PMI collocations (degenerate corpus has no pair
-    # crossing the min count -> 0 rows on both engines, not a crash)
-    "collocation_pmi_report",
-    # r9 session 3: unigram application (zero-word docs keep a row
-    # with n_words=0 and NULL ratio via the left join)
-    "unigram_encode",
-    # r9 session 3: bucket skew (degenerate docs still produce one
-    # truncated shingle each; all-identical signatures are exactly the
-    # hot-bucket shape the report exists to measure, not a crash)
-    "lsh_bucket_skew_report",
-    # r9 session 3: threshold sweep (degenerate corpora keep all five
-    # rungs with n_pairs=0 / NULL mean via the left joins)
-    "dedup_threshold_sweep",
-    # r10: the prune trainer on a corpus whose vocab is already below
-    # the target (keep_n >= n -> zero cuts, never a negative rank);
-    # the curve tuner / weighted verify / modality agreement on a
-    # corpus too small for candidates (zero masses, NULL recalls via
-    # try_divide); the ladders and the epoch plan on empty/whitespace
-    # docs (zero-token sources get NULL shares via try_divide);
-    # packing on zero-token docs (no split, no division); the
-    # normalization ladder on empty strings (md5('' ) is a valid
-    # group); the cluster split on a corpus with no near-dup pairs
-    # (every doc is its own group)
-    "unigram_lm_prune",
-    "lsh_curve_report",
-    "dedup_weighted_jaccard",
-    "dedup_modality_agreement",
-    "decontam_ngram_ladder",
-    "domain_epoch_plan",
-    "packing_efficiency_report",
-    "dedup_normalization_report",
-    "dataset_split_by_cluster",
-    # r10: drift on sources whose docs are all empty/whitespace (no
-    # token rows -> the source is absent from every leg identically)
-    "source_token_drift",
-    # r10 session 3: wordpiece on a corpus where no pair reaches the
-    # WP_MIN_PAIR floor (loop stops round 1, 0 rows both engines);
-    # the NB classifiers on a corpus whose train or test split may be
-    # empty (empty model -> every held-out doc predicts the fallback
-    # class via the left-join coalesce) and on zero-gram docs
-    # (len<3 -> empty trigram array -> 'und'); the snapshot diff on
-    # 1-char docs (the truncation edit clamps at greatest(len-7,1)
-    # so the 'changed' bucket degenerates to 'unchanged' identically
-    # on both engines)
-    "wordpiece_learn",
-    "nb_langid_report",
-    "quality_classifier_report",
-    "corpus_snapshot_diff",
-    # r10 session 3 batch 2: the encode surface when every round dies
-    # at the floor (ratio = raw/raw = 1.0 on both engines via the
-    # fallback chain); the feature ranking on a possibly-empty model
-    # (zero candidate rows -> zero output rows, not a crash)
-    "wordpiece_encode",
-    "nb_langid_top_features",
-    # r10 session 3: charset shares on empty docs (0/0 -> NULL via
-    # try_divide on both engines)
-    "charset_profile",
-    # r10 session 3: the bootstrap on 1-2-doc sources (a replicate
-    # whose weights all draw 0 yields NULL mean and drops out of the
-    # percentile identically on both engines); the PR curve on a
-    # single-class train split (missing class score -> margin -inf)
-    "bootstrap_ci_report",
-    "quality_classifier_pr_curve",
-    # r10 session 3 batch 3: the composed ingest on a corpus whose
-    # batch/canon buckets may be empty (empty band join -> every batch
-    # doc routes through the quality floor; zero batch docs -> zero
-    # manifest rows, not a crash)
-    "ingest_delta_pipeline",
-    # r11: subword WordPiece on the all-hapax corpus — WPS_MIN_WC
-    # empties the training table, so the trainer emits 0 merges and
-    # the encode surface routes EVERY word through the empty-vocab
-    # [UNK] branch on both engines
-    "wordpiece_learn_subword",
-    "wordpiece_encode_subword",
-    # r11: CDC on empty/short docs (len 0 -> zero-width span filtered;
-    # len < window -> one whole-text chunk, unshared -> no rows)
-    "cdc_chunk_dedup",
-    # r11: calibration on a corpus whose held-out split may have no
-    # scoreable docs (empty margins -> zero bins, not a crash); the
-    # sampling table on an all-whitespace vocab (zero rows)
-    "quality_classifier_calibration",
-    "negative_sampling_table",
-    # r11: curriculum on a degenerate corpus (identical or zero docs:
-    # max==min -> width fallback 1.0, single bucket, single phase)
-    "curriculum_plan",
-    # r11 wave 2: the curve on a corpus whose merges die early (the
-    # loop breaks, partial curve rows); explain on a corpus with zero
-    # verified pairs (empty bounded frame, zero rows)
-    "tokenizer_compression_curve",
-    "dedup_pair_explain",
-    # r11 wave 3: diversity on all-empty/whitespace sources (no token
-    # rows -> the source is simply absent) and single-token sources
-    # (ln(1)=0 denominator -> herdan_c NULL on both engines)
-    "lexical_diversity_report",
-    # r12: entropy ladder on empty/whitespace docs (zero gram rows
-    # for a leg -> ln(0) never evaluated: the leg emits n_tokens NULL
-    # -> both engines agree on the degraded row shape)
-    "ngram_entropy_report",
-    # r12: stupid backoff on a degenerate corpus — train split may
-    # be empty (every held-out position is OOV, NULL xent) and docs
-    # with < 3 tokens contribute no positions (n_pos 0 anchor rows)
-    "stupid_backoff_ppl",
-    # r12: OPH on 1-2-shingle docs — most bins empty, rotation
-    # densification fills every slot from the nearest occupied bin;
-    # zero candidate pairs -> zero rows, not a crash
-    "minhash_oph_report",
-    # r12 session 2: edit-distance verify on a corpus whose LSH chain
-    # yields zero candidates (no shingles on empty/1-char docs) ->
-    # zero rows; the mx=0 CASE guards empty-vs-empty pairs
-    "dedup_edit_distance",
-    # r12 session 2: burstiness on a 4-doc corpus — nothing reaches
-    # the df >= 5 floor, zero rows, not a crash; subsampling on a
-    # tiny vocab — every p_keep clips to 1 via LEAST
-    "term_burstiness_report",
-    "subsample_frequent_words",
-    # r12 session 2: KMV on the 2-source degen corpus — both sketches
-    # far under K, the exact small-set branch fires; empty/whitespace
-    # docs contribute no shingles
-    "kmv_overlap_report",
-    # r12 session 2: TextRank on a corpus where no token reaches the
-    # vocabulary floor — empty node set, zero rows, not a crash
-    "textrank_keywords",
-]
-EMB_OPS = [
-    "quantize_embeddings",
-    "ann_cosine_topk",
-    "ann_cosine_topk_sq8",
-    "ann_cosine_topk_filtered",
-    "embedding_near_dup",
-    "contrastive_pairs",
-    "mmr_rerank",
-    # r11: correlation on zero/identical vectors (variance clamps to 0,
-    # corr NULLs out via try_divide -> pairs drop on both engines)
-    "embedding_correlation_report",
-    # r6: persisted-index tiers (index built fresh in the tmp dir)
-    # and the k-means family, runnable on tiny corpora since the
-    # empty-train-sample guard in _ivf_train_sample
-    "ann_persisted_topk",
-    "ann_index_refresh",
-    "ann_cosine_topk_ivf",
-    "semdedup",
-    "embedding_cluster_profile",
-    # r7: PQ tiers (8-dim degen vectors split 4x2; codebooks train on
-    # the full-frame fallback) and the composed graph report
-    "ann_pq_topk",
-    "ann_ivfadc",
-    "graph_report",
-    "graph_clustering",
-    # r8 session 2: silhouette needs >= 2 cells (explicit n_cells
-    # floor via auto_n_cells) and zero vectors must score s=0 via the
-    # greatest(a,b)=0 guard; the JL report must survive a sample with
-    # identical vectors (od=0 pairs excluded on both engines)
-    "cluster_silhouette",
-    "jl_projection_report",
-    # r9: outlier report on zero/identical vectors (std 0 -> no
-    # member can exceed mean + z*0 ... except float dust; bounded)
-    "embedding_outlier_report",
-    # r10: truncated-dim recall on 8-dim degen vectors (slice beyond
-    # length yields the full short array; zero-norm prefixes NULL out
-    # via try_divide and are excluded on both engines)
-    "embedding_dim_ablation",
-    # r10: the nprobe ladder on 8-dim degen vectors (rungs above the
-    # derived cell count clamp; zero-norm queries drop via try_divide)
-    "ann_nprobe_curve",
-    # r10 session 3: centroid drift on 4 degen vectors whose old/new
-    # buckets may leave a side empty (full-outer per-dim join +
-    # greatest(n,1) guards -> a missing side reads as centroid 0)
-    "embedding_snapshot_drift",
-    # r12: isotropy on the degen frame — the zero vector drops via
-    # nm > 0; identical vectors give mean_pairwise_cosine 1
-    "embedding_isotropy_report",
-    # r12: PCA on 4 degen 8-dim vectors — d < k components means the
-    # covariance deflates toward zero rank; the norm<=0 guard keeps
-    # the previous vector and later eigenvalues go ~0, identically in
-    # the driver iteration and the unrolled SQL
-    "pca_projection_report",
-    # r12 session 2: binary quantization on 8-dim degen vectors — the
-    # second word's slice is empty (fold -> 0, oracle COALESCE 0);
-    # the zero vector's cosine NULLs out via try_divide and drops
-    "ann_cosine_topk_binary",
-    # r12 session 2: RBO on the degen frame (every vector is a query;
-    # zero-vector rankings drop, the left join backfills 0 rows) and
-    # assortativity on the tiny kNN graph (a regular/symmetric case
-    # zero-variances the denominator -> NULL r on both engines)
-    "ann_rbo_report",
-    "graph_assortativity",
-    # r12 session 2: IVF balance on 4 degen vectors — the k-means
-    # chain's empty-train-sample guard holds; most cells empty (no
-    # rows), the occupied handful carry the whole share mass
-    "ivf_balance_report",
-    # r12 session 2: whitening on 4 degen 8-dim vectors — rank-
-    # deficient covariance deflates to ~0 eigenvalues (norm<=0 guard
-    # keeps the previous vector); projected zero vectors drop via
-    # the nm > 0 filter on both engines
-    "whitening_isotropy_report",
-]
+import __spark_entry__ as entry
 
 
 @pytest.fixture(scope="module")
@@ -322,10 +31,8 @@ def degen_dir(spark, tmp_path_factory):
     return td
 
 
-@pytest.mark.parametrize("name", DOC_OPS + EMB_OPS)
+@pytest.mark.parametrize("name", entry.tagged("degenerate"))
 def test_operator_survives_degenerate_corpus(spark, degen_dir, name):
-    import __spark_entry__ as entry
-
     # noop write, NOT count(): a counted plan prunes every output
     # column, so expression-level crashes in projected columns (the
     # exact class this net exists to catch) would pass silently —

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from mito_spark.functions.strings import fields
 from mito_spark.operators import dedup, multimodal, similarity, text
 from mito_spark.operators.relational import q1_pricing_summary, q3_shipping_priority
 
@@ -149,7 +150,7 @@ def test_fingerprint_is_permutation_invariant(spark):
     )
     import mito_spark.functions.collections  # noqa: F401  (module import sanity)
 
-    toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != F.lit(""))
+    toks = fields(F.lower(F.col("text")))
     canon = F.array_join(F.array_sort(F.array_distinct(toks)), " ")
     fps = [r.f for r in df.select(F.md5(canon).alias("f")).collect()]
     assert fps[0] == fps[1]

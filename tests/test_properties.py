@@ -67,10 +67,8 @@ def test_arr_min_max_match_python(spark, xs):
 @given(st.text(alphabet="ab ", max_size=40), st.integers(1, 4))
 def test_chunk_reconstruction(spark, text, stride_extra):
     """Chunking with overlap=0 reconstructs the token stream exactly."""
-    from mito_spark.operators.text import _tokens
-
     df = spark.createDataFrame([(text,)], "text string")
-    toks = df.select(_tokens(F.col("text")).alias("t")).first().t
+    toks = df.select(strings.fields(F.col("text")).alias("t")).first().t
     n = 2 * stride_extra  # chunk size, no overlap
     starts = list(range(1, max(len(toks), 1) + 1, n))
     rebuilt = []
@@ -151,9 +149,7 @@ def test_token_pack_conserves_tokens(spark):
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     total = docs.select(
-        F.sum(
-            F.size(F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != F.lit("")))
-        ).alias("t")
+        F.sum(F.size(strings.fields(F.lower(F.col("text"))))).alias("t")
     ).first().t
     assert sum(r.tokens_in_bin for r in out) == total
     by_lang: dict = {}

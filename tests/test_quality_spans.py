@@ -264,11 +264,11 @@ def test_vocab_coverage_full_vocab_zero_oov(spark, sf_dir):
 def test_seq_length_histogram_conserves_mass(spark, sf_dir):
     from mito_spark.engine import load_table
     from mito_spark.operators import quality as q
-    from mito_spark.operators.text import _tokens
+    from mito_spark.functions.strings import fields
 
     rows = q.seq_length_histogram(spark, sf_dir).collect()
     docs = load_table(spark, sf_dir, "documents").select(
-        F.size(_tokens(F.lower(F.col("text")))).alias("n")
+        F.size(fields(F.lower(F.col("text")))).alias("n")
     ).where(F.col("n") > 0)
     n_docs, n_tokens = docs.agg(F.count(F.lit(1)), F.sum("n")).first()
     assert sum(r["n_docs"] for r in rows) == n_docs

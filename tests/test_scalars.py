@@ -51,6 +51,10 @@ def test_string_semantics(one):
         strings.count_substr("s", "l").alias("cnt"),
         strings.substring("s", 0, 5).alias("sub"),  # [start,end) code points
         strings.fields(F.lit("  a  b\tc ")).alias("fields"),
+        strings.fields(F.lit("")).alias("fields_empty"),
+        strings.fields(F.lit(" \t\n ")).alias("fields_blank"),
+        strings.fields(F.lit("\tFoo  bar")).alias("fields_tab"),
+        strings.fields(F.lower(F.lit("\tFoo  bar"))).alias("fields_lower"),
         strings.replace_n("s", "l", "L", 2).alias("rep"),
         strings.trim(F.lit("xxhixx"), "x").alias("trimmed"),
     ).first()
@@ -60,6 +64,10 @@ def test_string_semantics(one):
     assert row.cnt == 3
     assert row.sub == "hello"
     assert row.fields == ["a", "b", "c"]
+    assert row.fields_empty == []
+    assert row.fields_blank == []
+    assert row.fields_tab == ["Foo", "bar"]
+    assert row.fields_lower == ["foo", "bar"]
     assert row.rep == "heLLo world"
     assert row.trimmed == "hi"
 

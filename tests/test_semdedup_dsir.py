@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table
+from mito_spark.functions.strings import fields
 from mito_spark.operators.dsir import dsir_importance_weights
 from mito_spark.operators.similarity import semdedup
 
@@ -137,7 +138,6 @@ def test_knn_graph_properties(spark, sf_dir):
 def test_winnowing_guarantee(spark):
     """The winnowing invariant: two docs sharing a run of >= w+k-1
     tokens MUST share at least one fingerprint; density is ~2/(w+1)."""
-    from mito_spark.operators import text as T
     from pyspark.sql import functions as F
 
     k, w = 5, 4
@@ -156,7 +156,7 @@ def test_winnowing_guarantee(spark):
     # reuse the operator's internals on a custom frame via temp view +
     # the oracle SQL shape is engine-checked; here check the guarantee
     # with the Spark expressions directly
-    staged = docs.select("doc_id", T._tokens(F.lower(F.col("text"))).alias("toks"))
+    staged = docs.select("doc_id", fields(F.lower(F.col("text"))).alias("toks"))
     toks = F.col("toks")
     n_grams = F.greatest(F.size(toks) - (k - 1), F.lit(1))
     grams = staged.select(

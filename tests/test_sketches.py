@@ -412,9 +412,9 @@ def test_hll_domains_emit_no_null_items(spark, sf_dir):
         F.col("doc_id").isNull() | F.col("source").isNull() | F.col("text").isNull()
     ).count()
     assert nulls == 0
-    from mito_spark.operators.text import _tokens
+    from mito_spark.functions.strings import fields
 
-    toks = docs.select(_tokens(F.lower(F.col("text"))).alias("toks"))
+    toks = docs.select(fields(F.lower(F.col("text"))).alias("toks"))
     null_toks = toks.where(
         F.exists("toks", lambda t: t.isNull()) | F.col("toks").isNull()
     ).count()

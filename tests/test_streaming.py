@@ -702,7 +702,7 @@ def test_streaming_hll_distinct_matches_batch_any_order(spark, sf_dir, tmp_path)
 
     from mito_spark.engine import load_table
     from mito_spark.operators.sketches import hll_distinct_by
-    from mito_spark.operators.text import _tokens
+    from mito_spark.functions.strings import fields
     from mito_spark.streaming.stateful import streaming_hll_distinct
 
     docs = load_table(spark, sf_dir, "documents")
@@ -725,7 +725,7 @@ def test_streaming_hll_distinct_matches_batch_any_order(spark, sf_dir, tmp_path)
         .option("maxFilesPerTrigger", 1)
         .parquet(dest)
         .select(
-            "source", F.explode(_tokens(F.lower(F.col("text")))).alias("item")
+            "source", F.explode(fields(F.lower(F.col("text")))).alias("item")
         )
     )
     latest: dict = {}
@@ -742,7 +742,7 @@ def test_streaming_hll_distinct_matches_batch_any_order(spark, sf_dir, tmp_path)
     sink.close()
 
     batch_items = docs.select(
-        "source", F.explode(_tokens(F.lower(F.col("text")))).alias("item")
+        "source", F.explode(fields(F.lower(F.col("text")))).alias("item")
     )
     want = {
         r.source: (r.n_hll, r.v_empty, r.branch)
@@ -1055,7 +1055,7 @@ def test_streaming_burstiness_matches_batch_any_order(spark, sf_dir, tmp_path):
     import time
 
     from mito_spark.engine import load_table
-    from mito_spark.operators.text import _tokens
+    from mito_spark.functions.strings import fields
     from mito_spark.operators.quality import term_burstiness_report
     from mito_spark.streaming.stateful import (
         burstiness_stream_rows,
@@ -1066,7 +1066,7 @@ def test_streaming_burstiness_matches_batch_any_order(spark, sf_dir, tmp_path):
     want = {
         r.w: (r.df, r.cf, r.s2)
         for r in docs.select(
-            "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("w")
+            "doc_id", F.explode(fields(F.lower(F.col("text")))).alias("w")
         )
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("tf"))
