@@ -61,7 +61,7 @@ QC_BUCKETS = 4096
 QC_MIN_WORDS = 40
 
 
-def _split_bucket(doc_id: Column, salt: str) -> Column:
+def split_bucket(doc_id: Column, salt: str) -> Column:
     """Portable 0..9 bucket from md5 — train iff bucket < NB_TRAIN_BUCKETS."""
     return (
         F.conv(
@@ -120,7 +120,7 @@ def _langid_model(spark: SparkSession, sf_dir: str):
             "doc_id",
             "lang",
             (
-                _split_bucket(F.col("doc_id"), "nbsplit:v1:") < NB_TRAIN_BUCKETS
+                split_bucket(F.col("doc_id"), "nbsplit:v1:") < NB_TRAIN_BUCKETS
             ).alias("is_train"),
             F.substring(F.lower(F.col("text")), 1, NB_PREFIX).alias("p"),
         )
@@ -453,7 +453,7 @@ def _qc_scores(spark: SparkSession, sf_dir: str):
     staged = docs.select(
         "doc_id",
         "source",
-        (_split_bucket(F.col("doc_id"), "qcsplit:v1:") < NB_TRAIN_BUCKETS).alias(
+        (split_bucket(F.col("doc_id"), "qcsplit:v1:") < NB_TRAIN_BUCKETS).alias(
             "is_train"
         ),
         F.when(F.size(toks) >= QC_MIN_WORDS, F.lit("pass"))

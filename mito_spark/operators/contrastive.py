@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table, spread
-from mito_spark.operators.similarity import _cosine
+from mito_spark.operators.similarity import cosine
 
 N_PROBES = 16
 N_NEG = 3
@@ -51,7 +51,7 @@ def contrastive_pairs(
             "query_id",
             (F.col("label") == F.col("qlabel")).alias("is_pos"),
             F.col("vec_id").alias("neighbor_id"),
-            _cosine(F.col("q"), F.col("v")).alias("cos"),
+            cosine(F.col("q"), F.col("v")).alias("cos"),
         )
         .where(F.col("cos").isNotNull())
     )

@@ -47,7 +47,7 @@ PROBE_MOD = 19
 CONTAM_NUM, CONTAM_DEN = 4, 5
 
 
-def _shingle_hashes(toks: Column, n: int) -> Column:
+def shingle_hashes(toks: Column, n: int) -> Column:
     """Distinct md5 hashes of every n-token shingle — md5 is a Catalyst
     built-in, so shingling is JVM-side and engine-portable."""
     # n O(1) element_at lookups per gram instead of an n-element slice
@@ -101,7 +101,7 @@ def decontaminate(
     per_doc = (
         docs.select("doc_id", toks.alias("toks"))
         .where(F.size("toks") >= n)
-        .select("doc_id", _shingle_hashes(F.col("toks"), n).alias("ghs"))
+        .select("doc_id", shingle_hashes(F.col("toks"), n).alias("ghs"))
     )
     probe = (
         per_doc.where(F.col("doc_id") % probe_mod == 0)
@@ -155,7 +155,7 @@ FROM tot LEFT JOIN hits ON tot.doc_id = hits.doc_id
 """
 
 
-def _max_run_len(arr: Column) -> Column:
+def max_run_len(arr: Column) -> Column:
     """Count of the most frequent element = longest equal-run in the
     sorted array; computed as an aggregate fold, per-row, no shuffle."""
     srt = F.array_sort(arr)
@@ -176,7 +176,7 @@ def _max_run_len(arr: Column) -> Column:
     return F.aggregate(srt, init, step, lambda acc: acc.getField("best"))
 
 
-def _ngrams(toks: Column, n: int) -> Column:
+def ngrams(toks: Column, n: int) -> Column:
     """Space-joined n-grams; empty array when the doc is too short.
     The n_tok >= n guard matters: sequence(1, k) with k < 1 would
     produce a DESCENDING sequence, not an empty one."""
@@ -223,8 +223,8 @@ def repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.array_distinct(tk)).alias("n_dist"),
         F.size(ln).alias("n_lines"),
         F.size(F.array_distinct(ln)).alias("n_dlines"),
-        _max_run_len(_ngrams(tk, 2)).alias("run2"),
-        _max_run_len(_ngrams(tk, 3)).alias("run3"),
+        max_run_len(ngrams(tk, 2)).alias("run2"),
+        max_run_len(ngrams(tk, 3)).alias("run3"),
     )
     n_tok, n_dist = F.col("n_tok"), F.col("n_dist")
     n_lines, n_dlines = F.col("n_lines"), F.col("n_dlines")
@@ -328,9 +328,9 @@ def _bloom_size(n_probe: int, target_fp: float = BLOOM_TARGET_FP) -> tuple[int, 
 
 
 def _bloom_pos(gh: Column, k: int, m: int = BLOOM_M) -> Column:
-    from mito_spark.operators.dedup import _hash60
+    from mito_spark.operators.dedup import hash60
 
-    return _hash60(gh, F.lit(f"bl{k}")) % m
+    return hash60(gh, F.lit(f"bl{k}")) % m
 
 
 def bloom_decontaminate_report(
@@ -399,7 +399,7 @@ def bloom_decontaminate_report(
     per_doc = (
         docs.select("doc_id", toks.alias("toks"))
         .where(F.size("toks") >= n)
-        .select("doc_id", _shingle_hashes(F.col("toks"), n).alias("ghs"))
+        .select("doc_id", shingle_hashes(F.col("toks"), n).alias("ghs"))
     )
     pairs = per_doc.select(
         "doc_id", F.explode_outer("ghs").alias("gh")
@@ -494,10 +494,10 @@ def bloom_decontaminate_report(
     # every type on both engines)
     n_pairs = pairs.count()
     thr = min((BLOOM_SAMPLE_TARGET << 60) // max(n_pairs, 1), 1 << 62)
-    from mito_spark.operators.dedup import _hash60
+    from mito_spark.operators.dedup import hash60
 
     stypes = (
-        pairs.where(_hash60(F.col("gh"), F.lit("bls")) < F.lit(thr))
+        pairs.where(hash60(F.col("gh"), F.lit("bls")) < F.lit(thr))
         .select("gh")
         .distinct()
     )
@@ -683,7 +683,7 @@ def decontam_ngram_ladder(
             F.array(
                 F.struct(
                     F.lit(n).alias("n"),
-                    _shingle_hashes(F.col("toks"), n).alias("ghs"),
+                    shingle_hashes(F.col("toks"), n).alias("ghs"),
                 )
             ),
         ).otherwise(F.array().cast("array<struct<n:int,ghs:array<string>>>"))

@@ -82,7 +82,7 @@ SIMHASH_MAX_DIST = 3
 SIMHASH_CHUNKS = SIMHASH_MAX_DIST + 1  # pigeonhole guarantee
 
 
-def _hash60(s: Column, seed: Column | None = None) -> Column:
+def hash60(s: Column, seed: Column | None = None) -> Column:
     """Engine-portable 60-bit hash: first 15 hex chars of md5, as
     bigint. seed is mixed in as a string prefix."""
     keyed = s if seed is None else F.concat(seed.cast("string"), F.lit(":"), s)
@@ -111,7 +111,7 @@ FROM documents GROUP BY md5(text)
 def _shingles_from(toks: Column, n: int) -> Column:
     """Shingles from an ALREADY-STAGED token column. Callers on the
     hot path must stage tokenization as a real column first
-    (``_staged_shingles``): HOFs are interpreted (no whole-stage
+    (``staged_shingles``): HOFs are interpreted (no whole-stage
     codegen, no CSE), so a shingle transform embedding the tokenizer
     EXPRESSION re-runs the regexp split per array element — O(T²) per
     doc (measured: the sf0.1 shingle pass dropped 7.7s → ~1s when
@@ -143,11 +143,11 @@ def _shingles(col: Column, n: int) -> Column:
     """Distinct word n-gram shingles; n=1 → distinct token set
     (bag-of-words dedup — catches permuted/near-identical docs).
     Expression form for cold paths/tests; hot paths use
-    ``_staged_shingles`` (see ``_shingles_from``)."""
+    ``staged_shingles`` (see ``_shingles_from``)."""
     return _shingles_from(fields(F.lower(col)), n)
 
 
-def _staged_shingles(
+def staged_shingles(
     docs: DataFrame, n: int, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id_col, sh): tokenization staged as a real column in its own
@@ -229,7 +229,7 @@ def _salted_minhash(sh: Column, num_hashes: int) -> Column:
         # closure factory: the HOF lambda must take exactly ONE
         # parameter (a second — even a defaulted one — binds the
         # element index)
-        return lambda s: _hash60(s, lit)
+        return lambda s: hash60(s, lit)
 
     return F.array(
         *[F.array_min(F.transform(sh, salt(j))) for j in range(num_hashes)]
@@ -301,7 +301,7 @@ def minhash_lsh_dedup(
     """
     if shingles is None:
         docs = spread(load_table(spark, sf_dir, "documents"))
-        shingles = _staged_shingles(docs, shingle)
+        shingles = staged_shingles(docs, shingle)
     sigd = shingles.select(
         "doc_id", "sh", _salted_minhash(F.col("sh"), NUM_HASHES).alias("sig")
     ).localCheckpoint()  # signatures feed both sides of the self-join
@@ -396,7 +396,7 @@ def simhash_signature(col: Column, bits: int = SIMHASH_BITS) -> Column:
     Σ_tokens (2·bit_j(h(token)) − 1); signature packed into a bigint.
     Nested HOFs — per-row O(tokens×bits), JVM-side."""
     toks = fields(F.lower(col))
-    hashes = F.transform(toks, lambda t: _hash60(t))
+    hashes = F.transform(toks, lambda t: hash60(t))
     # 2^j lookup table as a literal array (shiftleft's bit-count arg
     # must be a Python int, not a Column, so we index instead of shift)
     pows = F.array(*[F.lit(1 << b).cast("bigint") for b in range(bits)])
@@ -517,7 +517,7 @@ def ngram_jaccard_verify(
     O(n²). This is the only form reachable at scale — the quadratic
     ``ngram_jaccard_pairs`` below exists solely so the oracle can
     verify the Jaccard arithmetic exhaustively at test SF."""
-    g = _staged_shingles(docs, n, id_col=id_col, text_col=text_col).select(
+    g = staged_shingles(docs, n, id_col=id_col, text_col=text_col).select(
         F.col(id_col).alias("doc_id"), "sh"
     )
     return _jaccard_verified(
@@ -552,7 +552,7 @@ def ngram_jaccard_pairs(
                 f"{n_docs} docs > cap {max_rows}. Block first (minhash_lsh_dedup / "
                 f"simhash) and re-rank with ngram_jaccard_verify, or pass max_rows=None."
             )
-    g = _staged_shingles(docs, n)
+    g = staged_shingles(docs, n)
     return (
         g.alias("a")
         .join(g.alias("b"), F.col("a.doc_id") < F.col("b.doc_id"))
@@ -636,7 +636,7 @@ def incremental_dedup_frames(
     exact verify → lowest-id winner; no new-vs-new and no
     canon-vs-canon comparison."""
     def shingled(frame: DataFrame, flag: bool) -> DataFrame:
-        return _staged_shingles(frame.select("doc_id", "text"), shingle).withColumn(
+        return staged_shingles(frame.select("doc_id", "text"), shingle).withColumn(
             "is_new", F.lit(flag)
         )
 
@@ -677,7 +677,7 @@ def incremental_dedup_frames(
     )
 
 
-def _incremental_chain_preds(
+def incremental_chain_preds(
     new_pred: str, old_pred: str, threshold: float = 0.5, shingle: int = 3
 ) -> str:
     """Generalized new-vs-canon splice of the shared MinHash chain:
@@ -713,7 +713,7 @@ def _incremental_chain_preds(
 
 
 def _incremental_sql(split_at: int = 400, threshold: float = 0.5, shingle: int = 3) -> str:
-    chain = _incremental_chain_preds(
+    chain = incremental_chain_preds(
         f"n.doc_id >= {split_at}", f"o.doc_id < {split_at}", threshold, shingle
     )
     return rf"""{chain}
@@ -765,10 +765,10 @@ def containment_pairs(
     Output: (id_small, id_big, containment, jaccard) for pairs whose
     max-direction containment ≥ threshold, id_small = the more-contained
     side."""
-    shd = _staged_shingles(docs, shingle).localCheckpoint()
+    shd = staged_shingles(docs, shingle).localCheckpoint()
     sampled = (
         shd.select("doc_id", F.explode("sh").alias("shingle"))
-        .where(_hash60(F.col("shingle")) % sample_mod == 0)
+        .where(hash60(F.col("shingle")) % sample_mod == 0)
     )
     # df cap: sh is distinct per doc, so count(*) per shingle = doc freq
     rare = (
@@ -942,7 +942,7 @@ def jaccard_prefix_join(
 
     if shingles is None:
         docs = spread(load_table(spark, sf_dir, "documents"))
-        shingles = _staged_shingles(docs, shingle).localCheckpoint()
+        shingles = staged_shingles(docs, shingle).localCheckpoint()
     # the caller's frame is already materialized (sibling tiers pass a
     # checkpointed stage) — re-checkpointing it here (the r12 shape)
     # paid a second corpus-sized materialization for nothing; the
@@ -957,7 +957,7 @@ def jaccard_prefix_join(
     # only merge two inverted-list buckets — extra candidates the
     # exact verify kills, never a lost pair. 8-byte join keys instead
     # of ~20-char strings cut the three index shuffles' width; the
-    # native xxhash64 replaces the r12 md5+hex-conv _hash60 (r13: the
+    # native xxhash64 replaces the r12 md5+hex-conv hash60 (r13: the
     # index needs consistency, not cryptographic salting — same
     # completeness argument, ~10x cheaper per shingle). The hashed
     # explode is deliberately NOT checkpointed: the df count and the
@@ -1069,7 +1069,7 @@ def split_leakage_check(
     from mito_spark.operators.sampling import hash_split
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    sigd = _staged_shingles(docs, shingle).select(
+    sigd = staged_shingles(docs, shingle).select(
         "doc_id", "sh", _salted_minhash(F.col("sh"), NUM_HASHES).alias("sig")
     ).localCheckpoint()
     # split is a pure hash of doc_id — computed as a COLUMN on the
@@ -1149,7 +1149,7 @@ def lsh_recall_report(
     dominant scan+tokenize cost).
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    shd = _staged_shingles(docs, shingle).localCheckpoint()
+    shd = staged_shingles(docs, shingle).localCheckpoint()
     exact = jaccard_prefix_join(
         spark, sf_dir, threshold=threshold, shingle=shingle, shingles=shd
     )
@@ -1224,7 +1224,7 @@ def minhash_estimate_report(
     don't trust the construction.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    shingles = _staged_shingles(docs, shingle)
+    shingles = staged_shingles(docs, shingle)
     sigd = shingles.select(
         "doc_id", "sh", _salted_minhash(F.col("sh"), NUM_HASHES).alias("sig")
     ).localCheckpoint()  # feeds both band-join sides AND the pair compare
@@ -1341,7 +1341,7 @@ def _oph_signature(sh: Column, num_hashes: int = NUM_HASHES) -> tuple[Column, Co
     (the HOF-staging rule: CollapseProject otherwise re-inlines the
     K-pass min per consumer)."""
     lit = F.lit("oph")
-    hs = F.transform(sh, lambda s: _hash60(s, lit))
+    hs = F.transform(sh, lambda s: hash60(s, lit))
     raw = F.transform(
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),
         lambda j: F.array_min(F.filter(hs, lambda h: F.pmod(h, F.lit(num_hashes)) == j)),
@@ -1409,7 +1409,7 @@ def minhash_oph_report(
     md5, so the whole measurement is hash-oracled.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    shingles = _staged_shingles(docs, shingle)
+    shingles = staged_shingles(docs, shingle)
     raw_e, t_e, sig_e = _oph_signature(F.col("sh"), NUM_HASHES)
     sigd = (
         shingles.select(
@@ -1970,7 +1970,7 @@ def ngram_novelty_report(
     0 says later batches re-crawl what earlier ones found (Lee et al.
     2022's motivation measured as a trend, not a single number).
 
-    Keys are the shared 60-bit md5 shingle hashes (``_hash60`` — 8 B
+    Keys are the shared 60-bit md5 shingle hashes (``hash60`` — 8 B
     shuffle keys; a collision merges two n-grams identically on both
     engines, the documented trade every hashed tier here makes).
     First-occurrence is min(doc_id) per hash — deterministic on any
@@ -1988,7 +1988,7 @@ def ngram_novelty_report(
     10-row output; nothing corpus-sized crosses the driver.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    sh = _staged_shingles(docs, shingle)
+    sh = staged_shingles(docs, shingle)
     # checkpoint the shingle ARRAYS before exploding: Generate
     # re-evaluates an interpreted-HOF generator input once per emitted
     # row (the winnow_dup_pairs lesson — ~52 shingles/doc meant ~52×
@@ -1997,7 +1997,7 @@ def ngram_novelty_report(
     ex = (
         sh.localCheckpoint()
         .select("doc_id", F.explode("sh").alias("s"))
-        .select("doc_id", _hash60(F.col("s")).alias("h"))
+        .select("doc_id", hash60(F.col("s")).alias("h"))
     )
     denom = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_ngrams"))
     new_counts = (
@@ -2130,7 +2130,7 @@ def simhash_estimate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _simhash_chunk_pairs(sigd)
     tc = (
         docs.select("doc_id", F.explode(fields(F.lower(F.col("text")))).alias("t"))
-        .select("doc_id", _hash60(F.col("t")).alias("h"))
+        .select("doc_id", hash60(F.col("t")).alias("h"))
         .groupBy("doc_id", "h")
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint()  # feeds the norm pass and both dot sides
@@ -2276,7 +2276,7 @@ def bbit_minhash_report(
     deterministic, so the whole measurement is hash-oracled.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    shingles = _staged_shingles(docs, shingle)
+    shingles = staged_shingles(docs, shingle)
     sigd = shingles.select(
         "doc_id", "sh", _salted_minhash(F.col("sh"), NUM_HASHES).alias("sig")
     ).localCheckpoint()  # one signature pass feeds band join + compare
@@ -2427,7 +2427,7 @@ def lsh_bucket_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mito_spark.engine import spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    sh = _staged_shingles(docs, 3)
+    sh = staged_shingles(docs, 3)
     sigd = sh.select(
         "doc_id", _salted_minhash(F.col("sh"), NUM_HASHES).alias("sig")
     ).localCheckpoint()
@@ -2642,7 +2642,7 @@ def lsh_curve_report(
     one 6dp try_divide; theory columns are literal products.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    shd = _staged_shingles(docs, shingle).localCheckpoint()
+    shd = staged_shingles(docs, shingle).localCheckpoint()
     truth = (
         jaccard_prefix_join(
             spark, sf_dir, threshold=threshold, shingle=shingle, shingles=shd
@@ -2866,7 +2866,7 @@ def dedup_weighted_jaccard(
     integer-exact ratio, 6dp.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    shd = _staged_shingles(docs, shingle).localCheckpoint()
+    shd = staged_shingles(docs, shingle).localCheckpoint()
     # banding candidates WITHOUT the set-Jaccard verify cut: reuse the
     # signature/banding stages directly
     sigd = shd.select(
@@ -3000,7 +3000,7 @@ def dedup_edit_distance(
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
     sigd = (
-        _staged_shingles(docs, shingle)
+        staged_shingles(docs, shingle)
         .select("doc_id", _salted_minhash(F.col("sh"), NUM_HASHES).alias("sig"))
         .localCheckpoint()  # feeds both sides of the band self-join
     )
@@ -3148,11 +3148,11 @@ def dedup_modality_agreement(
 def _modality_agreement_sql(
     threshold: float = 0.5, cos_threshold: float = 0.45, shingle: int = 3, dim: int = 64
 ) -> str:
-    from mito_spark.operators.similarity import _bucket_sql, _dot_sql
+    from mito_spark.operators.similarity import bucket_sql, dot_sql
 
     cos = (
-        f"{_dot_sql('x.v', 'y.v', dim)} / (sqrt({_dot_sql('x.v', 'x.v', dim)})"
-        f" * sqrt({_dot_sql('y.v', 'y.v', dim)}))"
+        f"{dot_sql('x.v', 'y.v', dim)} / (sqrt({dot_sql('x.v', 'x.v', dim)})"
+        f" * sqrt({dot_sql('y.v', 'y.v', dim)}))"
     )
     jac = (
         "CAST(len(list_intersect(ta.sh, tb.sh)) AS DOUBLE)"
@@ -3168,7 +3168,7 @@ def _modality_agreement_sql(
 ), ev AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), bv AS (
-  SELECT vec_id, v, {_bucket_sql('v', dim)} AS bucket FROM ev
+  SELECT vec_id, v, {bucket_sql('v', dim)} AS bucket FROM ev
 ), epairs AS MATERIALIZED (
   SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
   FROM bv x JOIN bv y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
@@ -3324,7 +3324,7 @@ def _cdc_chunks(docs: DataFrame, window: int = CDC_WINDOW, mod: int = CDC_MOD) -
         F.col("len") - (window - 1) >= 2,
         F.filter(
             F.sequence(F.lit(2), F.col("len") - (window - 1)),
-            lambda i: _hash60(_win_at(i)) % mod == 0,
+            lambda i: hash60(_win_at(i)) % mod == 0,
         ),
     ).otherwise(F.array().cast("array<int>"))
     spans = base.select(
@@ -3365,7 +3365,7 @@ def _cdc_chunks(docs: DataFrame, window: int = CDC_WINDOW, mod: int = CDC_MOD) -
 def _cdc_boundaries_py(text: str, window: int = CDC_WINDOW, mod: int = CDC_MOD) -> list[str]:
     """Row-local Python mirror of ``_cdc_chunks``'s boundary rule (for
     the streaming chunker): hashlib md5's first 15 hex chars as a
-    60-bit int — the exact ``_hash60`` construction — tested equal to
+    60-bit int — the exact ``hash60`` construction — tested equal to
     the JVM frame chunk-for-chunk."""
     import hashlib
 
@@ -3512,7 +3512,7 @@ def dedup_pair_explain(
     (shingles contain no commas: they are space-joined word n-grams).
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    shd = _staged_shingles(docs, shingle).localCheckpoint()
+    shd = staged_shingles(docs, shingle).localCheckpoint()
     pairs = (
         minhash_lsh_dedup(spark, sf_dir, threshold, shingle, shingles=shd)
         .orderBy(F.desc("jaccard"), F.asc("id_a"), F.asc("id_b"))

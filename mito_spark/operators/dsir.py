@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table
 from mito_spark.functions.strings import fields
-from mito_spark.operators.dedup import _hash60
+from mito_spark.operators.dedup import hash60
 
 N_BUCKETS = 512
 
@@ -52,7 +52,7 @@ def dsir_importance_weights(
         "doc_id",
         "lang",
         F.explode(fields(F.lower(F.col("text")))).alias("tok"),
-    ).withColumn("bucket", _hash60(F.col("tok")) % n_buckets)
+    ).withColumn("bucket", hash60(F.col("tok")) % n_buckets)
     raw_ct = terms.groupBy("bucket").agg(F.count(F.lit(1)).alias("cr"))
     tgt_ct = (
         terms.where(F.col("lang") == target_lang)
@@ -156,7 +156,7 @@ def dsir_resample(
     global top-m = TakeOrdered (never a full sort) of key-only rows."""
     w = dsir_importance_weights(spark, sf_dir, target_lang=target_lang, n_buckets=n_buckets)
     u = (
-        _hash60(F.concat(F.lit(seed + ":"), F.col("doc_id").cast("string"))) + 1
+        hash60(F.concat(F.lit(seed + ":"), F.col("doc_id").cast("string"))) + 1
     ).cast("double") / F.lit(float(_GUMBEL_DENOM))
     gumbel = -F.log(-F.log(u))
     return (

@@ -471,11 +471,11 @@ def _lp_ctes(rounds: int = 2, prefix: str = "") -> tuple[list[str], str]:
 
 
 def _lp_sql(rounds: int = 2, k: int = 5) -> str:
-    from mito_spark.operators.similarity import _knn_graph_sql
+    from mito_spark.operators.similarity import knn_graph_sql
 
     ctes, final = _lp_ctes(rounds)
     return (
-        ",\n".join([f"WITH knn AS ({_knn_graph_sql(k=k)})"] + ctes)
+        ",\n".join([f"WITH knn AS ({knn_graph_sql(k=k)})"] + ctes)
         + f"""
 SELECT vec_id, label AS true_label, vec_id % 4 = 0 AS is_seed,
        lab AS pred_label
@@ -659,11 +659,11 @@ def _pr_ctes(
 
 
 def _pagerank_sql(rounds: int = PR_ROUNDS, d: float = PR_DAMPING, k: int = 5) -> str:
-    from mito_spark.operators.similarity import _knn_graph_sql
+    from mito_spark.operators.similarity import knn_graph_sql
 
     ctes, final = _pr_ctes(rounds, d)
     return (
-        ",\n".join([f"WITH knn AS ({_knn_graph_sql(k=k)})"] + ctes)
+        ",\n".join([f"WITH knn AS ({knn_graph_sql(k=k)})"] + ctes)
         + f"\nSELECT vec_id, ROUND(rank, 6) AS pagerank FROM {final} ORDER BY vec_id\n"
     )
 
@@ -732,14 +732,14 @@ def _graph_report_sql(
     d: float = PR_DAMPING,
     k: int = 5,
 ) -> str:
-    from mito_spark.operators.similarity import _knn_graph_sql
+    from mito_spark.operators.similarity import knn_graph_sql
 
     lp_ctes, lp_final = _lp_ctes(lp_rounds, prefix="lp_")
     pr_ctes, pr_final = _pr_ctes(pr_rounds, d, prefix="pr_")
     indeg = "ind AS (SELECT neighbor_id AS vec_id, COUNT(*) AS in_degree FROM knn GROUP BY neighbor_id)"
     return (
         ",\n".join(
-            [f"WITH knn AS ({_knn_graph_sql(k=k)})"]
+            [f"WITH knn AS ({knn_graph_sql(k=k)})"]
             + lp_ctes
             + pr_ctes
             + [indeg]
@@ -890,9 +890,9 @@ def _clustering_select_cols(d: str = "d", p: str = "p") -> str:
 
 
 def _graph_clustering_sql(k: int = 5) -> str:
-    from mito_spark.operators.similarity import _knn_graph_sql
+    from mito_spark.operators.similarity import knn_graph_sql
 
-    ctes = ",\n".join([f"WITH knn AS ({_knn_graph_sql(k=k)})"] + _clustering_ctes())
+    ctes = ",\n".join([f"WITH knn AS ({knn_graph_sql(k=k)})"] + _clustering_ctes())
     return (
         ctes
         + f"""
@@ -1038,11 +1038,11 @@ def _kcore_ctes(
 def _kcore_sql(
     kcore: int = KCORE_K, rounds: int = KCORE_ROUNDS, k: int = 5
 ) -> str:
-    from mito_spark.operators.similarity import _knn_graph_sql
+    from mito_spark.operators.similarity import knn_graph_sql
 
     ctes, final = _kcore_ctes(kcore, rounds)
     return (
-        ",\n".join([f"WITH knn AS ({_knn_graph_sql(k=k)})"] + ctes)
+        ",\n".join([f"WITH knn AS ({knn_graph_sql(k=k)})"] + ctes)
         + f"""
 SELECT n.vec_id,
        a.vec_id IS NOT NULL AS in_kcore,
@@ -1238,10 +1238,10 @@ def graph_assortativity(
 
 
 def _assortativity_sql(k: int = 5) -> str:
-    from mito_spark.operators.similarity import _knn_graph_sql
+    from mito_spark.operators.similarity import knn_graph_sql
 
     return f"""
-WITH knn AS ({_knn_graph_sql(k=k)}),
+WITH knn AS ({knn_graph_sql(k=k)}),
 asym AS (
   SELECT DISTINCT u, v FROM (
     SELECT vec_id AS u, neighbor_id AS v FROM knn

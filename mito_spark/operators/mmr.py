@@ -20,7 +20,7 @@ fan-out, bounded by construction), the fold runs k−1 steps, and each
 step's argmax is an ``array_sort`` under exactly the old window's
 (mmr DESC, cand_id ASC) order. One shuffle (the groupBy(query_id) of
 m·|Q| rows) replaces ~8 jobs. Every float op is unchanged: rel and
-pairwise sims are the same ``_cosine`` fold, mmr the same
+pairwise sims are the same ``cosine`` fold, mmr the same
 λ·rel − (1−λ)·max-sim expression, so the selection is bit-identical
 and the DuckDB oracle re-derives it.
 """
@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table, spread
-from mito_spark.operators.similarity import _cosine, _dot, _norm
+from mito_spark.operators.similarity import cosine, dot, norm
 from mito_spark.operators.topk import per_key_topk
 
 
@@ -49,7 +49,7 @@ def mmr_rerank(
     emb = (
         spread(load_table(spark, sf_dir, "embeddings"))
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("nv", _norm(F.col("v")))
+        .withColumn("nv", norm(F.col("v")))
         # zero/null-norm vectors can never yield a non-null cosine
         # (old form: rel IS NOT NULL dropped the same rows)
         .where(F.col("nv").isNotNull() & (F.col("nv") != 0.0))
@@ -66,7 +66,7 @@ def mmr_rerank(
             "query_id",
             F.col("vec_id").alias("cand_id"),
             F.try_divide(
-                _dot(F.col("q"), F.col("v")), F.col("nq") * F.col("nv")
+                dot(F.col("q"), F.col("v")), F.col("nq") * F.col("nv")
             ).alias("rel"),
         )
     )
@@ -120,7 +120,7 @@ def mmr_rerank(
                             F.lit(lam) * c["rel"]
                             - F.lit(1 - lam)
                             * F.array_max(
-                                F.transform(acc, lambda s: _cosine(c["v"], s["v"]))
+                                F.transform(acc, lambda s: cosine(c["v"], s["v"]))
                             )
                         )
                     ).alias("negkey"),
@@ -129,7 +129,7 @@ def mmr_rerank(
                         F.lit(lam) * c["rel"]
                         - F.lit(1 - lam)
                         * F.array_max(
-                            F.transform(acc, lambda s: _cosine(c["v"], s["v"]))
+                            F.transform(acc, lambda s: cosine(c["v"], s["v"]))
                         )
                     ).alias("score"),
                     c["v"].alias("v"),

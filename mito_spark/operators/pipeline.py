@@ -24,11 +24,11 @@ from mito_spark.operators.decontam import (
     CONTAM_NUM,
     NGRAM_N,
     PROBE_MOD,
-    _max_run_len,
-    _ngrams,
-    _shingle_hashes,
+    max_run_len,
+    ngrams,
+    shingle_hashes,
 )
-from mito_spark.operators.text import _LANG_MARKERS, _STOPWORDS
+from mito_spark.operators.text import LANG_MARKERS, STOPWORDS
 
 
 def training_corpus(
@@ -67,15 +67,15 @@ def training_corpus(
     # each score ~10x per row, and the pushed-down language/quality
     # filter re-evaluates the lot again (9s -> <1s at sf0.1 for this
     # stage alone).
-    langs = sorted(_LANG_MARKERS)
+    langs = sorted(LANG_MARKERS)
 
     def _score(lg: str):
         # closure, NOT a default arg: a second lambda param would be
         # silently bound to the array index by the HOF machinery
-        markers = F.array(*[F.lit(m) for m in _LANG_MARKERS[lg]])
+        markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lg]])
         return F.size(F.filter(toks, lambda t: F.array_contains(markers, t)))
 
-    sw = F.array(*[F.lit(w) for w in _STOPWORDS])
+    sw = F.array(*[F.lit(w) for w in STOPWORDS])
     # The _fp wrapper is a value-identity pushdown barrier:
     # spark_partition_id() is always >= 0, but it is CLASSED
     # nondeterministic, and a nondeterministic project list stops
@@ -96,8 +96,8 @@ def training_corpus(
             F.spark_partition_id() >= 0,
             F.md5(F.array_join(F.array_sort(F.array_distinct(toks)), " ")),
         ).alias("_fp"),
-        _max_run_len(_ngrams(toks, 2)).alias("_run2"),
-        _max_run_len(_ngrams(toks, 3)).alias("_run3"),
+        max_run_len(ngrams(toks, 2)).alias("_run2"),
+        max_run_len(ngrams(toks, 3)).alias("_run3"),
         F.size("lines").alias("_n_lines"),
         F.size(F.array_distinct("lines")).alias("_n_dlines"),
     )
@@ -151,13 +151,13 @@ def training_corpus(
     # since the barrier would block the automatic one).
     probe = (
         staged.where(F.col("doc_id") % PROBE_MOD == 0)
-        .select(_shingle_hashes(toks, NGRAM_N).alias("_ghs"))
+        .select(shingle_hashes(toks, NGRAM_N).alias("_ghs"))
         .select(F.explode_outer("_ghs").alias("_gh"))
         .distinct()
     )
     per_doc = staged.select(
         "doc_id",
-        F.when(F.spark_partition_id() >= 0, _shingle_hashes(toks, NGRAM_N)).alias("_ghs"),
+        F.when(F.spark_partition_id() >= 0, shingle_hashes(toks, NGRAM_N)).alias("_ghs"),
     )
     contaminated = (
         per_doc.select("doc_id", F.size("_ghs").alias("_n"), F.explode_outer("_ghs").alias("_gh"))
@@ -196,10 +196,10 @@ def training_corpus(
 def _pipeline_sql(lang: str = "en", min_quality: float = 0.75,
                   chunk_tokens: int = 32, overlap: int = 8) -> str:
     stride = chunk_tokens - overlap
-    langs = sorted(_LANG_MARKERS)
+    langs = sorted(LANG_MARKERS)
     score_exprs = ",\n         ".join(
         "len(list_filter(toks, t -> list_contains(["
-        + ", ".join(f"'{m}'" for m in _LANG_MARKERS[lg])
+        + ", ".join(f"'{m}'" for m in LANG_MARKERS[lg])
         + f"], t))) AS score_{lg}"
         for lg in langs
     )
@@ -208,7 +208,7 @@ def _pipeline_sql(lang: str = "en", min_quality: float = 0.75,
     for lg in langs:
         case += f"WHEN score_{lg} = {greatest} THEN '{lg}' "
     case += "END"
-    sw = ", ".join(f"'{w}'" for w in _STOPWORDS)
+    sw = ", ".join(f"'{w}'" for w in STOPWORDS)
     return rf"""
 WITH tok AS (
   SELECT doc_id, text,

@@ -38,11 +38,11 @@ from pyspark.sql import functions as F
 from mito_spark.engine import load_table, spread
 from mito_spark.operators.topk import per_key_topk
 from mito_spark.operators.similarity import (
-    _IVF_TRAIN_HEX,
-    _cosine,
-    _ivf_train_sample,
-    _kmeans_centroids,
-    _norm,
+    IVF_TRAIN_HEX,
+    cosine,
+    ivf_train_sample,
+    kmeans_centroids,
+    norm,
 )
 
 PQ_M = 4  # subspaces (64-dim gate embeddings → 16-dim slices)
@@ -63,16 +63,16 @@ def unit_norm_expr(col: Column) -> Column:
     Normalizing before codebook training AND coding (the standard
     PQ-for-cosine practice) makes ADC approximate cosine itself.
     Zero-norm vectors pass through unchanged (their cosine is NULL
-    downstream either way). Same arithmetic shape as ``_cosine`` so
+    downstream either way). Same arithmetic shape as ``cosine`` so
     the DuckDB twin reproduces every double bit-for-bit."""
-    nrm = _norm(col)
+    nrm = norm(col)
     return F.when(nrm > 0, F.transform(col, lambda x: x / nrm)).otherwise(col)
 
 
 def _nearest_code_expr(centroids: list[list[float]], col: Column) -> Column:
     """argmin code id over codeword literals for an arbitrary slice
     column — the slice-parameterized form of similarity's
-    ``_nearest_cell_expr`` (same squared-L2 + id tie-break, so
+    ``nearest_cell_expr`` (same squared-L2 + id tie-break, so
     assignment agrees with the oracle's ROW_NUMBER pick)."""
     dists = [
         F.aggregate(
@@ -105,13 +105,13 @@ def train_pq_codebooks(
     sub = dim // m
     # codebooks train on UNIT vectors (PQ-for-cosine, ADVICE r7 #3)
     train = (
-        _ivf_train_sample(emb)
+        ivf_train_sample(emb)
         .select("vec_id", unit_norm_expr(F.col("v")).alias("v"))
         .localCheckpoint()
     )
 
     def fit(s: int) -> list[list[float]]:
-        return _kmeans_centroids(
+        return kmeans_centroids(
             train.select("vec_id", F.slice("v", s * sub + 1, sub).alias("v")),
             k_sub,
             iters=PQ_ITERS,
@@ -305,7 +305,7 @@ def ann_pq_topk(
         coded.select(F.col("vec_id").alias("neighbor_id"), "v")
         .join(F.broadcast(survivors), "neighbor_id")
         .join(F.broadcast(probe_df.select("query_id", "q")), "query_id")
-        .select("query_id", "neighbor_id", _cosine(F.col("q"), F.col("v")).alias("cos"))
+        .select("query_id", "neighbor_id", cosine(F.col("q"), F.col("v")).alias("cos"))
         .where(F.col("cos").isNotNull())
     )
     w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -375,11 +375,11 @@ def _pq_recall_sql(n_queries: int = 10, k: int = 10) -> str:
     """Composed oracle: the full PQ twin and the brute-force twin as
     CTEs, left-joined per (query, neighbor) — CAST the hit SUM to
     BIGINT (DuckDB SUM(int) is HUGEINT, which pandas floats)."""
-    from mito_spark.operators.similarity import _cosine_sql
+    from mito_spark.operators.similarity import cosine_sql
 
     return f"""
 WITH pq_hits AS ({_pq_sql(n_queries, k)}),
-exact_hits AS ({_cosine_sql(n_queries, k)})
+exact_hits AS ({cosine_sql(n_queries, k)})
 SELECT e.query_id,
        CAST(COUNT(*) AS BIGINT) AS n_exact,
        CAST(COALESCE(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 END), 0) AS BIGINT) AS n_hit,
@@ -403,10 +403,10 @@ def _pq_sql(
 ) -> str:
     """Composed oracle: m prefixed order-pinned k-means chains over
     vector slices (same seed rule / Lloyd structure as similarity's
-    _kmeans_tagged_sql, slice-indexed), per-vector code assignment,
+    kmeans_tagged_sql, slice-indexed), per-vector code assignment,
     per-query ADC lookup tables, the fixed-order ADC sum, and the
     exact-cosine re-rank — PQ re-derived from scratch on DuckDB."""
-    hexes = ", ".join(f"'{h}'" for h in _IVF_TRAIN_HEX)
+    hexes = ", ".join(f"'{h}'" for h in IVF_TRAIN_HEX)
     header = f"""
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -414,8 +414,8 @@ WITH e AS (
   SELECT vec_id, v FROM e
   WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) IN ({hexes})
 )"""
-    adc = _adc_sql(m)
-    lut_joins = _lut_joins_sql(m, "q", "g")
+    adc = adc_sql(m)
+    lut_joins = lut_joins_sql(m, "q", "g")
     cos = (
         f"list_sum(list_transform(range(1, {dim + 1}), i -> q.q[i] * c2.v[i]))"
         f" / (sqrt(list_sum(list_transform(range(1, {dim + 1}), i -> q.q[i]*q.q[i])))"
@@ -447,10 +447,10 @@ FROM (
   FROM rerank
 ) WHERE rank <= {k}
 """
-    return header + _pq_subspace_ctes(m, k_sub, iters, dim, n_queries) + tail
+    return header + pq_subspace_ctes(m, k_sub, iters, dim, n_queries) + tail
 
 
-def _adc_sql(m: int) -> str:
+def adc_sql(m: int) -> str:
     """The fixed left-associated ADC addition chain over lut aliases —
     mirrors adc_expr's Column chain exactly."""
     adc = "l0.d"
@@ -459,7 +459,7 @@ def _adc_sql(m: int) -> str:
     return adc
 
 
-def _lut_joins_sql(m: int, qid_alias: str, code_alias: str) -> str:
+def lut_joins_sql(m: int, qid_alias: str, code_alias: str) -> str:
     """The m lookup-table joins of the ADC candidate stage; the
     query-id source differs between the one-shot twin (q) and the
     IVFADC twin (the probe CTE)."""
@@ -469,7 +469,7 @@ def _lut_joins_sql(m: int, qid_alias: str, code_alias: str) -> str:
     )
 
 
-def _pq_subspace_ctes(
+def pq_subspace_ctes(
     m: int = PQ_M,
     k_sub: int = PQ_KSUB,
     iters: int = PQ_ITERS,
@@ -478,7 +478,7 @@ def _pq_subspace_ctes(
 ) -> str:
     """The m per-subspace codebook chains + code assignment + per-query
     lookup tables, as a CTE-list fragment appended after CTEs ``e`` and
-    ``train`` (either the one-shot header's or _kmeans_tagged_sql's —
+    ``train`` (either the one-shot header's or kmeans_tagged_sql's —
     identical definitions). Ends with the ``codes`` CTE (vec_id,
     c0..c{m-1}) and ``lut{s}`` CTEs; shared by the one-shot PQ twin
     and the persisted IVFADC twin.

@@ -603,8 +603,8 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly-rounded divides off exact operands.
 
     Scale shape: ONE corpus tokenize+count shuffle builds the vocab
-    frame; everything after is vocab-bounded (the `_bpe_learn_bytes`
-    working-set argument). floor() slot allocation under-fills the
+    frame; everything after is vocab-bounded (the word-TYPE table
+    working-set argument of `text._word_types`). floor() slot allocation under-fills the
     table by < |vocab| slots — the standard remainder the original
     table build also leaves; a trainer tops up from the head or
     ignores it (documented convention, deterministic on both

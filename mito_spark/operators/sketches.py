@@ -540,9 +540,9 @@ _E_LIT = 2.718281828459045
 def _cms_hash(g: Column, j: int) -> Column:
     """Row-j bucket: 60-bit salted md5 (engine-portable, same scheme as
     the dedup signatures) reduced mod CMS_W."""
-    from mito_spark.operators.dedup import _hash60
+    from mito_spark.operators.dedup import hash60
 
-    return _hash60(g, F.lit(f"cms{j}")) % CMS_W
+    return hash60(g, F.lit(f"cms{j}")) % CMS_W
 
 
 def cms_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -625,10 +625,10 @@ def cms_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2^60 keeps every gram on BOTH engines (hashes are < 2^60), so
     # the clamp is semantics-free.
     thr = min((CMS_EVAL_TARGET << 60) // n_tokens, 1 << 62)
-    from mito_spark.operators.dedup import _hash60
+    from mito_spark.operators.dedup import hash60
 
     ev = (
-        grams.where(_hash60(F.col("g"), F.lit("cmss")) < F.lit(thr))
+        grams.where(hash60(F.col("g"), F.lit("cmss")) < F.lit(thr))
         .groupBy("g")
         .agg(F.count(F.lit(1)).alias("exact"))
     )
@@ -822,7 +822,7 @@ def hll_calibration_report(
     4-row exact-vs-estimate join.
     """
     from mito_spark.engine import spread
-    from mito_spark.operators.dedup import _hash60
+    from mito_spark.operators.dedup import hash60
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = fields(F.lower(F.col("text")))
@@ -880,7 +880,7 @@ def hll_calibration_report(
     yard_rate = _hll_yard_rate(n_items, yardstick_max)
     if yard_rate > 1:
         items = items.where(
-            F.pmod(_hash60(F.col("item"), F.lit("hllyard")), F.lit(yard_rate)) == 0
+            F.pmod(hash60(F.col("item"), F.lit("hllyard")), F.lit(yard_rate)) == 0
         )
     # ONE distinct pass feeds BOTH legs (r12 optimization round): the
     # exact leg's countDistinct already planned as a groupBy(domain,
@@ -909,7 +909,7 @@ def hll_calibration_report(
     )
     exact = dist.groupBy("domain").agg(F.count(F.lit(1)).alias("n_exact"))
 
-    v = _hash60(F.col("item"), F.lit("hll"))
+    v = hash60(F.col("item"), F.lit("hll"))
     w = F.shiftright(v, HLL_P)
     rho = F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
         F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
@@ -1030,9 +1030,9 @@ def hll_distinct_by(df: DataFrame, key_col: str, item_col: str) -> DataFrame:
     maintains exactly that summary live and is pytest-pinned equal
     under ANY arrival order (register merge = MAX, associative and
     commutative)."""
-    from mito_spark.operators.dedup import _hash60
+    from mito_spark.operators.dedup import hash60
 
-    v = _hash60(F.col(item_col), F.lit("hll"))
+    v = hash60(F.col(item_col), F.lit("hll"))
     w = F.shiftright(v, HLL_P)
     rho = F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
         F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
@@ -1123,7 +1123,7 @@ def quantile_sketch_calibration(
     """
     from mito_spark.engine import load_table
 
-    from mito_spark.operators.dedup import _hash60
+    from mito_spark.operators.dedup import hash60
 
     ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     # linear count sizes the yardstick subdomain (column-pruned scan)
@@ -1132,7 +1132,7 @@ def quantile_sketch_calibration(
     if yard_rate > 1:
         ev = ev.where(
             F.pmod(
-                _hash60(F.col("event_id").cast("string"), F.lit("qsyard")),
+                hash60(F.col("event_id").cast("string"), F.lit("qsyard")),
                 F.lit(yard_rate),
             )
             == 0
@@ -1242,7 +1242,7 @@ QUANTILE_SKETCH_SQL = _qs_sql()
 # --- KMV (k-minimum-values) cross-source overlap -------------------------
 
 KMV_K = 128  # sketch size per source (bottom-k of the 60-bit hash space)
-_KMV_SPACE = float(1 << 60)  # hash range: _hash60 is uniform on [0, 2^60)
+_KMV_SPACE = float(1 << 60)  # hash range: hash60 is uniform on [0, 2^60)
 
 
 def kmv_overlap_report(
@@ -1280,14 +1280,14 @@ def kmv_overlap_report(
     is the one distinct.
     """
     from mito_spark.engine import spread
-    from mito_spark.operators.dedup import _hash60, _staged_shingles
+    from mito_spark.operators.dedup import hash60, staged_shingles
     from mito_spark.operators.topk import per_key_topk
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     items = (
-        _staged_shingles(docs, shingle, id_col="source")
+        staged_shingles(docs, shingle, id_col="source")
         .select("source", F.explode("sh").alias("s"))
-        .select("source", _hash60(F.col("s"), F.lit("kmv")).alias("h"))
+        .select("source", hash60(F.col("s"), F.lit("kmv")).alias("h"))
         .distinct()
         .localCheckpoint()  # feeds sketches, memberships, and the yardstick
     )

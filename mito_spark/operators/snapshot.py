@@ -170,7 +170,7 @@ def ingest_delta_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     canon×canon), plus one scan-level word count and a
     |sources|-bounded conditional rollup. The oracle splices the SAME
     MinHash chain with the md5-bucket membership predicates
-    (``dedup._incremental_chain_preds``), so the composition — not
+    (``dedup.incremental_chain_preds``), so the composition — not
     just the pieces — is hash-proven.
     """
     from mito_spark.operators.dedup import incremental_dedup_frames
@@ -214,12 +214,12 @@ def ingest_delta_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ingest_delta_sql() -> str:
-    from mito_spark.operators.dedup import _incremental_chain_preds
+    from mito_spark.operators.dedup import incremental_chain_preds
 
     bkt = (
         "CAST('0x' || substr(md5('snap:v1:' || CAST({a}.doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100"
     )
-    chain = _incremental_chain_preds(
+    chain = incremental_chain_preds(
         f"{bkt.format(a='n')} >= {SNAP_EDIT_FROM}",
         f"{bkt.format(a='o')} >= {SNAP_REMOVED_LT} AND {bkt.format(a='o')} < {SNAP_EDIT_FROM}",
     )

@@ -10,7 +10,9 @@ design requirement for 100 TB corpus preprocessing.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from collections.abc import Callable, Iterator
+
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table, spread
@@ -48,7 +50,7 @@ FROM documents
 # Tiny per-language marker vocabularies for the n-gram/stopword
 # language-ID heuristic. Real deployments would swap in fastText-style
 # models via mapInPandas; the heuristic keeps the hot path JVM-only.
-_LANG_MARKERS: dict[str, list[str]] = {
+LANG_MARKERS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "in"],
     "de": ["der", "und", "die", "nicht", "das"],
     "fr": ["le", "et", "les", "des", "une"],
@@ -58,7 +60,7 @@ _LANG_MARKERS: dict[str, list[str]] = {
 
 
 def _lang_score(toks: Column, lang: str) -> Column:
-    markers = F.array(*[F.lit(m) for m in _LANG_MARKERS[lang]])
+    markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
     return F.size(F.filter(toks, lambda t: F.array_contains(markers, t)))
 
 
@@ -75,11 +77,11 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.select(
         "doc_id",
         "lang",
-        *[_lang_score(toks, lang).alias(f"score_{lang}") for lang in sorted(_LANG_MARKERS)],
+        *[_lang_score(toks, lang).alias(f"score_{lang}") for lang in sorted(LANG_MARKERS)],
     )
     # argmax via array_max over (score, negated-ordinal) structs: the
     # alphabetically-first language wins ties.
-    langs = sorted(_LANG_MARKERS)
+    langs = sorted(LANG_MARKERS)
     pairs = F.array(
         *[
             F.struct(F.col(f"score_{lang}").alias("s"), F.lit(-i).alias("ord"))
@@ -94,10 +96,10 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _langid_sql() -> str:
-    langs = sorted(_LANG_MARKERS)
+    langs = sorted(LANG_MARKERS)
     score_exprs = ",\n       ".join(
         "len(list_filter(toks, t -> list_contains(["
-        + ", ".join(f"'{m}'" for m in _LANG_MARKERS[lang])
+        + ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
         + f"], t))) AS score_{lang}"
         for lang in langs
     )
@@ -121,7 +123,7 @@ SELECT doc_id, lang, {case} AS predicted_lang FROM scored
 
 LANG_ID_SQL = _langid_sql()
 
-_STOPWORDS = sorted({w for ms in _LANG_MARKERS.values() for w in ms})
+STOPWORDS = sorted({w for ms in LANG_MARKERS.values() for w in ms})
 
 
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,7 +137,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = fields(F.lower(F.col("text")))
     n_tok = F.size(toks)
-    sw = F.array(*[F.lit(w) for w in _STOPWORDS])
+    sw = F.array(*[F.lit(w) for w in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
     n_chars = F.length("text")
@@ -158,7 +160,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quality_sql() -> str:
-    sw = ", ".join(f"'{w}'" for w in _STOPWORDS)
+    sw = ", ".join(f"'{w}'" for w in STOPWORDS)
     return rf"""
 WITH t AS (
   SELECT doc_id, text,
@@ -598,6 +600,37 @@ WINNOW_PAIRS_SQL = _winnow_pairs_sql()
 # --- Bigram LM surprisal + BPE merge candidates (tokenizer tier) -----
 
 
+def _adjacent_pairs() -> Column:
+    """The (a, b) struct of every adjacent pair of the ``toks`` array
+    column; empty below two tokens (``F.sequence(1, 0)`` counts DOWN,
+    so the size guard is load-bearing)."""
+    return F.when(
+        F.size("toks") >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size("toks") - 1),
+            lambda i: F.struct(
+                F.element_at(F.col("toks"), i).alias("a"),
+                F.element_at(F.col("toks"), i + 1).alias("b"),
+            ),
+        ),
+    ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
+
+
+def _word_types(spark: SparkSession, sf_dir: str, max_len: int | None = None) -> DataFrame:
+    """Word-TYPE table (w, wc): one corpus tokenize pass grouped by
+    word (the reference lib/strings.go tokenize-then-aggregate shape).
+    The subword trainers' working set — every later round shuffles
+    |word types| rows, never the corpus. ``max_len`` drops longer
+    words, as the oracle's ``HAVING length(w) <= ...`` does."""
+    words = (
+        spread(load_table(spark, sf_dir, "documents"))
+        .select(F.explode(fields(F.lower(F.col("text")))).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("wc"))
+    )
+    return words if max_len is None else words.where(F.length("w") <= max_len)
+
+
 def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean BIGRAM surprisal, −mean_i ln p̂(tᵢ | tᵢ₋₁),
     under an add-1-smoothed bigram model fit on the corpus itself —
@@ -634,26 +667,14 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     reported with n_bigrams=0 and NULL surprisal (absent evidence is
     not zero surprisal).
     """
-    from mito_spark.engine import spread
-
     docs = spread(load_table(spark, sf_dir, "documents"))
     toked = docs.select("doc_id", fields(F.lower(F.col("text"))).alias("toks"))
-    pairs_col = F.when(
-        F.size("toks") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("toks") - 1),
-            lambda i: F.struct(
-                F.element_at(F.col("toks"), i).alias("a"),
-                F.element_at(F.col("toks"), i + 1).alias("b"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
     # ONE checkpoint carrying BOTH columns: the tokenize pass
     # materializes once and feeds the pair explode (Generate rule:
     # checkpoint before exploding an interpreted-HOF product) AND the
     # vocab aggregate — two checkpoints here cost a second corpus
     # materialization for no reuse (A/B: 2.6 → 2.4 s at sf0.1)
-    staged = toked.select("doc_id", "toks", pairs_col.alias("pairs")).localCheckpoint()
+    staged = toked.select("doc_id", "toks", _adjacent_pairs().alias("pairs")).localCheckpoint()
     bg = staged.select(
         "doc_id", F.explode("pairs").alias("p")
     ).select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
@@ -792,21 +813,9 @@ def kn_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize scan + the pair shuffle — identical to bigram_surprisal,
     whose scaling is measured in BENCH_NOTES.
     """
-    from mito_spark.engine import spread
-
     docs = spread(load_table(spark, sf_dir, "documents"))
     toked = docs.select("doc_id", fields(F.lower(F.col("text"))).alias("toks"))
-    pairs_col = F.when(
-        F.size("toks") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("toks") - 1),
-            lambda i: F.struct(
-                F.element_at(F.col("toks"), i).alias("a"),
-                F.element_at(F.col("toks"), i + 1).alias("b"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-    staged = toked.select("doc_id", pairs_col.alias("pairs")).localCheckpoint()
+    staged = toked.select("doc_id", _adjacent_pairs().alias("pairs")).localCheckpoint()
     # per-doc rollup: probe side AND the cb source — materialize once
     # (the r12 shape re-ran the explode + this shuffle for both)
     pd = (
@@ -1029,65 +1038,126 @@ def bpe_learn_merges(
     ``bpe_learn_merges_bytes`` for the faithful char-level trainer
     where plain concatenation is the canonical encoding.
     """
-    out, _cur = _bpe_learn(spark, sf_dir, rounds)
+    merges = _merge_rounds(_doc_tokens(spark, sf_dir), rounds, "frequency", _space_join)
     return spark.createDataFrame(
-        out, "round int, a string, b string, n_occurrences long"
+        [(r, m["a"], m["b"], m["n_pair"]) for r, m, _cur in merges],
+        "round int, a string, b string, n_occurrences long",
     )
 
 
-def _bpe_learn(
-    spark: SparkSession, sf_dir: str, rounds: int
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """The shared word-level learn loop: returns (merge table, final
-    encoded frame (doc_id, toks)) so bpe_learn_merges ships the merges
-    and bpe_encode ships the per-doc encoding — one implementation,
-    two surfaces."""
-    from mito_spark.engine import spread
-
+def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seed of the word-level trainers: (doc_id, toks) per document,
+    checkpointed (every round and the has_long probe read it)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    cur = docs.select(
-        "doc_id", fields(F.lower(F.col("text"))).alias("toks")
-    ).localCheckpoint()
+    return docs.select("doc_id", fields(F.lower(F.col("text"))).alias("toks")).localCheckpoint()
+
+
+def _space_join(a: str, b: str) -> str:
+    """Word-level merge symbol: the flat space-joined string."""
+    return a + " " + b
+
+
+def _concat(a: str, b: str) -> str:
+    """Char-level merge symbol: plain concatenation."""
+    return a + b
+
+
+def _merge_rounds(
+    cur: DataFrame, rounds: int, objective: str, merge: Callable[[str, str], str]
+) -> Iterator[tuple[int, Row, DataFrame]]:
+    """The one merge-training round loop of the tokenizer family
+    (bpe_learn_merges, bpe_learn_merges_bytes, wordpiece_learn,
+    wordpiece_learn_subword, tokenizer_compression_curve). Each round
+    counts the adjacent pairs of ``cur.toks``, collects ONE argmax row
+    (a, b, n_pair[, n_a, n_b]), applies ``merge(a, b)`` greedily
+    left-to-right with ``_apply_merge_linear`` and localCheckpoints the
+    result (bounds plan growth across rounds, the MMR lesson); yields
+    (round, argmax row, cur) after each merge and stops early when no
+    candidate is left.
+
+    ``objective`` is "frequency" (BPE: argmax n_pair, ties a asc,
+    b asc) or "likelihood" (WordPiece: argmax n(ab)/(n(a)·n(b)) as an
+    IEEE double over the pairs that clear the ``_wp_floor`` support
+    floor). Counts are ``sum(wc)`` when ``cur`` is a word-TYPE table
+    (has a ``wc`` column) and ``count(1)`` otherwise.
+    """
+    wc = ["wc"] if "wc" in cur.columns else []
+    count = F.sum("wc") if wc else F.count(F.lit(1))
+    likelihood = objective == "likelihood"
     # one probe decides the merge-application shape for ALL rounds:
-    # arrays only shrink, so a corpus with no long docs now never has
+    # arrays only shrink, so a frame with no long rows now never has
     # one later — the common case takes the single-projection fold path
     has_long = bool(cur.where(F.size("toks") > BPE_FOLD_MAX_TOKENS).take(1))
-    out: list[tuple[int, str, str, int]] = []
     for r in range(1, rounds + 1):
-        pairs_col = F.when(
-            F.size("toks") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - 1),
-                lambda i: F.struct(
-                    F.element_at(F.col("toks"), i).alias("a"),
-                    F.element_at(F.col("toks"), i + 1).alias("b"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-        # NOT checkpointed (r13): the argmax is the pairs projection's
-        # only consumer, so materializing it bought nothing — Generate
-        # evaluates the transform once per input row either way (the
-        # winnow re-evaluation trap needs a second reference), and the
-        # checkpoint cost a full pairs write + blocked re-read per
-        # round (5-rep A/B over the 3-round loop: 7.66 -> 5.81 s
-        # median at sf0.1, merge tables bit-identical)
-        staged = cur.select(pairs_col.alias("pairs"))
-        top = (
-            staged.select(F.explode("pairs").alias("p"))
+        # stage PAIRS ONLY: a checkpointed RDD is row-stored, never
+        # column-pruned, so carrying toks would make every aggregate
+        # below scan double data (toks+pairs staging measured 4.2 s per
+        # argmax at sf0.1 vs ~2 s split). The checkpoint is
+        # load-bearing for the likelihood objective only: its pair
+        # counts have several consumers (floor, candidates, and heads
+        # on a per-doc frame) and ReusedExchange does NOT dedup the
+        # pair-count subtrees (the un-checkpointed word-level argmax
+        # plan carries 3 Generates). For
+        # the single-consumer frequency objective it is pure cost —
+        # Generate evaluates the transform once per input row either
+        # way — and dropping it measured 7.66 -> 5.81 s median over the
+        # 3-round word-level loop at sf0.1 (5-rep A/B, merge tables
+        # bit-identical).
+        staged = cur.select(*wc, _adjacent_pairs().alias("pairs"))
+        if likelihood:
+            staged = staged.localCheckpoint()
+        pc = (
+            staged.select(*wc, F.explode("pairs").alias("p"))
             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
+            .agg(count.alias("n_pair"))
         )
+        order = F.col("n_pair")
+        if likelihood:
+            if wc:
+                # word-TYPE table: exploding its tokens is bounded by
+                # |types|·maxlen rows and costs ONE shuffle; heads+lasts
+                # below measured 2 more jobs per round here
+                uni = (
+                    cur.select("wc", F.explode("toks").alias("t"))
+                    .groupBy("t")
+                    .agg(count.alias("n_uni"))
+                )
+            else:
+                # per-doc frame: unigram counts WITHOUT a corpus
+                # explode. Every token occurrence except a row's last
+                # is exactly one pair HEAD, so n(t) = Σ_b n_pair(t, b)
+                # + #rows ending in t; the last-token count evaluates
+                # ONE element_at per row (replaced a ~1.3 s/round token
+                # explode+shuffle at sf0.1 with ~0.3 s)
+                heads = pc.groupBy(F.col("a").alias("t")).agg(F.sum("n_pair").alias("n_head"))
+                lasts = (
+                    cur.where(F.size("toks") >= 1)
+                    .groupBy(F.element_at("toks", -1).alias("t"))
+                    .agg(count.alias("n_last"))
+                )
+                uni = heads.join(lasts, "t", "full_outer").select(
+                    "t",
+                    (F.coalesce(F.col("n_head"), F.lit(0)) + F.coalesce(F.col("n_last"), F.lit(0)))
+                    .alias("n_uni"),
+                )
+            pc = (
+                pc.crossJoin(F.broadcast(_wp_floor(pc)))
+                .where(F.col("n_pair") >= F.col("fl"))
+                .drop("fl")
+                .join(uni.select(F.col("t").alias("a"), F.col("n_uni").alias("n_a")), "a")
+                .join(uni.select(F.col("t").alias("b"), F.col("n_uni").alias("n_b")), "b")
+            )
+            order = F.col("n_pair").cast("double") / (
+                F.col("n_a").cast("double") * F.col("n_b").cast("double")
+            )
+        top = pc.orderBy(F.desc(order), F.asc("a"), F.asc("b")).limit(1).collect()
         if not top:
-            break
-        a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-        out.append((r, a, b, n))
+            return
+        m = top[0]
         cur = _apply_merge_linear(
-            cur, a, b, a + " " + b, maybe_long=has_long
+            cur, m["a"], m["b"], merge(m["a"], m["b"]), maybe_long=has_long
         ).localCheckpoint()
-    return out, cur
+        yield r, m, cur
 
 
 def _greedy_merge_tokens(toks: list, a: str, b: str, merged: str) -> list:
@@ -1239,7 +1309,7 @@ def bpe_encode(
 ) -> DataFrame:
     """Tokenizer APPLICATION — the third stage of the BPE lifecycle
     (candidates → learn → ENCODE): run the word-level learn loop
-    (shared ``_bpe_learn`` implementation, identical merge table) and
+    (the shared ``_merge_rounds`` loop, identical merge table) and
     report the per-document encoding result: raw token count, encoded
     token count, and the compression ratio the merge table bought.
     This is the number a tokenizer trainer actually optimizes — and
@@ -1258,23 +1328,31 @@ def bpe_encode(
     instead of the merge-table union — one chain, two oracles, zero
     twin drift possible.
     """
-    from mito_spark.engine import spread
+    cur = _doc_tokens(spark, sf_dir)
+    for _r, _m, cur in _merge_rounds(cur, rounds, "frequency", _space_join):
+        pass
+    return _encode_report(spark, sf_dir, cur, "n_tokens_bpe")
 
-    _merges, cur = _bpe_learn(spark, sf_dir, rounds)
+
+def _encode_report(spark: SparkSession, sf_dir: str, cur: DataFrame, n_col: str) -> DataFrame:
+    """Per-doc encode report of a word-level trainer's final frame
+    ``cur`` (doc_id, toks): raw token count, encoded token count (as
+    ``n_col``) and the compression ratio — NULL for empty docs (0/0 is
+    absence of evidence, not 1.0), a 6dp round of an exact integer
+    quotient. Sizes are computed where the encoded arrays already live:
+    one doc-keyed join, no extra shuffle of the tokens."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     t0 = docs.select("doc_id", F.size(fields(F.lower(F.col("text")))).alias("n_tokens_raw"))
-    enc = cur.select("doc_id", F.size("toks").alias("n_tokens_bpe"))
+    enc = cur.select("doc_id", F.size("toks").alias(n_col))
     return (
         t0.join(enc, "doc_id")
         .select(
             "doc_id",
             "n_tokens_raw",
-            "n_tokens_bpe",
+            n_col,
             F.when(
-                F.col("n_tokens_bpe") > 0,
-                F.round(
-                    F.col("n_tokens_raw").cast("double") / F.col("n_tokens_bpe"), 6
-                ),
+                F.col(n_col) > 0,
+                F.round(F.col("n_tokens_raw").cast("double") / F.col(n_col), 6),
             ).alias("compression_ratio"),
         )
         .orderBy("doc_id")
@@ -1339,66 +1417,23 @@ def bpe_learn_merges_bytes(
     byte-level trainer would pre-encode to escaped bytes (GPT-2
     style) — plumbing, not a different shuffle shape.
     """
-    out, _cur = _bpe_learn_bytes(spark, sf_dir, rounds)
+    merges = _merge_rounds(_char_symbols(spark, sf_dir), rounds, "frequency", _concat)
     return spark.createDataFrame(
-        out, "round int, a string, b string, n_occurrences long"
+        [(r, m["a"], m["b"], m["n_pair"]) for r, m, _cur in merges],
+        "round int, a string, b string, n_occurrences long",
     )
 
 
-def _bpe_learn_bytes(
-    spark: SparkSession, sf_dir: str, rounds: int
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """The shared char-level learn loop over the word-TYPE table:
-    returns (merge table, final frame (w, wc, toks)) so
-    ``bpe_learn_merges_bytes`` ships the merges and
-    ``tokenizer_fertility_subword`` ships the per-word-type piece
-    counts — one implementation, two surfaces (the byte-level sibling
-    of ``_bpe_learn``)."""
-    from mito_spark.engine import spread
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    words = (
-        docs.select(F.explode(fields(F.lower(F.col("text")))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wc"))
+def _char_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seed of the char-level BPE trainers: the word-TYPE table with
+    each word split into characters plus ``</w>`` — (w, wc, toks),
+    checkpointed. ``w`` rides along so consumers can join piece counts
+    back to word usage."""
+    return (
+        _word_types(spark, sf_dir)
+        .select("w", "wc", F.concat(F.split("w", ""), F.array(F.lit("</w>"))).alias("toks"))
+        .localCheckpoint()
     )
-    cur = words.select(
-        "w",
-        "wc",
-        F.concat(F.split("w", ""), F.array(F.lit("</w>"))).alias("toks"),
-    ).localCheckpoint()
-    has_long = bool(cur.where(F.size("toks") > BPE_FOLD_MAX_TOKENS).take(1))
-    out: list[tuple[int, str, str, int]] = []
-    for r in range(1, rounds + 1):
-        pairs_col = F.when(
-            F.size("toks") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - 1),
-                lambda i: F.struct(
-                    F.element_at(F.col("toks"), i).alias("a"),
-                    F.element_at(F.col("toks"), i + 1).alias("b"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-        # NOT checkpointed (r13) — same A/B as _bpe_learn: single
-        # consumer, the materialization was pure overhead per round
-        staged = cur.select("wc", pairs_col.alias("pairs"))
-        top = (
-            staged.select("wc", F.explode("pairs").alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("wc").alias("n"))
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-        out.append((r, a, b, n))
-        cur = _apply_merge_linear(
-            cur, a, b, a + b, maybe_long=has_long
-        ).localCheckpoint()
-    return out, cur
 
 
 def _bpe_bytes_chain(rounds: int = BPE_BYTES_ROUNDS) -> str:
@@ -1469,7 +1504,7 @@ def tokenizer_fertility(
     of its context window for the same text.
 
     Composes three existing chains without new machinery: the shared
-    word-level BPE learn loop (_bpe_learn — identical merge table as
+    word-level BPE learn loop (``_merge_rounds`` — identical merge table as
     bpe_learn_merges/bpe_encode), the JVM-only marker language-ID
     projection (lang_id), and a chars-per-doc scan projection. All
     ratios are quotients of exact integer SUMS rounded at 6dp — no
@@ -1482,9 +1517,9 @@ def tokenizer_fertility(
     fan-in and a |languages|-row aggregate; nothing new grows with the
     corpus.
     """
-    from mito_spark.engine import spread
-
-    _merges, cur = _bpe_learn(spark, sf_dir, rounds)
+    cur = _doc_tokens(spark, sf_dir)
+    for _r, _m, cur in _merge_rounds(cur, rounds, "frequency", _space_join):
+        pass
     docs = spread(load_table(spark, sf_dir, "documents"))
     base = docs.select(
         "doc_id",
@@ -1564,7 +1599,7 @@ def tokenizer_fertility_subword(
     tokenizer headline number (r8 verdict next#7): the word-level
     ``tokenizer_fertility`` reads <= 1 because its merges JOIN
     whitespace words; this variant runs the faithful char-level
-    trainer (``_bpe_learn_bytes`` — identical merge table as
+    trainer (``_merge_rounds`` — identical merge table as
     ``bpe_learn_merges_bytes``) and reports how many SUBWORD pieces
     the learned vocabulary splits each language's words into
     (fertility >= 1; higher = that language pays more context window
@@ -1584,9 +1619,9 @@ def tokenizer_fertility_subword(
     at scale). All ratios are quotients of exact integer SUMS rounded
     at 6dp.
     """
-    from mito_spark.engine import spread
-
-    _merges, cur = _bpe_learn_bytes(spark, sf_dir, rounds)
+    cur = _char_symbols(spark, sf_dir)
+    for _r, _m, cur in _merge_rounds(cur, rounds, "frequency", _concat):
+        pass
     pieces = cur.select(
         "w",
         (
@@ -1857,24 +1892,6 @@ ULM_KEEP_NUM, ULM_KEEP_DEN = 1, 2
 ULM_PRUNE_ROUNDS = 3  # shrink rounds (each: E-step, recount, loss-cut)
 
 
-def _ulm_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-TYPE table (w, wc) — the unigram trainer's working set,
-    same shape as ``_bpe_learn_bytes``: every loop below shuffles
-    |vocab| rows, never the corpus. Words longer than ULM_MAXW are
-    excluded on both engines (they would exceed the constant
-    fold-step count)."""
-    from mito_spark.engine import spread
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return (
-        docs.select(F.explode(fields(F.lower(F.col("text")))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wc"))
-        .where(F.length("w") <= ULM_MAXW)
-        .localCheckpoint()
-    )
-
-
 def _ulm_seed(words: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Seed vocabulary (Kudo 2018 §3.2's frequent-substring seeding,
     substring-enumeration form): all substrings of length 1..ULM_MAXP
@@ -2066,7 +2083,7 @@ def _ulm_train(
     """Shared trainer loop: per-round localCheckpoints (iterative-loop
     house rule — stage i must not re-embed every earlier round's DAG)
     returning (per-round summary frame, final vocab frame)."""
-    words = _ulm_words(spark, sf_dir)
+    words = _word_types(spark, sf_dir, ULM_MAXW).localCheckpoint()
     vocab, chars = _ulm_seed(words)
     vocab = vocab.localCheckpoint()
     chars = chars.localCheckpoint()
@@ -2338,7 +2355,7 @@ def _ulm_prune_train(
     ``_ulm_train``, then the loss-ranked cut toward ``target``
     multi-char pieces. Per-round localCheckpoints (iterative-loop
     house rule)."""
-    words = _ulm_words(spark, sf_dir)
+    words = _word_types(spark, sf_dir, ULM_MAXW).localCheckpoint()
     vocab, chars = _ulm_seed(words)
     vocab = vocab.localCheckpoint()
     chars = chars.localCheckpoint()
@@ -2546,22 +2563,10 @@ def collocation_pmi_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically-associated double product, 6dp-rounded — hash-exact
     across engines.
     """
-    from mito_spark.engine import spread
-
     docs = spread(load_table(spark, sf_dir, "documents"))
-    pair_structs = F.when(
-        F.size("toks") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("toks") - 1),
-            lambda i: F.struct(
-                F.element_at(F.col("toks"), i).alias("a"),
-                F.element_at(F.col("toks"), i + 1).alias("b"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
     staged = (
         docs.select(fields(F.lower(F.col("text"))).alias("toks"))
-        .select("toks", pair_structs.alias("pairs"))
+        .select("toks", _adjacent_pairs().alias("pairs"))
         .localCheckpoint()
     )
     uni = (
@@ -2670,7 +2675,7 @@ def unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _, vocab = _ulm_train(spark, sf_dir)
     lp = _ulm_lp(vocab).localCheckpoint()
-    words = _ulm_words(spark, sf_dir)
+    words = _word_types(spark, sf_dir, ULM_MAXW).localCheckpoint()
     segp = _ulm_seg(words, lp).select(
         "w", (F.size("bt") - 1).cast("bigint").alias("n_pieces_w")
     )
@@ -2811,114 +2816,11 @@ def wordpiece_learn(
     encoding); the faithful sub-word form would run on the word-TYPE
     table as ``bpe_learn_merges_bytes`` does.
     """
-    out, _cur = _wp_learn(spark, sf_dir, rounds)
+    merges = _merge_rounds(_doc_tokens(spark, sf_dir), rounds, "likelihood", _space_join)
     return spark.createDataFrame(
-        out,
+        [(r, m["a"], m["b"], m["n_pair"], m["n_a"], m["n_b"]) for r, m, _cur in merges],
         "round int, a string, b string, n_pair long, n_a long, n_b long",
     )
-
-
-def _wp_learn(
-    spark: SparkSession, sf_dir: str, rounds: int
-) -> tuple[list[tuple[int, str, str, int, int, int]], DataFrame]:
-    """Shared WordPiece learn loop (the ``_bpe_learn`` convention):
-    returns (merge table, final encoded frame) so ``wordpiece_learn``
-    ships the merges and ``wordpiece_encode`` the per-doc encoding —
-    one implementation, two surfaces."""
-    from mito_spark.engine import spread
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    cur = docs.select(
-        "doc_id", fields(F.lower(F.col("text"))).alias("toks")
-    ).localCheckpoint()
-    has_long = bool(cur.where(F.size("toks") > BPE_FOLD_MAX_TOKENS).take(1))
-    out: list[tuple[int, str, str, int, int, int]] = []
-    for r in range(1, rounds + 1):
-        pairs_col = F.when(
-            F.size("toks") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - 1),
-                lambda i: F.struct(
-                    F.element_at(F.col("toks"), i).alias("a"),
-                    F.element_at(F.col("toks"), i + 1).alias("b"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-        # stage PAIRS ONLY (the BPE discipline): a checkpointed RDD is
-        # row-stored, never column-pruned, so carrying toks here would
-        # make every aggregate below scan double data (measured: the
-        # toks+pairs staging cost 4.2 s per argmax at sf0.1 vs ~2 s
-        # split). The checkpoint itself is LOAD-BEARING here, unlike
-        # the single-consumer _bpe_learn loop (r13): pc_full below is
-        # referenced three times (floor, pc, heads) and ReusedExchange
-        # does NOT dedup the three pair-count subtrees (verified: the
-        # un-checkpointed argmax plan carries 3 Generates, i.e. the
-        # pairs transform re-runs per consumer), so without the
-        # materialization every round pays the corpus pair transform
-        # three times.
-        staged = cur.select(pairs_col.alias("pairs")).localCheckpoint()
-        pc_full = (
-            staged.select(F.explode("pairs").alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.count(F.lit(1)).alias("n_pair"))
-        )
-        # corpus-derived support floor (see WP_MIN_PAIR note): one extra
-        # aggregate over the pair-vocab-sized frame; ReusedExchange
-        # shares the pair-count shuffle with pc/heads inside the one
-        # collected argmax plan
-        pc = (
-            pc_full.crossJoin(F.broadcast(_wp_floor(pc_full)))
-            .where(F.col("n_pair") >= F.col("fl"))
-            .drop("fl")
-        )
-        # Unigram counts WITHOUT a second corpus explode: every token
-        # occurrence except each doc's final token appears exactly once
-        # as a pair HEAD, so n(t) = Σ_b n_pair(t, b) + #docs whose last
-        # token is t. The head rollup runs over the pair-vocab-sized
-        # frame; the last-token count evaluates ONE element_at per doc
-        # (no explode). Measured: replaces a ~1.3 s/round token
-        # explode+shuffle at sf0.1 with ~0.3 s of vocab-sized work.
-        heads = pc_full.groupBy(F.col("a").alias("t")).agg(
-            F.sum("n_pair").alias("n_head")
-        )
-        lasts = (
-            cur.where(F.size("toks") >= 1)
-            .groupBy(F.element_at("toks", -1).alias("t"))
-            .agg(F.count(F.lit(1)).alias("n_last"))
-        )
-        uni = (
-            heads.join(lasts, "t", "full_outer")
-            .select(
-                "t",
-                (
-                    F.coalesce(F.col("n_head"), F.lit(0))
-                    + F.coalesce(F.col("n_last"), F.lit(0))
-                ).alias("n_uni"),
-            )
-        )
-        ua = uni.select(F.col("t").alias("a"), F.col("n_uni").alias("n_a"))
-        ub = uni.select(F.col("t").alias("b"), F.col("n_uni").alias("n_b"))
-        score = F.col("n_pair").cast("double") / (
-            F.col("n_a").cast("double") * F.col("n_b").cast("double")
-        )
-        top = (
-            pc.join(ua, "a")
-            .join(ub, "b")
-            .orderBy(F.desc(score), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        row = top[0]
-        a, b = row["a"], row["b"]
-        out.append(
-            (r, a, b, int(row["n_pair"]), int(row["n_a"]), int(row["n_b"]))
-        )
-        cur = _apply_merge_linear(
-            cur, a, b, a + " " + b, maybe_long=has_long
-        ).localCheckpoint()
-    return out, cur
 
 
 def wordpiece_encode(
@@ -2926,7 +2828,7 @@ def wordpiece_encode(
 ) -> DataFrame:
     """WordPiece APPLICATION — the encode surface of the likelihood
     trainer (the ``bpe_encode`` convention): run the shared
-    ``_wp_learn`` loop and report per-document raw token count,
+    ``_merge_rounds`` loop and report per-document raw token count,
     encoded token count, and the compression ratio the merge table
     bought. Because WordPiece optimizes likelihood rather than raw
     frequency, its ratio profile differs from BPE's on the same
@@ -2945,30 +2847,10 @@ def wordpiece_encode(
     trainer stop leaves the twin holding the last encoded state
     exactly as the Spark loop's ``break`` does.
     """
-    from mito_spark.engine import spread
-
-    _merges, cur = _wp_learn(spark, sf_dir, rounds)
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    t0 = docs.select(
-        "doc_id", F.size(fields(F.lower(F.col("text")))).alias("n_tokens_raw")
-    )
-    enc = cur.select("doc_id", F.size("toks").alias("n_tokens_wp"))
-    return (
-        t0.join(enc, "doc_id")
-        .select(
-            "doc_id",
-            "n_tokens_raw",
-            "n_tokens_wp",
-            F.when(
-                F.col("n_tokens_wp") > 0,
-                F.round(
-                    F.col("n_tokens_raw").cast("double") / F.col("n_tokens_wp"),
-                    6,
-                ),
-            ).alias("compression_ratio"),
-        )
-        .orderBy("doc_id")
-    )
+    cur = _doc_tokens(spark, sf_dir)
+    for _r, _m, cur in _merge_rounds(cur, rounds, "likelihood", _space_join):
+        pass
+    return _encode_report(spark, sf_dir, cur, "n_tokens_wp")
 
 
 def _wp_chain(rounds: int = WP_ROUNDS) -> str:
@@ -3076,24 +2958,6 @@ WPS_MIN_WC = 2  # trainer min word frequency (the HF WordPieceTrainer
 # unseen-word path on the very corpus it trained on.
 
 
-def _wps_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-TYPE table (w, wc) capped at WPS_MAXW — the subword
-    trainer's working set (the ``_bpe_learn_bytes`` /
-    reference lib/strings.go tokenize-then-aggregate shape): one
-    corpus tokenize pass, then every loop below shuffles |word types|
-    rows, never the corpus."""
-    from mito_spark.engine import spread
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return (
-        docs.select(F.explode(fields(F.lower(F.col("text")))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wc"))
-        .where(F.length("w") <= WPS_MAXW)
-        .localCheckpoint()
-    )
-
-
 def _wps_seed_toks() -> Column:
     """WordPiece initial split of the word column ``w``: first char
     plain, every later char as a ``##``-prefixed continuation piece
@@ -3108,26 +2972,12 @@ def _wps_seed_toks() -> Column:
     return F.concat(F.array(F.col("w").substr(F.lit(1), F.lit(1))), cont)
 
 
-def _wps_learn(
-    spark: SparkSession, sf_dir: str, rounds: int
-) -> tuple[list[tuple[int, str, str, int, int, int]], DataFrame, DataFrame]:
-    """Shared subword-WordPiece learn loop. Returns (merge table,
-    final word-type frame (w, wc, toks), initial-alphabet frame
-    (piece)) — learn ships the merges, encode the greedy segmenter
-    over alphabet+merges.
-
-    Merge semantics: score(a,b) = n(ab)/(n(a)·n(b)) with counts
-    weighted by word frequency (wc); merged symbol = a concatenated
-    with b's surface (b's ``##`` prefix stripped), keeping a's
-    prefix status — '##l'+'##o' -> '##lo', 'h'+'##e' -> 'he'. The
-    support floor is the shared corpus-derived ``_wp_floor`` rule.
-
-    Scale shape: identical to ``_bpe_learn_bytes`` — ONE corpus
-    tokenize builds the type table; each round shuffles pair rows
-    bounded by |types|·maxlen, collects ONE argmax row, and maps the
-    merge over the type table with ``_apply_merge_linear``. The
-    unigram side is a type-table explode (bounded by the same
-    |types|·maxlen), NOT a corpus explode.
+def _wps_seed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Seed of the subword WordPiece trainer: (word-TYPE table (w, wc)
+    capped at WPS_MAXW, training frame (w, wc, toks)). The training
+    frame keeps the types with wc >= WPS_MIN_WC, each split by
+    ``_wps_seed_toks``; every word type still reaches the encode
+    surface.
 
     The '#' character is asserted absent from the training charset:
     with it, a merged PLAIN piece could collide with the '##'
@@ -3135,8 +2985,7 @@ def _wps_learn(
     HF solves it by choosing a prefix outside the alphabet; we keep
     '##' and fail loudly on the corpus that breaks it).
     """
-    words = _wps_words(spark, sf_dir)
-    train = words.where(F.col("wc") >= WPS_MIN_WC)
+    words = _word_types(spark, sf_dir, WPS_MAXW).localCheckpoint()
     # the ambiguity guard scans the FULL word-type table, not just the
     # wc-filtered train subset: hapax words still reach the encode
     # surface (wordpiece_encode_subword segments every word type), so
@@ -3146,65 +2995,19 @@ def _wps_learn(
             "subword WordPiece: training corpus contains '#' — the '##' "
             "continuation prefix would be ambiguous; pre-escape the corpus"
         )
-    cur = train.select("w", "wc", _wps_seed_toks().alias("toks")).localCheckpoint()
-    alpha = cur.select(F.explode("toks").alias("piece")).distinct().localCheckpoint()
-    out: list[tuple[int, str, str, int, int, int]] = []
-    for r in range(1, rounds + 1):
-        pairs_col = F.when(
-            F.size("toks") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - 1),
-                lambda i: F.struct(
-                    F.element_at(F.col("toks"), i).alias("a"),
-                    F.element_at(F.col("toks"), i + 1).alias("b"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-        # checkpoint LOAD-BEARING (r13, the _wp_learn finding):
-        # pc_full is multi-referenced (floor + pc) and ReusedExchange
-        # does not dedup the pair-count subtrees, so an
-        # un-checkpointed staged frame re-runs the pairs transform
-        # per consumer (3 Generates in the _wp_learn probe plan)
-        staged = cur.select("wc", pairs_col.alias("pairs")).localCheckpoint()
-        pc_full = (
-            staged.select("wc", F.explode("pairs").alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("wc").alias("n_pair"))
-        )
-        pc = (
-            pc_full.crossJoin(F.broadcast(_wp_floor(pc_full)))
-            .where(F.col("n_pair") >= F.col("fl"))
-            .drop("fl")
-        )
-        uni = (
-            cur.select("wc", F.explode("toks").alias("t"))
-            .groupBy("t")
-            .agg(F.sum("wc").alias("n_uni"))
-        )
-        ua = uni.select(F.col("t").alias("a"), F.col("n_uni").alias("n_a"))
-        ub = uni.select(F.col("t").alias("b"), F.col("n_uni").alias("n_b"))
-        score = F.col("n_pair").cast("double") / (
-            F.col("n_a").cast("double") * F.col("n_b").cast("double")
-        )
-        top = (
-            pc.join(ua, "a")
-            .join(ub, "b")
-            .orderBy(F.desc(score), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        row = top[0]
-        a, b = row["a"], row["b"]
-        merged = a + (b[2:] if b.startswith("##") else b)
-        out.append(
-            (r, a, b, int(row["n_pair"]), int(row["n_a"]), int(row["n_b"]))
-        )
-        # toks arrays are <= WPS_MAXW+0 symbols, far under the fold
-        # threshold -> the single-projection JVM fold path
-        cur = _apply_merge_linear(cur, a, b, merged, maybe_long=False).localCheckpoint()
-    return out, cur, alpha
+    cur = (
+        words.where(F.col("wc") >= WPS_MIN_WC)
+        .select("w", "wc", _wps_seed_toks().alias("toks"))
+        .localCheckpoint()
+    )
+    return words, cur
+
+
+def _wps_merge(a: str, b: str) -> str:
+    """Subword WordPiece merge symbol: a concatenated with b's surface
+    (b's ``##`` prefix stripped), keeping a's prefix status —
+    '##l'+'##o' -> '##lo', 'h'+'##e' -> 'he'."""
+    return a + (b[2:] if b.startswith("##") else b)
 
 
 def wordpiece_learn_subword(
@@ -3231,18 +3034,15 @@ def wordpiece_learn_subword(
     exact integer counts, ties (a asc, b asc) — bit-identical on both
     engines, same contract as ``wordpiece_learn``.
     """
-    out, _cur, _alpha = _wps_learn(spark, sf_dir, rounds)
+    _words, cur = _wps_seed(spark, sf_dir)
+    merges = _merge_rounds(cur, rounds, "likelihood", _wps_merge)
     return spark.createDataFrame(
-        out,
+        [(r, m["a"], m["b"], m["n_pair"], m["n_a"], m["n_b"]) for r, m, _cur in merges],
         "round int, a string, b string, n_pair long, n_a long, n_b long",
     )
 
 
-def _wps_vocab_map(
-    spark: SparkSession,
-    merges: list[tuple[int, str, str, int, int, int]],
-    alpha: DataFrame,
-) -> DataFrame:
+def _wps_vocab_map(spark: SparkSession, pieces: list[str], alpha: DataFrame) -> DataFrame:
     """One-row (m) membership map over the learned vocabulary:
     initial alphabet (the distinct t0 symbols — plain first chars +
     ``##`` continuations as OBSERVED positionally in training) plus
@@ -3250,9 +3050,7 @@ def _wps_vocab_map(
     bounded by charset + rounds, a few KB here, a few MB for a
     production 32k vocab — always a broadcast."""
     vocab = alpha
-    merged = sorted(
-        {a + (b[2:] if b.startswith("##") else b) for _r, a, b, *_ in merges}
-    )
+    merged = sorted(set(pieces))
     if merged:
         vocab = vocab.unionByName(
             spark.createDataFrame([(p,) for p in merged], "piece string")
@@ -3307,7 +3105,7 @@ def _wps_greedy_seg(words: DataFrame, vm: DataFrame, max_piece: int) -> DataFram
 def wordpiece_encode_subword(
     spark: SparkSession, sf_dir: str, rounds: int = WPS_ROUNDS
 ) -> DataFrame:
-    """Subword WordPiece APPLICATION: train (shared ``_wps_learn``
+    """Subword WordPiece APPLICATION: train (shared ``_merge_rounds``
     loop), then segment EVERY word type — including the hapax types
     the WPS_MIN_WC knob excluded from training, the genuine
     unseen-word path — with greedy longest-match first-fit against
@@ -3327,11 +3125,10 @@ def wordpiece_encode_subword(
     Parity: piece memberships are exact string lookups; fertility is
     a 6dp round of an exact-integer quotient.
     """
-    from mito_spark.engine import spread
-
-    merges, _cur, alpha = _wps_learn(spark, sf_dir, rounds)
-    words = _wps_words(spark, sf_dir)
-    vm = _wps_vocab_map(spark, merges, alpha)
+    words, cur = _wps_seed(spark, sf_dir)
+    alpha = cur.select(F.explode("toks").alias("piece")).distinct().localCheckpoint()
+    merges = _merge_rounds(cur, rounds, "likelihood", _wps_merge)
+    vm = _wps_vocab_map(spark, [_wps_merge(m["a"], m["b"]) for _r, m, _cur in merges], alpha)
     st = _wps_greedy_seg(words, vm, rounds + 1).select(
         "w",
         F.when(F.element_at("seg", 1) == "-1", F.lit(1))
@@ -3512,82 +3309,36 @@ def tokenizer_compression_curve(
     dedup_threshold_sweep (verify knob), and ann_nprobe_curve
     (serving knob) — this walks the TOKENIZER-BUDGET knob.
 
-    One loop, same plan class as ``bpe_learn_merges_bytes`` (the
-    shared pair-argmax/merge-fold shape over the type table), plus
-    TWO bounded aggregates per round: total pieces (one sum over
-    |types| rows) and distinct-symbol count (explode of the bounded
-    type table). Round 0 is the char baseline. Compression is a 6dp
-    round of an exact integer quotient.
+    The ``bpe_learn_merges_bytes`` rounds (the shared
+    ``_merge_rounds`` loop over the type table), plus TWO bounded
+    aggregates per round: total pieces (one sum over |types| rows) and
+    distinct-symbol count (explode of the bounded type table). Round 0
+    is the char baseline; a corpus with no words has no rows.
+    Compression is a 6dp round of an exact integer quotient.
 
     Reference intent: SURVEY §7 step 7's tokenizer family;
     Sennrich et al. 2016 §3 (the merges-vs-vocabulary tradeoff).
     """
-    from mito_spark.engine import spread
 
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    words = (
-        docs.select(F.explode(fields(F.lower(F.col("text")))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wc"))
-    )
-    cur = words.select(
-        "w",
-        "wc",
-        F.concat(F.split("w", ""), F.array(F.lit("</w>"))).alias("toks"),
-    ).localCheckpoint()
-    has_long = bool(cur.where(F.size("toks") > BPE_FOLD_MAX_TOKENS).take(1))
+    def snapshot(r: int, frame: DataFrame) -> tuple[int, int, int | None]:
+        tp = frame.agg(F.sum(F.col("wc") * F.size("toks"))).collect()[0][0]
+        vs = frame.select(F.explode("toks")).distinct().count()
+        return r, vs, tp
 
-    def snapshot(frame: DataFrame) -> tuple[int, int]:
-        tp = frame.agg(
-            F.sum(F.col("wc") * F.size("toks")).alias("tp")
-        ).collect()[0]["tp"]
-        vs = (
-            frame.select(F.explode("toks").alias("t")).distinct().count()
-        )
-        return int(tp), int(vs)
-
-    tp0, vs0 = snapshot(cur)
-    rows = [(0, vs0, tp0)]
-    for r in range(1, rounds + 1):
-        pairs_col = F.when(
-            F.size("toks") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - 1),
-                lambda i: F.struct(
-                    F.element_at(F.col("toks"), i).alias("a"),
-                    F.element_at(F.col("toks"), i + 1).alias("b"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-        # NOT checkpointed (r13) — same A/B as _bpe_learn: single
-        # consumer, the materialization was pure overhead per round
-        staged = cur.select("wc", pairs_col.alias("pairs"))
-        top = (
-            staged.select("wc", F.explode("pairs").alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("wc").alias("n"))
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b = top[0]["a"], top[0]["b"]
-        cur = _apply_merge_linear(
-            cur, a, b, a + b, maybe_long=has_long
-        ).localCheckpoint()
-        tp, vs = snapshot(cur)
-        rows.append((r, vs, tp))
-    out = spark.createDataFrame(
-        rows, "round int, vocab_size long, total_pieces long"
-    )
+    cur = _char_symbols(spark, sf_dir)
+    base = snapshot(0, cur)
+    # a corpus with no words has no curve: round 0's total is NULL, and
+    # the oracle's WHERE total_pieces IS NOT NULL emits no row
+    rows = []
+    if base[2] is not None:
+        rounds_run = _merge_rounds(cur, rounds, "frequency", _concat)
+        rows = [base] + [snapshot(r, c) for r, _m, c in rounds_run]
+    out = spark.createDataFrame(rows, "round int, vocab_size long, total_pieces long")
     return out.select(
         "round",
         "vocab_size",
         "total_pieces",
-        F.round(F.lit(float(tp0)) / F.col("total_pieces"), 6).alias(
-            "compression"
-        ),
+        F.round(F.lit(base[2]).cast("double") / F.col("total_pieces"), 6).alias("compression"),
     ).orderBy("round")
 
 
@@ -3673,12 +3424,12 @@ def stupid_backoff_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines — the DuckDB ln(0)-errors gotcha).
     """
     from mito_spark.engine import spread
-    from mito_spark.operators.classify import _split_bucket
+    from mito_spark.operators.classify import split_bucket
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     toked = docs.select(
         "doc_id",
-        (_split_bucket(F.col("doc_id"), "sbsplit:v1:") < SB_TRAIN_BUCKETS).alias(
+        (split_bucket(F.col("doc_id"), "sbsplit:v1:") < SB_TRAIN_BUCKETS).alias(
             "is_train"
         ),
         fields(F.lower(F.col("text"))).alias("toks"),

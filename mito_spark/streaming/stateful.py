@@ -995,7 +995,7 @@ def streaming_cdc_chunk_dedup(docs: DataFrame) -> DataFrame:
     table): each arriving document is content-defined-chunked
     row-locally (a stateless mapInPandas running
     ``_cdc_boundaries_py``, the tested Python mirror of the batch
-    chunk frame — hashes match the JVM ``_hash60`` construction
+    chunk frame — hashes match the JVM ``hash60`` construction
     bit-for-bit), then every chunk hash is flagged dup unless it IS
     its key's stored first occurrence — the SAME one-pair-per-key
     state record and step as ``streaming_paragraph_dedup`` (shared
@@ -1289,12 +1289,12 @@ def kmv_stream_rows(docs: DataFrame) -> DataFrame:
     the bottom-k state is idempotent under duplicates."""
     from pyspark.sql import functions as F
 
-    from mito_spark.operators.dedup import _hash60, _staged_shingles
+    from mito_spark.operators.dedup import hash60, staged_shingles
 
     return (
-        _staged_shingles(docs, 3, id_col="source")
+        staged_shingles(docs, 3, id_col="source")
         .select("source", F.explode("sh").alias("s"))
-        .select("source", _hash60(F.col("s"), F.lit("kmv")).alias("h"))
+        .select("source", hash60(F.col("s"), F.lit("kmv")).alias("h"))
     )
 
 

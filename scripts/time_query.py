@@ -1,6 +1,8 @@
 """Isolated per-query timing: one fresh session, N reps of each named
-query forced through the noop sink (guide §1.4), job-labelled
-(guide §1.5). Prints per-rep seconds + median per query.
+query forced through the noop sink (guide §1.4), each rep in its own
+job group ``<query>|rep<i>`` (guide §1.5). Prints per-rep seconds and
+Spark job counts (building the DataFrame plus the noop write) and the
+median seconds per query.
 
 Usage: python scripts/time_query.py <reps> <query> [query ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
@@ -33,20 +35,22 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     # warm the JVM once, untimed (same warmup query as bench.py)
     qs["q6_forecast_revenue"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    sc = spark.sparkContext
     out = {}
     for name in names:
-        samples = []
+        samples, jobs = [], []
         for i in range(reps):
             gc.collect()
-            spark.sparkContext.setJobDescription(f"{name} rep{i}")
+            group = f"{name}|rep{i}"
+            sc.setJobGroup(group, group)
             t0 = time.time()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(round(time.time() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         s = sorted(samples)
         mid = len(s) // 2
         med = s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
-        out[name] = {"median": round(med, 3), "samples": samples}
+        out[name] = {"median": round(med, 3), "samples": samples, "jobs": jobs}
         print(json.dumps({name: out[name]}), flush=True)
     print(json.dumps({"summary": {k: v["median"] for k, v in out.items()}}))
     spark.stop()

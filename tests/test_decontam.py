@@ -67,12 +67,12 @@ def test_repetition_flag_on_degenerate_docs(spark):
     # reuse the operator body against an in-memory table via a monkey
     # substitution of load_table semantics: call the column program
     # directly through a local copy of the projection
-    from mito_spark.operators.decontam import _max_run_len, _ngrams
+    from mito_spark.operators.decontam import max_run_len, ngrams
     from mito_spark.functions.strings import fields
 
     toks = fields(F.lower(F.col("text")))
     n_tok = F.size(toks)
-    run2 = _max_run_len(_ngrams(toks, 2))
+    run2 = max_run_len(ngrams(toks, 2))
     out = {
         r.doc_id: (r.r2, r.nt)
         for r in docs.select("doc_id", run2.alias("r2"), n_tok.alias("nt")).collect()
@@ -91,9 +91,9 @@ def test_max_run_len_empty_and_single():
 
     spark = get_spark("tests", shuffle_partitions=1)
     df = spark.range(1).select(
-        decontam._max_run_len(F.array().cast("array<string>")).alias("e"),
-        decontam._max_run_len(F.array(F.lit("x"))).alias("s"),
-        decontam._max_run_len(
+        decontam.max_run_len(F.array().cast("array<string>")).alias("e"),
+        decontam.max_run_len(F.array(F.lit("x"))).alias("s"),
+        decontam.max_run_len(
             F.array(F.lit("x"), F.lit("y"), F.lit("x"))
         ).alias("m"),
     )

@@ -40,3 +40,55 @@ def test_operator_survives_degenerate_corpus(spark, degen_dir, name):
     # zero-token docs until the noop form exposed it
     df = entry.queries()[name](spark, degen_dir)
     df.write.format("noop").mode("overwrite").save()
+
+
+@pytest.fixture(scope="module")
+def no_words_dir(spark, tmp_path_factory):
+    td = str(tmp_path_factory.mktemp("nowords"))
+    spark.createDataFrame(
+        [(0, "", "en", "src0", 0), (1, "   ", "en", "src0", 3)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(f"{td}/documents.parquet")
+    return td
+
+
+# The BPE oracle chains have no empty-argmax fallback (the WordPiece
+# chains do): when no pair is left, DuckDB's t{r} is empty while Spark
+# keeps the last encoded state, so the per-doc BPE reports disagree.
+_BPE_CHAIN_STOP = pytest.mark.xfail(
+    strict=True, reason="BPE oracle chain empties t{r} when the loop stops early"
+)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "bpe_merge_candidates",
+        "bpe_learn_merges",
+        pytest.param("bpe_encode", marks=_BPE_CHAIN_STOP),
+        "bpe_learn_merges_bytes",
+        pytest.param("tokenizer_fertility", marks=_BPE_CHAIN_STOP),
+        "tokenizer_fertility_subword",
+        "tokenizer_compression_curve",
+        "wordpiece_learn",
+        "wordpiece_encode",
+        "wordpiece_learn_subword",
+        "wordpiece_encode_subword",
+        "unigram_lm_train",
+    ],
+)
+def test_tokenizer_matches_oracle_on_no_words_corpus(spark, no_words_dir, name):
+    """A corpus whose documents hold no words: each tokenizer-family
+    operator must agree with its DuckDB twin (row count, columns and
+    value hash, as the correctness gate compares), not merely survive."""
+    import duckdb
+
+    from scripts.check_correctness import canon
+
+    got = canon(entry.queries()[name](spark, no_words_dir).toPandas())
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{no_words_dir}/documents.parquet/*.parquet'"
+    )
+    want = canon(con.execute(entry.oracle_sql()[name]).df())
+    assert got[:3] == want[:3]

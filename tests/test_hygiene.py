@@ -1,8 +1,11 @@
 """Corpus hygiene (operators/hygiene.py): PII redaction, stratified
-sampling, domain-mix rebalancing."""
+sampling, domain-mix rebalancing; and code hygiene: operator modules
+share helpers only through public names."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import re
 
 from pyspark.sql import functions as F
@@ -184,3 +187,20 @@ def test_packing_efficiency_hand_numbers_and_invariants(spark, tmp_path, sf_dir)
     for r in rows:
         assert r["pack_waste"] < r["pad_waste"]
         assert r["pack_seqs"] * r["seq_len"] >= r["total_tokens"]
+
+
+def test_operator_modules_import_no_private_names_of_each_other():
+    """A helper one operator module shares with another is public in
+    its owning module: ``from mito_spark.operators.<m> import _<name>``
+    in a different operator module fails here."""
+    ops = pathlib.Path(__file__).resolve().parent.parent / "mito_spark" / "operators"
+    bad = []
+    for path in sorted(ops.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.ImportFrom) and node.module):
+                continue
+            pkg, _, owner = node.module.rpartition(".")
+            if pkg != "mito_spark.operators" or owner == path.stem:
+                continue
+            bad += [f"{path.name}: {owner}.{a.name}" for a in node.names if a.name.startswith("_")]
+    assert not bad, bad

@@ -136,7 +136,7 @@ def test_lsh_topk_subset_of_bruteforce_scores(spark, sf_dir):
 
 def test_lang_id_predictions_valid_and_better_than_chance(spark, sf_dir):
     rows = text.lang_id(spark, sf_dir).collect()
-    valid = set(text._LANG_MARKERS) | {"und"}
+    valid = set(text.LANG_MARKERS) | {"und"}
     assert all(r.predicted_lang in valid for r in rows)
     # the synthetic corpus is mostly-random word soup with weak lang
     # signal; require better-than-chance (5 labels → 0.2), not accuracy
@@ -226,7 +226,7 @@ def test_ivf_train_sample_is_hash_spread(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings").selectExpr("vec_id")
     n = emb.count()
-    ids = [r.vec_id for r in similarity._ivf_train_sample(emb).collect()]
+    ids = [r.vec_id for r in similarity.ivf_train_sample(emb).collect()]
     assert 0.15 * n <= len(ids) <= 0.35 * n
     # spread: both halves of the id range are represented
     assert min(ids) < n / 2 < max(ids)

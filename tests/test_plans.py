@@ -222,11 +222,11 @@ def test_staged_shingles_projection_not_collapsed(spark, sf_dir):
     HOF re-runs the regexp split per array element — O(T²) per doc
     (measured 7x on the sf0.1 shingle pass)."""
     from mito_spark.engine import load_table
-    from mito_spark.operators.dedup import _staged_shingles
+    from mito_spark.operators.dedup import staged_shingles
 
     docs = load_table(spark, sf_dir, "documents")
     opt = (
-        _staged_shingles(docs, 3)
+        staged_shingles(docs, 3)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -548,9 +548,9 @@ def test_unigram_lm_segmentation_is_jvm_expression_folds(spark, sf_dir):
     per-round segmentation plan is projections over the checkpointed
     word-TYPE scan plus ONE broadcast of the 1-row model map — zero
     Python nodes, zero shuffles, no join but the model broadcast."""
-    from mito_spark.operators.text import _ulm_lp, _ulm_seed, _ulm_seg, _ulm_words
+    from mito_spark.operators.text import ULM_MAXW, _ulm_lp, _ulm_seed, _ulm_seg, _word_types
 
-    words = _ulm_words(spark, sf_dir)
+    words = _word_types(spark, sf_dir, ULM_MAXW).localCheckpoint()
     vocab, _chars = _ulm_seed(words)
     lp = _ulm_lp(vocab.localCheckpoint()).localCheckpoint()
     plan = _plan(_ulm_seg(words, lp))
@@ -803,3 +803,50 @@ def test_qc_calibration_has_no_global_sort_window(spark, sf_dir):
             # unpartitioned window: only legal over the bounded
             # pid-counts frame
             assert first.startswith("pid"), spec
+
+
+
+# Spark jobs one more merge round adds; the same at 2, 4 and 16 cores,
+# and the same as before the five round loops became text._merge_rounds
+_JOBS_PER_ROUND = {
+    "bpe_learn_merges": 3,
+    "bpe_learn_merges_bytes": 3,
+    "wordpiece_learn": 10,
+    "wordpiece_learn_subword": 9,
+    "tokenizer_compression_curve": 8,
+}
+
+
+@pytest.mark.parametrize("name", list(_JOBS_PER_ROUND))
+def test_merge_round_jobs_pinned(spark, sf_dir, name):
+    """Spark jobs one more merge round adds to each tokenizer trainer
+    (building the DataFrame plus a noop write), so an extra checkpoint
+    or collect in the shared round loop shows up as a diff here. The
+    per-round delta is pinned, not the total: the take(1) probes scale
+    up over partitions, so the total moves with the core count."""
+    from mito_spark.engine import load_table
+    from mito_spark.operators import text
+
+    # the first read of a table runs a one-time listing job; keep it
+    # out of both counts
+    load_table(spark, sf_dir, "documents")
+    sc = spark.sparkContext
+
+    def jobs(rounds: int) -> int:
+        group = f"{name}|rounds{rounds}"
+        sc.setJobGroup(group, group)
+        try:
+            df = getattr(text, name)(spark, sf_dir, rounds=rounds)
+            df.write.format("noop").mode("overwrite").save()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # the count depends on the shuffle width (a test earlier in the run
+    # may have left the shared session at 1), so fix it for the test
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        assert jobs(3) - jobs(2) == _JOBS_PER_ROUND[name]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)

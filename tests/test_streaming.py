@@ -984,7 +984,7 @@ def test_streaming_isotropy_matches_batch_any_order(spark, sf_dir, tmp_path):
 
     from mito_spark.engine import load_table
     from mito_spark.operators.similarity import (
-        _norm,
+        norm,
         embedding_isotropy_report,
     )
     from mito_spark.streaming.stateful import streaming_isotropy
@@ -1017,7 +1017,7 @@ def test_streaming_isotropy_matches_batch_any_order(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(dest)
         .select("label", F.col("embedding").cast("array<double>").alias("x"))
-        .select("label", "x", _norm(F.col("x")).alias("nm"))
+        .select("label", "x", norm(F.col("x")).alias("nm"))
         .where(F.col("nm") > 0)
         .select(
             "label", "nm", F.transform("x", lambda v: v / F.col("nm")).alias("u")
@@ -1127,16 +1127,16 @@ def test_streaming_kmv_matches_batch_and_replay_idempotent(spark, sf_dir, tmp_pa
     from decimal import ROUND_HALF_UP, Decimal
 
     from mito_spark.engine import load_table
-    from mito_spark.operators.dedup import _hash60, _staged_shingles
+    from mito_spark.operators.dedup import hash60, staged_shingles
     from mito_spark.operators.topk import per_key_topk
     from mito_spark.streaming.stateful import kmv_stream_rows, streaming_kmv_distinct
 
     k = 128
     docs = load_table(spark, sf_dir, "documents")
     items = (
-        _staged_shingles(docs, 3, id_col="source")
+        staged_shingles(docs, 3, id_col="source")
         .select("source", F.explode("sh").alias("s"))
-        .select("source", _hash60(F.col("s"), F.lit("kmv")).alias("h"))
+        .select("source", hash60(F.col("s"), F.lit("kmv")).alias("h"))
         .distinct()
     )
     sk = per_key_topk(items, "source", [F.asc("h")], k, rank_name="r")
