@@ -3290,7 +3290,7 @@ CDC_MOD = 64  # boundary when window-hash % CDC_MOD == 0 -> expected
 def _cdc_chunks(docs: DataFrame, window: int = CDC_WINDOW, mod: int = CDC_MOD) -> DataFrame:
     """(doc_id, chunk_idx, chunk): the content-defined chunk frame —
     the single definition consumed by ``cdc_chunk_dedup``'s rollup and
-    the streaming twin's equality tests (``_cdc_boundaries_py`` is its
+    the streaming twin's equality tests (``cdc_boundaries_py`` is its
     row-local Python mirror for the stream-side chunker). chunk_idx is
     the 0-based position order within the doc.
 
@@ -3362,7 +3362,7 @@ def _cdc_chunks(docs: DataFrame, window: int = CDC_WINDOW, mod: int = CDC_MOD) -
     )
 
 
-def _cdc_boundaries_py(text: str, window: int = CDC_WINDOW, mod: int = CDC_MOD) -> list[str]:
+def cdc_boundaries_py(text: str, window: int = CDC_WINDOW, mod: int = CDC_MOD) -> list[str]:
     """Row-local Python mirror of ``_cdc_chunks``'s boundary rule (for
     the streaming chunker): hashlib md5's first 15 hex chars as a
     60-bit int — the exact ``hash60`` construction — tested equal to

@@ -468,7 +468,7 @@ EWMA_ALPHA = "0.3"
 EWMA_FOLD_MAX_DAYS = 1024
 
 
-def _ewma_decimal_literals(alpha: str) -> tuple[str, str]:
+def ewma_decimal_literals(alpha: str) -> tuple[str, str]:
     """Validate and derive the (α, 1−α) decimal literal strings. Both
     are evaluated as DECIMAL(5,4) (ADVICE r7 #2): a decimal(5,4) ×
     decimal(28,9) product has precision 33 / scale 13 — inside Spark's
@@ -585,7 +585,7 @@ def _ewma_over_daily(
     within ``fold_max_days``, the linear Python-decimal kernel beyond
     it (probe-once, so the common all-short case keeps the single-
     projection plan)."""
-    a_str, b_str = _ewma_decimal_literals(alpha)
+    a_str, b_str = ewma_decimal_literals(alpha)
     a_lit = F.lit(a_str).cast("decimal(5,4)")
     b_lit = F.lit(b_str).cast("decimal(5,4)")
     arr = daily.groupBy("user_id").agg(
@@ -718,7 +718,7 @@ WITH daily AS (
 
 
 def _ewma_sql(alpha: str = EWMA_ALPHA) -> str:
-    a, b = _ewma_decimal_literals(alpha)
+    a, b = ewma_decimal_literals(alpha)
     return f"""
 WITH daily AS (
   SELECT user_id, CAST(ts AS DATE) AS day,

@@ -209,7 +209,7 @@ FROM sharded
 WEIGHTED_SAMPLE_K = 20
 # 2^60 — exactly representable as a double, so u = (v+1)/2^60 is an
 # exact binary scaling of the 15-hex-digit md5 integer on both engines
-_U_DENOM = "1152921504606846976.0"
+U_DENOM = "1152921504606846976.0"
 
 
 def weighted_sample_es(
@@ -256,7 +256,7 @@ def weighted_sample_es(
         16,
         10,
     ).cast("bigint")
-    u = (v.cast("double") + 1) / F.lit(float(_U_DENOM))
+    u = (v.cast("double") + 1) / F.lit(float(U_DENOM))
     es_key = F.round(F.log(u) / F.col("n_chars").cast("double"), 9)
     slim = docs.select("source", "doc_id", "n_chars", es_key.alias("es_key"))
     return per_key_topk(
@@ -272,7 +272,7 @@ WEIGHTED_SAMPLE_SQL = f"""
 WITH cand AS (
   SELECT source, doc_id, n_chars,
          ROUND(ln((CAST(CAST('0x' || substring(md5('wsample:v1:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS DOUBLE) + 1)
-                  / {_U_DENOM})
+                  / {U_DENOM})
                / CAST(n_chars AS DOUBLE), 9) AS es_key
   FROM documents
   WHERE n_chars > 0

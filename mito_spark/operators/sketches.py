@@ -736,14 +736,14 @@ CMS_CALIBRATION_SQL = _cms_sql()
 HLL_P = 12  # register-index bits
 HLL_M = 1 << HLL_P  # 4096 registers
 # w = v >> HLL_P is a (60 - HLL_P) = 48-bit value; rho(w) in [1, 49]
-_HLL_WBITS = 60 - HLL_P
+HLL_WBITS = 60 - HLL_P
 # alpha_m * m^2 * 2^49, folded to ONE double literal in Python so both
 # engines divide the same exact constant by the integer register sum
 # (alpha_4096 = 0.7213 / (1 + 1.079/m), Flajolet et al. 2007 Fig. 3)
-_HLL_EST_NUM = (0.7213 / (1.0 + 1.079 / HLL_M)) * float(HLL_M) * float(HLL_M) * float(
-    1 << (_HLL_WBITS + 1)
+HLL_EST_NUM = (0.7213 / (1.0 + 1.079 / HLL_M)) * float(HLL_M) * float(HLL_M) * float(
+    1 << (HLL_WBITS + 1)
 )
-_HLL_LIN_THRESHOLD = 2.5 * HLL_M  # small-range correction cut
+HLL_LIN_THRESHOLD = 2.5 * HLL_M  # small-range correction cut
 # yardstick bound: above this many TOTAL items, the calibration
 # restricts BOTH legs to a 1/rate hash subdomain so the exact
 # COUNT(DISTINCT) leg never shuffles unbounded distinct types
@@ -911,8 +911,8 @@ def hll_calibration_report(
 
     v = hash60(F.col("item"), F.lit("hll"))
     w = F.shiftright(v, HLL_P)
-    rho = F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
-        F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
+    rho = F.when(w == 0, F.lit(HLL_WBITS + 1)).otherwise(
+        F.lit(HLL_WBITS + 1) - F.length(F.bin(w))
     )
     regs = (
         dist.select("domain", v.bitwiseAND(F.lit(HLL_M - 1)).alias("idx"), rho.alias("rho"))
@@ -923,14 +923,14 @@ def hll_calibration_report(
     # function form accepts the column-valued shift
     sums = regs.select(
         "domain",
-        F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_WBITS + 1} - mreg)").alias("term"),
+        F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_WBITS + 1} - mreg)").alias("term"),
     ).groupBy("domain").agg(
         F.sum("term").alias("s_ne"), F.count(F.lit(1)).alias("n_reg")
     )
     v_empty = (F.lit(HLL_M) - F.col("n_reg")).cast("bigint")
-    s_total = F.col("s_ne") + v_empty * F.lit(1 << (_HLL_WBITS + 1)).cast("bigint")
-    e_raw = F.lit(_HLL_EST_NUM) / s_total.cast("double")
-    lin = (e_raw <= F.lit(_HLL_LIN_THRESHOLD)) & (v_empty > 0)
+    s_total = F.col("s_ne") + v_empty * F.lit(1 << (HLL_WBITS + 1)).cast("bigint")
+    e_raw = F.lit(HLL_EST_NUM) / s_total.cast("double")
+    lin = (e_raw <= F.lit(HLL_LIN_THRESHOLD)) & (v_empty > 0)
     est = F.when(
         lin,
         F.round(
@@ -966,7 +966,7 @@ def hll_calibration_report(
 
 
 def _hll_sql() -> str:
-    wb1 = _HLL_WBITS + 1
+    wb1 = HLL_WBITS + 1
     v = "CAST('0x' || substr(md5('hll:' || item), 1, 15) AS BIGINT)"
     return rf"""
 WITH rawtok AS (
@@ -997,12 +997,12 @@ WITH rawtok AS (
   FROM regs GROUP BY domain
 ), scored AS (
   SELECT domain, {HLL_M} - n_reg AS v_empty,
-         {_HLL_EST_NUM!r} / CAST(s_ne + ({HLL_M} - n_reg) * (1::BIGINT << {wb1}) AS DOUBLE) AS e_raw
+         {HLL_EST_NUM!r} / CAST(s_ne + ({HLL_M} - n_reg) * (1::BIGINT << {wb1}) AS DOUBLE) AS e_raw
   FROM sums
 ), report AS (
   SELECT domain, v_empty,
-         CASE WHEN e_raw <= {_HLL_LIN_THRESHOLD!r} AND v_empty > 0 THEN 'linear' ELSE 'raw' END AS branch,
-         CASE WHEN e_raw <= {_HLL_LIN_THRESHOLD!r} AND v_empty > 0
+         CASE WHEN e_raw <= {HLL_LIN_THRESHOLD!r} AND v_empty > 0 THEN 'linear' ELSE 'raw' END AS branch,
+         CASE WHEN e_raw <= {HLL_LIN_THRESHOLD!r} AND v_empty > 0
               THEN ROUND({float(HLL_M)!r} * ROUND(ln({float(HLL_M)!r} / CAST(v_empty AS DOUBLE)), 9), 6)
               ELSE ROUND(e_raw, 6) END AS n_hll
   FROM scored
@@ -1034,8 +1034,8 @@ def hll_distinct_by(df: DataFrame, key_col: str, item_col: str) -> DataFrame:
 
     v = hash60(F.col(item_col), F.lit("hll"))
     w = F.shiftright(v, HLL_P)
-    rho = F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
-        F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
+    rho = F.when(w == 0, F.lit(HLL_WBITS + 1)).otherwise(
+        F.lit(HLL_WBITS + 1) - F.length(F.bin(w))
     )
     regs = (
         df.select(F.col(key_col).alias("k"), v.bitwiseAND(F.lit(HLL_M - 1)).alias("idx"), rho.alias("rho"))
@@ -1044,12 +1044,12 @@ def hll_distinct_by(df: DataFrame, key_col: str, item_col: str) -> DataFrame:
     )
     sums = regs.select(
         "k",
-        F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_WBITS + 1} - mreg)").alias("term"),
+        F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_WBITS + 1} - mreg)").alias("term"),
     ).groupBy("k").agg(F.sum("term").alias("s_ne"), F.count(F.lit(1)).alias("n_reg"))
     v_empty = (F.lit(HLL_M) - F.col("n_reg")).cast("bigint")
-    s_total = F.col("s_ne") + v_empty * F.lit(1 << (_HLL_WBITS + 1)).cast("bigint")
-    e_raw = F.lit(_HLL_EST_NUM) / s_total.cast("double")
-    lin = (e_raw <= F.lit(_HLL_LIN_THRESHOLD)) & (v_empty > 0)
+    s_total = F.col("s_ne") + v_empty * F.lit(1 << (HLL_WBITS + 1)).cast("bigint")
+    e_raw = F.lit(HLL_EST_NUM) / s_total.cast("double")
+    lin = (e_raw <= F.lit(HLL_LIN_THRESHOLD)) & (v_empty > 0)
     est = F.when(
         lin,
         F.round(

@@ -1261,7 +1261,13 @@ def _bpe_learn_chain(rounds: int = BPE_ROUNDS) -> str:
     per round a pair-count CTE, an argmax CTE, and a list_reduce merge
     application (the greedy fold, with the merge row CROSS JOINed in —
     DuckDB lambdas cannot hold subqueries). Ends at t{rounds}, the
-    fully encoded per-doc token arrays."""
+    fully encoded per-doc token arrays. Like the WordPiece chain,
+    t{r} carries the empty-argmax fallback (rows pass through unmerged
+    when no pair is left), so an early stop keeps the last encoded
+    state as the Spark loop's ``break`` does. t{r} and m{r} are
+    MATERIALIZED because the fallback reads each a second time: DuckDB
+    inlines a plain CTE per reference, and the chain's cost then
+    doubles with every round."""
     parts = [
         r"""
 WITH t0 AS (
@@ -1277,9 +1283,9 @@ WITH t0 AS (
   FROM (SELECT unnest(list_transform(range(1, len(toks)), i -> [toks[i], toks[i+1]])) AS p
         FROM {prev} WHERE len(toks) >= 2)
   GROUP BY 1, 2
-), m{r} AS (
+), m{r} AS MATERIALIZED (
   SELECT {r} AS round, a, b, n FROM c{r} ORDER BY n DESC, a, b LIMIT 1
-), t{r} AS (
+), t{r} AS MATERIALIZED (
   SELECT doc_id,
          CASE WHEN len(toks) = 0 THEN toks
               ELSE list_reduce(
@@ -1289,6 +1295,9 @@ WITH t0 AS (
                                  ELSE acc || t END)
          END AS toks
   FROM {prev} CROSS JOIN m{r}
+  UNION ALL
+  SELECT doc_id, toks FROM {prev}
+  WHERE NOT EXISTS (SELECT 1 FROM m{r})
 )""")
     return "".join(parts)
 
@@ -1441,7 +1450,8 @@ def _bpe_bytes_chain(rounds: int = BPE_BYTES_ROUNDS) -> str:
     fertility oracles: per round a frequency-weighted pair-count CTE,
     an argmax CTE, and the list_reduce merge application over the
     word-TYPE table, carrying the word key ``w`` through so consumers
-    can join piece counts back to word usage. Ends at t{rounds}."""
+    can join piece counts back to word usage. Ends at t{rounds}; t{r}
+    carries the same empty-argmax fallback as ``_bpe_learn_chain``."""
     parts = [
         r"""
 WITH words AS (
@@ -1460,9 +1470,9 @@ WITH words AS (
   FROM (SELECT wc, unnest(list_transform(range(1, len(toks)), i -> [toks[i], toks[i+1]])) AS p
         FROM {prev} WHERE len(toks) >= 2)
   GROUP BY 1, 2
-), m{r} AS (
+), m{r} AS MATERIALIZED (
   SELECT {r} AS round, a, b, n FROM c{r} ORDER BY n DESC, a, b LIMIT 1
-), t{r} AS (
+), t{r} AS MATERIALIZED (
   SELECT w, wc,
          CASE WHEN len(toks) = 0 THEN toks
               ELSE list_reduce(
@@ -1472,6 +1482,9 @@ WITH words AS (
                                  ELSE acc || t END)
          END AS toks
   FROM {prev} CROSS JOIN m{r}
+  UNION ALL
+  SELECT w, wc, toks FROM {prev}
+  WHERE NOT EXISTS (SELECT 1 FROM m{r})
 )""")
     return "".join(parts)
 
@@ -2860,7 +2873,7 @@ def _wp_chain(rounds: int = WP_ROUNDS) -> str:
     exact twin of ``_wp_floor``), the floored candidate CTE, a
     unigram-count CTE, a likelihood-argmax CTE (the same IEEE-double
     ordering as the Spark loop), and the shared list_reduce merge
-    fold. Unlike the BPE chain, t{r} carries an EMPTY-ARGMAX FALLBACK
+    fold. Like the BPE chains, t{r} carries an EMPTY-ARGMAX FALLBACK
     branch (rows pass through unmerged when no candidate survives the
     floor), so an early trainer stop leaves the chain holding the last
     encoded state exactly like the Spark loop's ``break`` — the learn

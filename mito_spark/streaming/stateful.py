@@ -1,11 +1,28 @@
 """Per-key continuation state on the executor state store.
 
 The reference's continuation protocol (want_more + cursor fields,
-/root/reference/mito.go:186-204) has a single global cursor because it
-evaluates one state document at a time. The distributed generalization
-is a cursor PER KEY, kept in Spark's state store — this is the
-"arbitrary stateful processing" tier promised in
-mito_spark.streaming.continuation's docstring.
+mito.go:186-204) has a single global cursor because it evaluates one
+state document at a time. The distributed generalization is a cursor
+PER KEY, kept in Spark's state store — this is the "arbitrary stateful
+processing" tier promised in mito_spark.streaming.continuation's
+docstring.
+
+Every stream twin here is one ``keyed_fold``. The harness owns the
+applyInPandasWithState mechanism — state read, Arrow-chunk buffering,
+the one sort, state write and the output frame — and a twin supplies
+only its fold over one micro-batch of one key::
+
+    fold(key, st, rows) -> (new_state, out_rows)
+
+- ``key`` is the group-key tuple, in ``keys`` order;
+- ``st`` is the stored state tuple, or the twin's ``init`` the first
+  time the key is seen (a fold never mutates ``st`` in place: ``init``
+  is shared by every new key);
+- ``rows`` is ONE pandas frame with all of the key's rows in this
+  micro-batch, sorted by ``order`` when the twin's result is
+  order-defined, in arrival order for the order-free merges;
+- ``new_state`` is stored as is; ``out_rows`` is a list of tuples in
+  the output schema's field order, and an empty list emits nothing.
 
 Scale posture: state lives in the executor state-store backend
 (RocksDB on a real cluster), partitioned by key — the driver never
@@ -16,12 +33,18 @@ keys), independent of stream length.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import heapq
+import math
+from bisect import bisect_left
+from collections.abc import Callable, Iterator
+from decimal import ROUND_HALF_UP, Decimal, localcontext
+from itertools import accumulate
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -33,6 +56,59 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+
+def keyed_fold(
+    df: DataFrame,
+    keys: list[str],
+    fold: Callable[[tuple, Any, pd.DataFrame], tuple[Any, list[tuple]]],
+    *,
+    init: Any,
+    state: StructType,
+    output: StructType,
+    mode: str,
+    order: str | list[str] | None = None,
+) -> DataFrame:
+    """Group ``df`` by ``keys`` and run ``fold`` once per key and
+    micro-batch with the key's state carried in the state store (no
+    timeout). See the module docstring for the fold contract."""
+    names = output.fieldNames()
+
+    def apply(key, chunks, gs):
+        # a key's micro-batch arrives as MULTIPLE Arrow chunks with NO
+        # cross-chunk ordering guarantee: buffer all chunks and sort
+        # once — sorting per chunk would replay rows out of order
+        # whenever a key's batch exceeds maxRecordsPerBatch (~10k rows),
+        # silently diverging from the batch twin
+        rows = pd.concat(chunks, ignore_index=True)
+        if order is not None:
+            rows = rows.sort_values(order)
+        new_state, out = fold(key, gs.get if gs.exists else init, rows)
+        gs.update(new_state)
+        if out:
+            yield pd.DataFrame(out, columns=names)
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        apply,
+        outputStructType=output,
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _half_up(x: float, dp: int) -> float:
+    """``ROUND(x, dp)`` as both engines compute it on a double: HALF_UP
+    on the SHORTEST decimal repr of ``x``."""
+    return float(Decimal(repr(float(x))).quantize(Decimal(f"1e-{dp}"), ROUND_HALF_UP))
+
+
+def _val4(v: float) -> int:
+    """``CAST(v AS DECIMAL(18,4))`` as integer ten-thousandths: HALF_UP
+    on the EXACT binary expansion of the double (not its shortest repr,
+    which is what ``_half_up`` rounds)."""
+    return int(Decimal(float(v)).quantize(Decimal("0.0001"), ROUND_HALF_UP) * 10_000)
+
 
 CURSOR_OUTPUT_SCHEMA = StructType(
     [
@@ -56,35 +132,6 @@ CURSOR_STATE_SCHEMA = StructType(
 )
 
 
-def _cursor_step(
-    key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """One micro-batch update for one key: merge the batch's events
-    into the cursor, emit the refreshed cursor row (update mode)."""
-    n, first_us, last_us, total = (
-        state.get if state.exists else (0, None, None, 0.0)
-    )
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        ts_us = pdf["ts"].astype("int64") // 1000  # pandas ns → µs
-        n += len(pdf)
-        b_first, b_last = int(ts_us.min()), int(ts_us.max())
-        first_us = b_first if first_us is None else min(first_us, b_first)
-        last_us = b_last if last_us is None else max(last_us, b_last)
-        total += float(pdf["value"].sum())
-    state.update((n, first_us, last_us, total))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "first_ts": [pd.Timestamp(first_us, unit="us")],
-            "last_ts": [pd.Timestamp(last_us, unit="us")],
-            "total_value": [total],
-        }
-    )
-
-
 def per_key_cursor(events: DataFrame) -> DataFrame:
     """Streaming per-key cursor: for each user, a continuously-updated
     {n_events, first_ts, last_ts, total_value} — the reference's
@@ -95,12 +142,20 @@ def per_key_cursor(events: DataFrame) -> DataFrame:
     micro-batch is the `want_more` re-entry: previous state is the
     carried cursor, the batch is the new page.
     """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _cursor_step,
-        outputStructType=CURSOR_OUTPUT_SCHEMA,
-        stateStructType=CURSOR_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+
+    def fold(key, st, rows):
+        n, first_us, last_us, total = st
+        ts_us = rows["ts"].astype("int64") // 1000  # pandas ns → µs
+        b_first, b_last = int(ts_us.min()), int(ts_us.max())
+        first_us = b_first if first_us is None else min(first_us, b_first)
+        last_us = b_last if last_us is None else max(last_us, b_last)
+        n, total = n + len(rows), total + float(rows["value"].sum())
+        ts = pd.Timestamp(first_us, unit="us"), pd.Timestamp(last_us, unit="us")
+        return (n, first_us, last_us, total), [(key[0], n, *ts, total)]
+
+    return keyed_fold(
+        events, ["user_id"], fold, init=(0, None, None, 0.0),
+        state=CURSOR_STATE_SCHEMA, output=CURSOR_OUTPUT_SCHEMA, mode="update",
     )
 
 
@@ -133,45 +188,6 @@ ANOMALY_STATE_SCHEMA = StructType(
 )
 
 
-def _anomaly_step_factory(z: float, min_seen: int):
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        out_rows = []
-        # buffer ALL Arrow chunks before sorting: a key's micro-batch
-        # data arrives as multiple chunks with NO cross-chunk ordering
-        # guarantee — sorting per chunk would replay events out of
-        # order whenever a key's batch exceeds one chunk (~10k rows),
-        # silently diverging from the batch twin
-        buf = []
-        for pdf in batches:
-            if not pdf.empty:
-                buf.append(pdf[["event_id", "value"]])
-        if buf:
-            allrows = pd.concat(buf, ignore_index=True).sort_values("event_id")
-            for ev_id, v in zip(allrows["event_id"], allrows["value"]):
-                if n >= min_seen:
-                    std = (m2 / n) ** 0.5
-                    if std > 0 and abs(float(v) - mean) > z * std:
-                        out_rows.append(
-                            (key[0], int(ev_id), float(v),
-                             (float(v) - mean) / std, n)
-                        )
-                # Welford update AFTER the test: an outlier is judged
-                # against the past, then absorbed
-                n += 1
-                d = float(v) - mean
-                mean += d / n
-                m2 += d * (float(v) - mean)
-        state.update((n, mean, m2))
-        yield pd.DataFrame(
-            out_rows, columns=["user_id", "event_id", "value", "zscore", "n_seen"]
-        )
-
-    return step
-
-
 def streaming_anomalies(
     events: DataFrame, z: float = 3.0, min_seen: int = 10
 ) -> DataFrame:
@@ -187,12 +203,27 @@ def streaming_anomalies(
     judges against the full-population moments; this judges each
     event against its prefix — the streaming-correct definition (no
     look-ahead). State is O(keys)·3 doubles, driver sees nothing."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _anomaly_step_factory(z, min_seen),
-        outputStructType=ANOMALY_OUTPUT_SCHEMA,
-        stateStructType=ANOMALY_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+
+    def fold(key, st, rows):
+        n, mean, m2 = st
+        out = []
+        for ev_id, v in zip(rows["event_id"], rows["value"]):
+            v = float(v)
+            if n >= min_seen:
+                std = (m2 / n) ** 0.5
+                if std > 0 and abs(v - mean) > z * std:
+                    out.append((key[0], int(ev_id), v, (v - mean) / std, n))
+            # Welford update AFTER the test: an outlier is judged
+            # against the past, then absorbed
+            n += 1
+            d = v - mean
+            mean += d / n
+            m2 += d * (v - mean)
+        return (n, mean, m2), out
+
+    return keyed_fold(
+        events, ["user_id"], fold, init=(0, 0.0, 0.0), state=ANOMALY_STATE_SCHEMA,
+        output=ANOMALY_OUTPUT_SCHEMA, mode="append", order="event_id",
     )
 
 
@@ -207,38 +238,6 @@ RETRANSMIT_OUTPUT_SCHEMA = StructType(
 
 # one scalar of state per key: the previous raw event's epoch micros
 RETRANSMIT_STATE_SCHEMA = StructType([StructField("last_us", LongType())])
-
-
-def _retransmit_step_factory(eps_s: float):
-    eps_us = int(eps_s * 1_000_000)
-
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (last_us,) = state.get if state.exists else (None,)
-        out_rows = []
-        # buffer ALL Arrow chunks before sorting (no cross-chunk
-        # ordering guarantee — see _anomaly_step_factory)
-        buf = [pdf[["event_id", "ts"]] for pdf in batches if not pdf.empty]
-        if buf:
-            allrows = pd.concat(buf, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for ev_id, ts in zip(allrows["event_id"], allrows["ts"]):
-                us = int(pd.Timestamp(ts).value // 1_000)
-                if last_us is not None and us - last_us <= eps_us:
-                    out_rows.append(
-                        (key[0], key[1], int(ev_id), round((us - last_us) / 1e6, 6))
-                    )
-                # LAG semantics (match the batch twin): the state
-                # advances to every raw event, kept or dropped
-                last_us = us
-        state.update((last_us,))
-        yield pd.DataFrame(
-            out_rows, columns=["user_id", "event_type", "event_id", "gap_s"]
-        )
-
-    return step
 
 
 def streaming_retransmit_dedup(events: DataFrame, eps_s: float = 900.0) -> DataFrame:
@@ -261,12 +260,24 @@ def streaming_retransmit_dedup(events: DataFrame, eps_s: float = 900.0) -> DataF
     State is 8 bytes per key, partitioned in the state store; a
     micro-batch shuffles only its own keys. The manifest stream is the
     anti-join feed a downstream keep-side consumer subtracts."""
-    return events.groupBy("user_id", "event_type").applyInPandasWithState(
-        _retransmit_step_factory(eps_s),
-        outputStructType=RETRANSMIT_OUTPUT_SCHEMA,
-        stateStructType=RETRANSMIT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    eps_us = int(eps_s * 1_000_000)
+
+    def fold(key, st, rows):
+        (last_us,) = st
+        out = []
+        for ev_id, ts in zip(rows["event_id"], rows["ts"]):
+            us = int(pd.Timestamp(ts).value // 1_000)
+            if last_us is not None and us - last_us <= eps_us:
+                out.append((key[0], key[1], int(ev_id), round((us - last_us) / 1e6, 6)))
+            # LAG semantics (match the batch twin): the state advances
+            # to every raw event, kept or dropped
+            last_us = us
+        return (last_us,), out
+
+    return keyed_fold(
+        events, ["user_id", "event_type"], fold, init=(None,),
+        state=RETRANSMIT_STATE_SCHEMA, output=RETRANSMIT_OUTPUT_SCHEMA,
+        mode="append", order=["ts", "event_id"],
     )
 
 
@@ -291,62 +302,6 @@ ROLLING_STATE_SCHEMA = StructType(
 )
 
 
-def _rolling_step_factory(days: int):
-    span_us = days * 86400 * 1_000_000
-
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        from decimal import ROUND_HALF_UP, Decimal
-
-        if state.exists:
-            us_list, val4_list = list(state.get[0]), list(state.get[1])
-        else:
-            us_list, val4_list = [], []
-        # buffer ALL Arrow chunks before sorting (no cross-chunk
-        # ordering guarantee — see _anomaly_step_factory)
-        buf = [pdf[["event_id", "ts", "value"]] for pdf in batches if not pdf.empty]
-        out_rows = []
-        if buf:
-            allrows = pd.concat(buf, ignore_index=True)
-            allrows = allrows.assign(
-                us=allrows["ts"].astype("int64") // 1000  # pandas ns → µs
-            ).sort_values(["us", "event_id"])
-            # process per distinct timestamp: a RANGE frame is
-            # peer-inclusive, so every event at a timestamp sees ALL
-            # its equal-ts peers — add the whole peer group to the
-            # buffer first, then emit one shared (count, sum) for it
-            for us, grp in allrows.groupby("us", sort=True):
-                us = int(us)
-                for v in grp["value"]:
-                    us_list.append(us)
-                    # mirror the batch twin's CAST(value AS DECIMAL(18,4)):
-                    # exact binary expansion of the double, HALF_UP at 4dp
-                    q = Decimal(float(v)).quantize(
-                        Decimal("0.0001"), rounding=ROUND_HALF_UP
-                    )
-                    val4_list.append(int(q * 10_000))
-                lo = us - span_us  # frame is [us - span, us] inclusive
-                drop = 0
-                while drop < len(us_list) and us_list[drop] < lo:
-                    drop += 1
-                if drop:
-                    us_list = us_list[drop:]
-                    val4_list = val4_list[drop:]
-                n = len(us_list)
-                total = float(Decimal(sum(val4_list)) / 10_000)
-                ts_out = pd.Timestamp(us, unit="us")
-                for ev in grp["event_id"]:
-                    out_rows.append((int(ev), key[0], ts_out, n, total))
-        state.update((us_list, val4_list))
-        yield pd.DataFrame(
-            out_rows,
-            columns=["event_id", "user_id", "ts", "n_events_trailing", "value_trailing"],
-        )
-
-    return step
-
-
 def streaming_rolling_window(events: DataFrame, days: int = 7) -> DataFrame:
     """Streaming twin of ``events.events_rolling_window`` — the
     feature-store materialization as a stream: for every incoming
@@ -369,12 +324,35 @@ def streaming_rolling_window(events: DataFrame, days: int = 7) -> DataFrame:
     all peers at once). Out-of-order feeds need a watermark +
     sort-front-stage, or the batch operator over a replayed log; the
     equality test drives 3 in-order micro-batches."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _rolling_step_factory(days),
-        outputStructType=ROLLING_OUTPUT_SCHEMA,
-        stateStructType=ROLLING_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    span_us = days * 86400 * 1_000_000
+
+    def fold(key, st, rows):
+        us_list, val4_list = list(st[0]), list(st[1])
+        out = []
+        # process per distinct timestamp: a RANGE frame is
+        # peer-inclusive, so every event at a timestamp sees ALL its
+        # equal-ts peers — add the whole peer group to the buffer
+        # first, then emit one shared (count, sum) for it
+        us_key = rows["ts"].astype("int64") // 1000  # pandas ns → µs
+        for us, grp in rows.groupby(us_key, sort=True):
+            us = int(us)
+            us_list += [us] * len(grp)
+            # mirror the batch twin's CAST(value AS DECIMAL(18,4))
+            val4_list += [_val4(v) for v in grp["value"]]
+            lo = us - span_us  # frame is [us - span, us] inclusive
+            drop = 0
+            while drop < len(us_list) and us_list[drop] < lo:
+                drop += 1
+            if drop:
+                us_list, val4_list = us_list[drop:], val4_list[drop:]
+            n, total = len(us_list), float(Decimal(sum(val4_list)) / 10_000)
+            ts_out = pd.Timestamp(us, unit="us")
+            out += [(int(ev), key[0], ts_out, n, total) for ev in grp["event_id"]]
+        return (us_list, val4_list), out
+
+    return keyed_fold(
+        events, ["user_id"], fold, init=([], []), state=ROLLING_STATE_SCHEMA,
+        output=ROLLING_OUTPUT_SCHEMA, mode="append", order=["ts", "event_id"],
     )
 
 
@@ -401,71 +379,28 @@ EWMA_STATE_SCHEMA = StructType(
 )
 
 
-def _ewma_step_factory(a_str: str, b_str: str):
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        from decimal import ROUND_HALF_UP, Decimal, localcontext
+def _day_sums(rows: pd.DataFrame):
+    """(epoch day, exact DECIMAL(18,4) value sum in integer
+    ten-thousandths) for each calendar day of ``rows.ts``, ascending."""
+    for day, grp in rows.groupby(rows["ts"].dt.normalize(), sort=True):
+        yield int(day.value // 86_400_000_000_000), sum(_val4(v) for v in grp["value"])
 
-        a, b = Decimal(a_str), Decimal(b_str)
-        q9 = Decimal("1e-9")
-        cur_day, cur_sum4, prev_str = (
-            state.get if state.exists else (None, 0, None)
-        )
-        prev = Decimal(prev_str) if prev_str is not None else None
-        buf = [pdf[["ts", "value"]] for pdf in batches if not pdf.empty]
-        out_rows = []
-        if buf:
-            allrows = pd.concat(buf, ignore_index=True)
-            days = allrows["ts"].dt.normalize()
-            with localcontext() as ctx:
-                ctx.prec = 60
-                for day, grp in allrows.assign(_day=days).groupby("_day", sort=True):
-                    epoch_day = int(day.value // 86_400_000_000_000)
-                    # mirror the batch CAST(value AS DECIMAL(18,4)):
-                    # exact binary expansion of the double, HALF_UP 4dp
-                    s4 = 0
-                    for v in grp["value"]:
-                        s4 += int(
-                            Decimal(float(v)).quantize(
-                                Decimal("0.0001"), rounding=ROUND_HALF_UP
-                            )
-                            * 10_000
-                        )
-                    if cur_day is None or epoch_day > cur_day:
-                        if cur_day is not None:
-                            # close the open day: its final ewma seeds
-                            # the recurrence for the new day
-                            x = Decimal(cur_sum4) / 10_000
-                            prev = x if prev is None else (
-                                a * x + b * prev
-                            ).quantize(q9, rounding=ROUND_HALF_UP)
-                        cur_day, cur_sum4 = epoch_day, s4
-                    else:
-                        # same open day continuing across micro-batches
-                        # (epoch_day < cur_day would be out-of-order
-                        # arrival — see the docstring contract)
-                        cur_sum4 += s4
-                    x = Decimal(cur_sum4) / 10_000
-                    e = x if prev is None else (a * x + b * prev).quantize(
-                        q9, rounding=ROUND_HALF_UP
-                    )
-                    out_rows.append(
-                        (
-                            key[0],
-                            pd.Timestamp(cur_day * 86_400, unit="s"),
-                            float(x),
-                            float(e),
-                        )
-                    )
-        state.update(
-            (cur_day, cur_sum4, str(prev) if prev is not None else None)
-        )
-        yield pd.DataFrame(
-            out_rows, columns=["user_id", "day", "daily_value", "ewma"]
-        )
 
-    return step
+def _ewma_step(a: Decimal, b: Decimal, x: Decimal, prev: Decimal | None) -> Decimal:
+    """One recurrence step ``a·x + b·prev``, HALF_UP at 9dp in a
+    60-digit context (the products stay exact); the first day seeds
+    the recurrence with ``x``."""
+    if prev is None:
+        return x
+    with localcontext(prec=60):
+        return (a * x + b * prev).quantize(Decimal("1e-9"), ROUND_HALF_UP)
+
+
+def _ewma_row(key: tuple, a: Decimal, b: Decimal, day: int, sum4: int, prev):
+    """The open day's output row: its exact daily sum and its ewma."""
+    x = Decimal(sum4) / 10_000
+    ts = pd.Timestamp(day * 86_400, unit="s")
+    return (key[0], ts, float(x), float(_ewma_step(a, b, x, prev)))
 
 
 def streaming_user_ewma(events: DataFrame, alpha: str = "0.3") -> DataFrame:
@@ -490,88 +425,33 @@ def streaming_user_ewma(events: DataFrame, alpha: str = "0.3") -> DataFrame:
     CLOSED earlier day would need its day re-opened and every later
     ewma recomputed (the batch operator on a replayed log covers that
     case). State is O(keys)·3 scalars, independent of stream length."""
-    from mito_spark.operators.events import _ewma_decimal_literals
+    from mito_spark.operators.events import ewma_decimal_literals
 
-    a_str, b_str = _ewma_decimal_literals(alpha)
-    return events.groupBy("user_id").applyInPandasWithState(
-        _ewma_step_factory(a_str, b_str),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    a, b = map(Decimal, ewma_decimal_literals(alpha))
+
+    def fold(key, st, rows):
+        cur_day, cur_sum4, prev = st
+        prev = None if prev is None else Decimal(prev)
+        out = []
+        for day, s4 in _day_sums(rows):
+            if cur_day is None or day > cur_day:
+                if cur_day is not None:
+                    # close the open day: its final ewma seeds the
+                    # recurrence for the new day
+                    prev = _ewma_step(a, b, Decimal(cur_sum4) / 10_000, prev)
+                cur_day, cur_sum4 = day, s4
+            else:
+                # same open day continuing across micro-batches (day <
+                # cur_day would be out-of-order arrival — see the
+                # docstring contract)
+                cur_sum4 += s4
+            out.append(_ewma_row(key, a, b, cur_day, cur_sum4, prev))
+        return (cur_day, cur_sum4, None if prev is None else str(prev)), out
+
+    return keyed_fold(
+        events, ["user_id"], fold, init=(None, 0, None), state=EWMA_STATE_SCHEMA,
+        output=EWMA_OUTPUT_SCHEMA, mode="update",
     )
-
-
-def _ewma_calendar_step_factory(a_str: str, b_str: str):
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        from decimal import ROUND_HALF_UP, Decimal, localcontext
-
-        a, b = Decimal(a_str), Decimal(b_str)
-        q9 = Decimal("1e-9")
-        cur_day, cur_sum4, prev_str = (
-            state.get if state.exists else (None, 0, None)
-        )
-        prev = Decimal(prev_str) if prev_str is not None else None
-        buf = [pdf[["ts", "value"]] for pdf in batches if not pdf.empty]
-        out_rows = []
-        if buf:
-            allrows = pd.concat(buf, ignore_index=True)
-            days = allrows["ts"].dt.normalize()
-            with localcontext() as ctx:
-                ctx.prec = 60
-                for day, grp in allrows.assign(_day=days).groupby("_day", sort=True):
-                    epoch_day = int(day.value // 86_400_000_000_000)
-                    s4 = 0
-                    for v in grp["value"]:
-                        s4 += int(
-                            Decimal(float(v)).quantize(
-                                Decimal("0.0001"), rounding=ROUND_HALF_UP
-                            )
-                            * 10_000
-                        )
-                    if cur_day is None:
-                        cur_day, cur_sum4 = epoch_day, s4
-                    elif epoch_day > cur_day:
-                        # close the open day, then DECAY-AND-EMIT every
-                        # calendar gap day up to the new one (x = 0):
-                        # this is the spine the batch operator joins in
-                        x = Decimal(cur_sum4) / 10_000
-                        prev = x if prev is None else (
-                            a * x + b * prev
-                        ).quantize(q9, rounding=ROUND_HALF_UP)
-                        for g in range(cur_day + 1, epoch_day):
-                            e = (a * Decimal(0) + b * prev).quantize(
-                                q9, rounding=ROUND_HALF_UP
-                            )
-                            out_rows.append(
-                                (key[0], pd.Timestamp(g * 86_400, unit="s"), 0.0, float(e))
-                            )
-                            prev = e
-                        cur_day, cur_sum4 = epoch_day, s4
-                    else:
-                        cur_sum4 += s4
-                    x = Decimal(cur_sum4) / 10_000
-                    e = x if prev is None else (a * x + b * prev).quantize(
-                        q9, rounding=ROUND_HALF_UP
-                    )
-                    out_rows.append(
-                        (
-                            key[0],
-                            pd.Timestamp(cur_day * 86_400, unit="s"),
-                            float(x),
-                            float(e),
-                        )
-                    )
-        state.update(
-            (cur_day, cur_sum4, str(prev) if prev is not None else None)
-        )
-        yield pd.DataFrame(
-            out_rows, columns=["user_id", "day", "daily_value", "ewma"]
-        )
-
-    return step
 
 
 def streaming_user_ewma_calendar(
@@ -593,15 +473,34 @@ def streaming_user_ewma_calendar(
     twin; the LAST update-mode row per (user, day) equals the batch
     operator exactly (batch-vs-stream equality pytest-proven over
     staggered micro-batches, gap days included)."""
-    from mito_spark.operators.events import _ewma_decimal_literals
+    from mito_spark.operators.events import ewma_decimal_literals
 
-    a_str, b_str = _ewma_decimal_literals(alpha)
-    return events.groupBy("user_id").applyInPandasWithState(
-        _ewma_calendar_step_factory(a_str, b_str),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    a, b = map(Decimal, ewma_decimal_literals(alpha))
+
+    def fold(key, st, rows):
+        cur_day, cur_sum4, prev = st
+        prev = None if prev is None else Decimal(prev)
+        out = []
+        for day, s4 in _day_sums(rows):
+            if cur_day is None:
+                cur_day, cur_sum4 = day, s4
+            elif day > cur_day:
+                # close the open day, then DECAY-AND-EMIT every
+                # calendar gap day up to the new one (x = 0): this is
+                # the spine the batch operator joins in
+                prev = _ewma_step(a, b, Decimal(cur_sum4) / 10_000, prev)
+                for g in range(cur_day + 1, day):
+                    prev = _ewma_step(a, b, Decimal(0), prev)
+                    out.append((key[0], pd.Timestamp(g * 86_400, unit="s"), 0.0, float(prev)))
+                cur_day, cur_sum4 = day, s4
+            else:
+                cur_sum4 += s4
+            out.append(_ewma_row(key, a, b, cur_day, cur_sum4, prev))
+        return (cur_day, cur_sum4, None if prev is None else str(prev)), out
+
+    return keyed_fold(
+        events, ["user_id"], fold, init=(None, 0, None), state=EWMA_STATE_SCHEMA,
+        output=EWMA_OUTPUT_SCHEMA, mode="update",
     )
 
 
@@ -624,57 +523,6 @@ ES_STATE_SCHEMA = StructType(
         StructField("keys", ArrayType(DoubleType())),
     ]
 )
-
-
-def _es_step_factory(k: int, salt: str):
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import math
-        from decimal import ROUND_HALF_UP, Decimal
-
-        from mito_spark.operators.sampling import _U_DENOM
-
-        if state.exists:
-            doc_ids, ncs, keys = (list(x) for x in state.get)
-        else:
-            doc_ids, ncs, keys = [], [], []
-        pool = {d: (n, e) for d, n, e in zip(doc_ids, ncs, keys)}
-        buf = [pdf[["doc_id", "n_chars"]] for pdf in batches if not pdf.empty]
-        if buf:
-            allrows = pd.concat(buf, ignore_index=True)
-            for d, n in zip(allrows["doc_id"], allrows["n_chars"]):
-                d, n = int(d), int(n)
-                if n <= 0:  # zero weight = zero selection probability
-                    continue
-                # mirror the batch expression tree op-for-op:
-                # (CAST(v AS DOUBLE) + 1) / 2^60, ln, HALF_UP round 9dp
-                v = int(hashlib.md5(f"{salt}:{d}".encode()).hexdigest()[:15], 16)
-                u = (float(v) + 1.0) / float(_U_DENOM)
-                es = float(
-                    Decimal(repr(math.log(u) / float(n))).quantize(
-                        Decimal("1e-9"), rounding=ROUND_HALF_UP
-                    )
-                )
-                pool[d] = (n, es)
-        top = sorted(pool.items(), key=lambda it: (-it[1][1], it[0]))[:k]
-        state.update(
-            (
-                [d for d, _ in top],
-                [n for _, (n, _) in top],
-                [e for _, (_, e) in top],
-            )
-        )
-        yield pd.DataFrame(
-            [
-                (key[0], d, n, e, r)
-                for r, (d, (n, e)) in enumerate(top, start=1)
-            ],
-            columns=["source", "doc_id", "n_chars", "es_key", "es_rank"],
-        )
-
-    return step
 
 
 def streaming_weighted_sample(
@@ -703,20 +551,29 @@ def streaming_weighted_sample(
     batch-vs-stream equality is pytest-pinned across an
     ARBITRARY (non-chronological) 3-way split.
     """
-    from mito_spark.operators.sampling import WEIGHTED_SAMPLE_K
+    from mito_spark.operators.sampling import U_DENOM, WEIGHTED_SAMPLE_K
 
     if k is None:
         k = WEIGHTED_SAMPLE_K
-    return (
-        docs.select("source", "doc_id", "n_chars")
-        .groupBy("source")
-        .applyInPandasWithState(
-            _es_step_factory(k, salt),
-            outputStructType=ES_OUTPUT_SCHEMA,
-            stateStructType=ES_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+
+    def fold(key, st, rows):
+        pool = {d: (n, e) for d, n, e in zip(*st)}
+        for d, n in zip(rows["doc_id"], rows["n_chars"]):
+            d, n = int(d), int(n)
+            if n <= 0:  # zero weight = zero selection probability
+                continue
+            # mirror the batch expression tree op-for-op:
+            # (CAST(v AS DOUBLE) + 1) / 2^60, ln, HALF_UP round 9dp
+            v = int(hashlib.md5(f"{salt}:{d}".encode()).hexdigest()[:15], 16)
+            u = (float(v) + 1.0) / float(U_DENOM)
+            pool[d] = (n, _half_up(math.log(u) / float(n), 9))
+        top = sorted(pool.items(), key=lambda it: (-it[1][1], it[0]))[:k]
+        new_state = ([d for d, _ in top], [n for _, (n, _) in top], [e for _, (_, e) in top])
+        return new_state, [(key[0], d, n, e, r) for r, (d, (n, e)) in enumerate(top, start=1)]
+
+    return keyed_fold(
+        docs.select("source", "doc_id", "n_chars"), ["source"], fold,
+        init=([], [], []), state=ES_STATE_SCHEMA, output=ES_OUTPUT_SCHEMA, mode="update",
     )
 
 
@@ -740,58 +597,6 @@ HLL_STREAM_STATE_SCHEMA = StructType(
 )
 
 
-def _hll_step_factory():
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import math
-        from decimal import ROUND_HALF_UP, Decimal
-
-        from mito_spark.operators.sketches import (
-            HLL_M,
-            HLL_P,
-            _HLL_EST_NUM,
-            _HLL_LIN_THRESHOLD,
-            _HLL_WBITS,
-        )
-
-        regs: dict = (
-            dict(zip(state.get[0], state.get[1])) if state.exists else {}
-        )
-        for pdf in batches:
-            for it in pdf["item"]:
-                v = int(hashlib.md5(f"hll:{it}".encode()).hexdigest()[:15], 16)
-                idx, w = v & (HLL_M - 1), v >> HLL_P
-                rho = (_HLL_WBITS + 1) if w == 0 else (_HLL_WBITS + 1 - w.bit_length())
-                if rho > regs.get(idx, 0):
-                    regs[idx] = rho
-        state.update((list(regs.keys()), list(regs.values())))
-        s_ne = sum(1 << (_HLL_WBITS + 1 - r) for r in regs.values())
-        v_empty = HLL_M - len(regs)
-        s_total = s_ne + v_empty * (1 << (_HLL_WBITS + 1))
-        e_raw = _HLL_EST_NUM / float(s_total)
-
-        def rdp(x, dp):
-            return float(
-                Decimal(repr(x)).quantize(Decimal(f"1e-{dp}"), ROUND_HALF_UP)
-            )
-
-        if e_raw <= _HLL_LIN_THRESHOLD and v_empty > 0:
-            est, branch = (
-                rdp(float(HLL_M) * rdp(math.log(float(HLL_M) / v_empty), 9), 6),
-                "linear",
-            )
-        else:
-            est, branch = rdp(e_raw, 6), "raw"
-        yield pd.DataFrame(
-            [(key[0], est, v_empty, branch)],
-            columns=["source", "n_hll", "v_empty", "branch"],
-        )
-
-    return step
-
-
 def streaming_hll_distinct(items: DataFrame) -> DataFrame:
     """Streaming twin of ``sketches.hll_distinct_by`` — a LIVE per-key
     distinct counter: each micro-batch folds arriving items into the
@@ -811,12 +616,36 @@ def streaming_hll_distinct(items: DataFrame) -> DataFrame:
     Expects an (source, item) frame: tokenize upstream with the SAME
     JVM expressions as the batch op so the hashed items are identical
     (the test streams ``explode(fields(lower(text)))``)."""
-    return items.groupBy("source").applyInPandasWithState(
-        _hll_step_factory(),
-        outputStructType=HLL_OUTPUT_SCHEMA,
-        stateStructType=HLL_STREAM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    from mito_spark.operators.sketches import (
+        HLL_EST_NUM,
+        HLL_LIN_THRESHOLD,
+        HLL_M,
+        HLL_P,
+        HLL_WBITS,
+    )
+
+    def fold(key, st, rows):
+        regs = dict(zip(*st))
+        for it in rows["item"]:
+            v = int(hashlib.md5(f"hll:{it}".encode()).hexdigest()[:15], 16)
+            idx, w = v & (HLL_M - 1), v >> HLL_P
+            rho = (HLL_WBITS + 1) if w == 0 else (HLL_WBITS + 1 - w.bit_length())
+            if rho > regs.get(idx, 0):
+                regs[idx] = rho
+        s_ne = sum(1 << (HLL_WBITS + 1 - r) for r in regs.values())
+        v_empty = HLL_M - len(regs)
+        s_total = s_ne + v_empty * (1 << (HLL_WBITS + 1))
+        e_raw = HLL_EST_NUM / float(s_total)
+        if e_raw <= HLL_LIN_THRESHOLD and v_empty > 0:
+            est = _half_up(float(HLL_M) * _half_up(math.log(float(HLL_M) / v_empty), 9), 6)
+            branch = "linear"
+        else:
+            est, branch = _half_up(e_raw, 6), "raw"
+        return (list(regs), list(regs.values())), [(key[0], est, v_empty, branch)]
+
+    return keyed_fold(
+        items, ["source"], fold, init=([], []), state=HLL_STREAM_STATE_SCHEMA,
+        output=HLL_OUTPUT_SCHEMA, mode="update",
     )
 
 
@@ -835,32 +664,6 @@ PARA_STATE_SCHEMA = StructType(
 )
 
 
-def _para_step_factory():
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # buffer ALL Arrow chunks then sort once: a key's micro-batch
-        # arrives as multiple chunks with no cross-chunk ordering
-        rows: list[tuple[int, int]] = []
-        for pdf in batches:
-            rows.extend(
-                (int(d), int(i)) for d, i in zip(pdf["doc_id"], pdf["chunk_idx"])
-            )
-        rows.sort()
-        first = tuple(state.get) if state.exists else None
-        out = []
-        for doc, idx in rows:
-            if first is None:
-                first = (doc, idx)
-            # a replayed row equal to the stored first occurrence is
-            # still the original, never a dup (replay idempotence)
-            out.append((doc, idx, key[0], (doc, idx) != first))
-        state.update(first)
-        yield pd.DataFrame(out, columns=["doc_id", "chunk_idx", "h", "is_dup"])
-
-    return step
-
-
 def streaming_paragraph_dedup(chunks: DataFrame) -> DataFrame:
     """Streaming twin of ``dedup_paragraphs``' first-occurrence flag —
     the CCNet paragraph filter LIVE: per chunk-hash key, state is ONE
@@ -870,18 +673,28 @@ def streaming_paragraph_dedup(chunks: DataFrame) -> DataFrame:
     occurrence. In-order contract like the EWMA twins: batch equality
     holds when micro-batches split chronologically by (doc_id,
     chunk_idx), because 'first' is order-defined — within a
-    micro-batch the cross-chunk buffering + one sort restores the
-    order Arrow chunking loses (the applyInPandasWithState gotcha).
+    micro-batch ``keyed_fold``'s one sort over all of a key's Arrow
+    chunks restores the order chunking loses.
     Replayed rows re-flag identically (the stored first is never
     demoted to dup). Expects the (doc_id, chunk_idx, h) frame of
     ``dedup._token_window_chunks`` — chunk upstream with the same JVM
     expressions so hashes match the batch op bit-for-bit."""
-    return chunks.groupBy("h").applyInPandasWithState(
-        _para_step_factory(),
-        outputStructType=PARA_OUTPUT_SCHEMA,
-        stateStructType=PARA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+
+    def fold(key, st, rows):
+        first = None if st is None else tuple(st)
+        out = []
+        for doc, idx in zip(rows["doc_id"], rows["chunk_idx"]):
+            doc, idx = int(doc), int(idx)
+            if first is None:
+                first = (doc, idx)
+            # a replayed row equal to the stored first occurrence is
+            # still the original, never a dup (replay idempotence)
+            out.append((doc, idx, key[0], (doc, idx) != first))
+        return first, out
+
+    return keyed_fold(
+        chunks, ["h"], fold, init=None, state=PARA_STATE_SCHEMA,
+        output=PARA_OUTPUT_SCHEMA, mode="append", order=["doc_id", "chunk_idx"],
     )
 
 
@@ -902,56 +715,6 @@ QSK_STATE_SCHEMA = StructType(
         StructField("counts", ArrayType(LongType())),
     ]
 )
-
-
-def _qsk_step_factory(width: float, bins: int):
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import math
-        from decimal import ROUND_HALF_UP, Decimal
-
-        from mito_spark.operators.sketches import QS_QUANTILES
-
-        hist: dict = (
-            dict(zip(state.get[0], state.get[1])) if state.exists else {}
-        )
-        for pdf in batches:
-            for v in pdf["value"]:
-                if v is None or (isinstance(v, float) and math.isnan(v)):
-                    continue
-                b = min(max(math.floor(float(v) / width), 0), bins - 1)
-                hist[b] = hist.get(b, 0) + 1
-        state.update((list(hist.keys()), list(hist.values())))
-        if not hist:
-            # a micro-batch can deliver only NULL/NaN values for a key:
-            # n == 0 leaves est_b None and 'est_b * width' would raise,
-            # failing the task — the batch twin filters nulls before
-            # grouping and simply omits such keys, so emit nothing
-            return
-        n = sum(hist.values())
-        ests = []
-        for q in QS_QUANTILES:
-            rank = math.ceil(q * n)
-            cum = 0
-            est_b = None
-            for b in sorted(hist):
-                cum += hist[b]
-                if cum >= rank:
-                    est_b = b
-                    break
-            est = float(
-                Decimal(repr(est_b * width)).quantize(
-                    Decimal("1e-6"), ROUND_HALF_UP
-                )
-            )
-            ests.append(est)
-        yield pd.DataFrame(
-            [(key[0], n, *ests)],
-            columns=["event_type", "n", "est_p50", "est_p95", "est_p99"],
-        )
-
-    return step
 
 
 def streaming_quantile_sketch(
@@ -978,14 +741,35 @@ def streaming_quantile_sketch(
     across a non-chronological split.
 
     Expects an (event_type, value) frame; update mode."""
-    from mito_spark.operators.sketches import QS_BINS
+    from mito_spark.operators.sketches import QS_BINS, QS_QUANTILES
 
-    return values.groupBy("event_type").applyInPandasWithState(
-        _qsk_step_factory(float(width), bins or QS_BINS),
-        outputStructType=QSK_OUTPUT_SCHEMA,
-        stateStructType=QSK_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    width, bins = float(width), bins or QS_BINS
+
+    def fold(key, st, rows):
+        hist = dict(zip(*st))
+        for v in rows["value"]:
+            if v is None or (isinstance(v, float) and math.isnan(v)):
+                continue
+            b = min(max(math.floor(float(v) / width), 0), bins - 1)
+            hist[b] = hist.get(b, 0) + 1
+        new_state = (list(hist), list(hist.values()))
+        if not hist:
+            # a micro-batch can deliver only NULL/NaN values for a key:
+            # with n == 0 there is no rank to find — the batch twin
+            # filters nulls before grouping and simply omits such keys,
+            # so emit nothing
+            return new_state, []
+        bs = sorted(hist)
+        cum = list(accumulate(hist[b] for b in bs))
+        # the lower edge of the first bucket whose running count
+        # reaches rank ceil(q·n)
+        ests = [_half_up(bs[bisect_left(cum, math.ceil(q * cum[-1]))] * width, 6)
+                for q in QS_QUANTILES]
+        return new_state, [(key[0], cum[-1], *ests)]
+
+    return keyed_fold(
+        values, ["event_type"], fold, init=([], []), state=QSK_STATE_SCHEMA,
+        output=QSK_OUTPUT_SCHEMA, mode="update",
     )
 
 
@@ -994,39 +778,30 @@ def streaming_cdc_chunk_dedup(docs: DataFrame) -> DataFrame:
     dedup LIVE (the ingest-side use of ``cdc_chunk_dedup``'s chunk
     table): each arriving document is content-defined-chunked
     row-locally (a stateless mapInPandas running
-    ``_cdc_boundaries_py``, the tested Python mirror of the batch
+    ``cdc_boundaries_py``, the tested Python mirror of the batch
     chunk frame — hashes match the JVM ``hash60`` construction
     bit-for-bit), then every chunk hash is flagged dup unless it IS
-    its key's stored first occurrence — the SAME one-pair-per-key
-    state record and step as ``streaming_paragraph_dedup`` (shared
-    ``_para_step_factory``: the dedup unit changed from token windows
+    its key's stored first occurrence: the chunk stream goes through
+    ``streaming_paragraph_dedup`` itself (the same one-pair-per-key
+    state record and fold — the dedup unit changed from token windows
     to content-defined chunks, the protocol did not). In-order
     contract like the paragraph twin: batch equality under
     chronological (doc_id, chunk_idx) micro-batch splits; replayed
     rows re-flag identically. Expects a (doc_id, text) stream."""
-    from mito_spark.operators.dedup import _cdc_boundaries_py
+    from mito_spark.operators.dedup import cdc_boundaries_py
 
     def _chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         for pdf in batches:
             ids, idxs, hs = [], [], []
             for d, t in zip(pdf["doc_id"], pdf["text"]):
-                for k, c in enumerate(_cdc_boundaries_py(t or "")):
+                for k, c in enumerate(cdc_boundaries_py(t or "")):
                     ids.append(int(d))
                     idxs.append(k)
                     hs.append(hashlib.md5(c.encode()).hexdigest())
             yield pd.DataFrame({"doc_id": ids, "chunk_idx": idxs, "h": hs})
 
-    chunked = docs.mapInPandas(
-        _chunks, "doc_id long, chunk_idx int, h string"
-    )
-    return chunked.groupBy("h").applyInPandasWithState(
-        _para_step_factory(),
-        outputStructType=PARA_OUTPUT_SCHEMA,
-        stateStructType=PARA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return streaming_paragraph_dedup(
+        docs.mapInPandas(_chunks, "doc_id long, chunk_idx int, h string")
     )
 
 
@@ -1053,75 +828,9 @@ ISO_STATE_SCHEMA = StructType(
 
 
 def _iso_fixed9(v: float) -> int:
-    from decimal import ROUND_HALF_UP, Decimal
-
     return int(
         (Decimal(repr(float(v))) * (10**9)).quantize(Decimal("1"), ROUND_HALF_UP)
     )
-
-
-def _iso_step_factory():
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import math
-        from decimal import ROUND_HALF_UP, Decimal
-
-        def rdp(v, p):
-            return float(
-                Decimal(repr(float(v))).quantize(Decimal(f"1e-{p}"), ROUND_HALF_UP)
-            )
-
-        n, sn, snn, su = (
-            (state.get[0], state.get[1], state.get[2], list(state.get[3]))
-            if state.exists
-            else (0, 0, 0, [])
-        )
-        for pdf in batches:
-            for nm, u in zip(pdf["nm"], pdf["u"]):
-                nm = float(nm)
-                n += 1
-                sn += _iso_fixed9(nm)
-                snn += _iso_fixed9(nm * nm)
-                if not su:
-                    su = [0] * len(u)
-                for i, v in enumerate(u):
-                    su[i] += _iso_fixed9(v)
-        state.update((n, sn, snn, su))
-        if n == 0:
-            return
-        nd = float(n)
-        mean_norm = float(Decimal(sn).scaleb(-9)) / nd
-        var_norm = max(float(Decimal(snn).scaleb(-9)) / nd - mean_norm * mean_norm, 0.0)
-        ssq_fixed = 0
-        for s in su:
-            sd = float(Decimal(s).scaleb(-9))
-            ssq_fixed += _iso_fixed9(sd * sd)
-        ssq = float(Decimal(ssq_fixed).scaleb(-9))
-        cv = rdp(math.sqrt(var_norm) / mean_norm, 6) if mean_norm != 0 else None
-        cos = rdp((ssq - nd) / (nd * (nd - 1.0)), 6) if n > 1 else None
-        yield pd.DataFrame(
-            [
-                (
-                    key[0],
-                    n,
-                    rdp(mean_norm, 6),
-                    cv,
-                    cos,
-                    rdp(math.sqrt(ssq) / nd, 6),
-                )
-            ],
-            columns=[
-                "label",
-                "n_vectors",
-                "mean_norm",
-                "norm_cv",
-                "mean_pairwise_cosine",
-                "centroid_norm",
-            ],
-        )
-
-    return step
 
 
 def streaming_isotropy(embs: DataFrame) -> DataFrame:
@@ -1152,12 +861,35 @@ def streaming_isotropy(embs: DataFrame) -> DataFrame:
     JVM expressions as the batch op (x cast double, nm = ‖x‖ fold,
     filter nm > 0, u = x/nm) so the arriving unit vectors are
     bit-identical; update mode."""
-    return embs.groupBy("label").applyInPandasWithState(
-        _iso_step_factory(),
-        outputStructType=ISO_OUTPUT_SCHEMA,
-        stateStructType=ISO_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+
+    def fold(key, st, rows):
+        n, sn, snn, su = st
+        su = list(su)
+        for nm, u in zip(rows["nm"], rows["u"]):
+            nm = float(nm)
+            n += 1
+            sn += _iso_fixed9(nm)
+            snn += _iso_fixed9(nm * nm)
+            if not su:
+                su = [0] * len(u)
+            for i, v in enumerate(u):
+                su[i] += _iso_fixed9(v)
+        nd = float(n)
+        mean_norm = float(Decimal(sn).scaleb(-9)) / nd
+        var_norm = max(float(Decimal(snn).scaleb(-9)) / nd - mean_norm * mean_norm, 0.0)
+        ssq_fixed = 0
+        for s in su:
+            sd = float(Decimal(s).scaleb(-9))
+            ssq_fixed += _iso_fixed9(sd * sd)
+        ssq = float(Decimal(ssq_fixed).scaleb(-9))
+        cv = _half_up(math.sqrt(var_norm) / mean_norm, 6) if mean_norm != 0 else None
+        cos = _half_up((ssq - nd) / (nd * (nd - 1.0)), 6) if n > 1 else None
+        row = (key[0], n, _half_up(mean_norm, 6), cv, cos, _half_up(math.sqrt(ssq) / nd, 6))
+        return (n, sn, snn, su), [row]
+
+    return keyed_fold(
+        embs, ["label"], fold, init=(0, 0, 0, []), state=ISO_STATE_SCHEMA,
+        output=ISO_OUTPUT_SCHEMA, mode="update",
     )
 
 
@@ -1207,35 +939,6 @@ def burstiness_stream_rows(docs: DataFrame) -> DataFrame:
     return pairs.select("p.term", "p.tf")
 
 
-def _burst_step_factory():
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        from decimal import ROUND_HALF_UP, Decimal
-
-        df_, cf, s2 = (
-            (state.get[0], state.get[1], state.get[2]) if state.exists else (0, 0, 0)
-        )
-        for pdf in batches:
-            for tf in pdf["tf"]:
-                tf = int(tf)
-                df_ += 1
-                cf += tf
-                s2 += tf * tf
-        state.update((df_, cf, s2))
-        if df_ == 0:
-            return
-        adapt = float(
-            Decimal(repr(cf / df_)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
-        )
-        yield pd.DataFrame(
-            [(key[0], df_, cf, s2, adapt)],
-            columns=["term", "df", "cf", "s2", "adaptation"],
-        )
-
-    return step
-
-
 def streaming_burstiness(rows: DataFrame) -> DataFrame:
     """Streaming twin of ``quality.term_burstiness_report``'s per-term
     moment core — a LIVE burstiness monitor: a term whose adaptation
@@ -1258,12 +961,19 @@ def streaming_burstiness(rows: DataFrame) -> DataFrame:
     with ``burstiness_stream_rows`` so the arriving tf values are the
     batch ones; update mode.
     """
-    return rows.groupBy("term").applyInPandasWithState(
-        _burst_step_factory(),
-        outputStructType=BURST_OUTPUT_SCHEMA,
-        stateStructType=BURST_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+
+    def fold(key, st, rows):
+        df_, cf, s2 = st
+        for tf in rows["tf"]:
+            tf = int(tf)
+            df_ += 1
+            cf += tf
+            s2 += tf * tf
+        return (df_, cf, s2), [(key[0], df_, cf, s2, _half_up(cf / df_, 6))]
+
+    return keyed_fold(
+        rows, ["term"], fold, init=(0, 0, 0), state=BURST_STATE_SCHEMA,
+        output=BURST_OUTPUT_SCHEMA, mode="update",
     )
 
 
@@ -1298,41 +1008,6 @@ def kmv_stream_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-def _kmv_step_factory(k: int = 128):
-    space = float(1 << 60)
-
-    def step(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        from decimal import ROUND_HALF_UP, Decimal
-
-        hs = set(state.get[0]) if state.exists else set()
-        for pdf in batches:
-            hs.update(int(h) for h in pdf["h"])
-            if len(hs) > 4 * k:  # bound the working set inside a batch
-                hs = set(sorted(hs)[:k])
-        sk = sorted(hs)[:k]
-        state.update((sk,))
-        if not sk:
-            return
-        n = len(sk)
-        theta = sk[-1]
-        if n < k:
-            est = float(n)
-        else:
-            est = float(
-                Decimal(repr(float(k - 1) * space / float(theta))).quantize(
-                    Decimal("1e-6"), ROUND_HALF_UP
-                )
-            )
-        yield pd.DataFrame(
-            [(key[0], n, theta, est)],
-            columns=["source", "n_sketch", "theta", "est_distinct"],
-        )
-
-    return step
-
-
 def streaming_kmv_distinct(rows: DataFrame, k: int = 128) -> DataFrame:
     """Streaming twin of the KMV sketch core in
     ``sketches.kmv_overlap_report`` — a LIVE per-source distinct-
@@ -1348,10 +1023,15 @@ def streaming_kmv_distinct(rows: DataFrame, k: int = 128) -> DataFrame:
 
     Update mode; feed with ``kmv_stream_rows`` so the hash population
     is bit-identical to the batch chain."""
-    return rows.groupBy("source").applyInPandasWithState(
-        _kmv_step_factory(k),
-        outputStructType=KMV_OUTPUT_SCHEMA,
-        stateStructType=KMV_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    space = float(1 << 60)
+
+    def fold(key, st, rows):
+        sk = heapq.nsmallest(k, set(st[0]).union(rows["h"].tolist()))
+        n, theta = len(sk), sk[-1]
+        est = float(n) if n < k else _half_up(float(k - 1) * space / float(theta), 6)
+        return (sk,), [(key[0], n, theta, est)]
+
+    return keyed_fold(
+        rows, ["source"], fold, init=([],), state=KMV_STATE_SCHEMA,
+        output=KMV_OUTPUT_SCHEMA, mode="update",
     )

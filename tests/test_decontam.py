@@ -85,11 +85,8 @@ def test_repetition_flag_on_degenerate_docs(spark):
     assert out[2] == (6, 12)
 
 
-def test_max_run_len_empty_and_single():
+def test_max_run_len_empty_and_single(spark):
     # pure-expression check via a literal frame
-    from mito_spark.engine import get_spark
-
-    spark = get_spark("tests", shuffle_partitions=1)
     df = spark.range(1).select(
         decontam.max_run_len(F.array().cast("array<string>")).alias("e"),
         decontam.max_run_len(F.array(F.lit("x"))).alias("s"),

@@ -52,22 +52,14 @@ def no_words_dir(spark, tmp_path_factory):
     return td
 
 
-# The BPE oracle chains have no empty-argmax fallback (the WordPiece
-# chains do): when no pair is left, DuckDB's t{r} is empty while Spark
-# keeps the last encoded state, so the per-doc BPE reports disagree.
-_BPE_CHAIN_STOP = pytest.mark.xfail(
-    strict=True, reason="BPE oracle chain empties t{r} when the loop stops early"
-)
-
-
 @pytest.mark.parametrize(
     "name",
     [
         "bpe_merge_candidates",
         "bpe_learn_merges",
-        pytest.param("bpe_encode", marks=_BPE_CHAIN_STOP),
+        "bpe_encode",
         "bpe_learn_merges_bytes",
-        pytest.param("tokenizer_fertility", marks=_BPE_CHAIN_STOP),
+        "tokenizer_fertility",
         "tokenizer_fertility_subword",
         "tokenizer_compression_curve",
         "wordpiece_learn",
@@ -81,14 +73,39 @@ def test_tokenizer_matches_oracle_on_no_words_corpus(spark, no_words_dir, name):
     """A corpus whose documents hold no words: each tokenizer-family
     operator must agree with its DuckDB twin (row count, columns and
     value hash, as the correctness gate compares), not merely survive."""
+    _assert_matches_oracle(spark, no_words_dir, name)
+
+
+@pytest.fixture(scope="module")
+def early_stop_dir(spark, tmp_path_factory):
+    td = str(tmp_path_factory.mktemp("earlystop"))
+    spark.createDataFrame(
+        [(i, "ab ab ab", "en", "src0", 8) for i in range(3)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(f"{td}/documents.parquet")
+    return td
+
+
+@pytest.mark.parametrize(
+    "name", ["bpe_encode", "tokenizer_fertility", "tokenizer_fertility_subword"]
+)
+def test_bpe_reports_match_oracle_when_merges_run_out(spark, early_stop_dir, name):
+    """Three docs "ab ab ab": both BPE trainers run out of pairs after
+    two merges, well before their round budget. The per-doc reports
+    must keep the last encoded state on both engines (the oracle
+    chains' empty-argmax fallback), not lose every doc."""
+    _assert_matches_oracle(spark, early_stop_dir, name)
+
+
+def _assert_matches_oracle(spark, sf_dir, name):
     import duckdb
 
     from scripts.check_correctness import canon
 
-    got = canon(entry.queries()[name](spark, no_words_dir).toPandas())
+    got = canon(entry.queries()[name](spark, sf_dir).toPandas())
     con = duckdb.connect()
     con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{no_words_dir}/documents.parquet/*.parquet'"
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet/*.parquet'"
     )
     want = canon(con.execute(entry.oracle_sql()[name]).df())
     assert got[:3] == want[:3]

@@ -189,18 +189,34 @@ def test_packing_efficiency_hand_numbers_and_invariants(spark, tmp_path, sf_dir)
         assert r["pack_seqs"] * r["seq_len"] >= r["total_tokens"]
 
 
-def test_operator_modules_import_no_private_names_of_each_other():
-    """A helper one operator module shares with another is public in
-    its owning module: ``from mito_spark.operators.<m> import _<name>``
-    in a different operator module fails here."""
-    ops = pathlib.Path(__file__).resolve().parent.parent / "mito_spark" / "operators"
+def _private_imports(pkg_dir: str) -> list[str]:
+    """``from mito_spark.{operators,streaming}.<m> import _<name>`` lines
+    in the modules of ``mito_spark/<pkg_dir>``, other than a module
+    importing its own names."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "mito_spark"
     bad = []
-    for path in sorted(ops.glob("*.py")):
+    for path in sorted((root / pkg_dir).glob("*.py")):
+        own = f"mito_spark.{pkg_dir}.{path.stem}"
         for node in ast.walk(ast.parse(path.read_text())):
             if not (isinstance(node, ast.ImportFrom) and node.module):
                 continue
             pkg, _, owner = node.module.rpartition(".")
-            if pkg != "mito_spark.operators" or owner == path.stem:
+            if pkg not in ("mito_spark.operators", "mito_spark.streaming") or node.module == own:
                 continue
             bad += [f"{path.name}: {owner}.{a.name}" for a in node.names if a.name.startswith("_")]
+    return bad
+
+
+def test_operator_modules_import_no_private_names_of_each_other():
+    """A helper one operator module shares with another is public in
+    its owning module: ``from mito_spark.operators.<m> import _<name>``
+    in a different operator module fails here."""
+    bad = _private_imports("operators")
+    assert not bad, bad
+
+
+def test_streaming_modules_import_no_private_operator_names():
+    """The stream twins reuse operator helpers and constants only
+    through public names, as the operator modules do among themselves."""
+    bad = _private_imports("streaming")
     assert not bad, bad

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+import time
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -13,6 +16,22 @@ from mito_spark.streaming.stream_ops import (
     stream_events_from_parquet,
     windowed_counts,
 )
+
+
+def _staged_stream(spark, slices, dest):
+    """Write each frame of ``slices`` to the parquet dir ``dest`` as one
+    file, oldest first with mtimes 100 s apart, and return a stream
+    over ``dest`` that replays them in that order, one file per
+    micro-batch."""
+    seen: set = set()
+    base_t = time.time()
+    for i, sl in enumerate(slices):
+        sl.coalesce(1).write.mode("append").parquet(dest)
+        for f in set(os.listdir(dest)) - seen:
+            seen.add(f)
+            os.utime(os.path.join(dest, f), (base_t + 100 * i, base_t + 100 * i))
+    schema = spark.read.parquet(dest).schema
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dest)
 
 
 def test_streaming_windowed_counts_match_batch(spark, sf_dir):
@@ -467,9 +486,6 @@ def test_streaming_rolling_window_matches_batch_multibatch(spark, sf_dir, tmp_pa
     driven over THREE in-order micro-batches (maxFilesPerTrigger=1,
     mtime-staggered ts-range slices), per-event outputs must equal the
     batch RANGE frame exactly (count AND decimal-exact sum)."""
-    import os
-    import time
-
     from mito_spark.engine import load_table
     from mito_spark.operators.events import events_rolling_window
     from mito_spark.streaming.stateful import streaming_rolling_window
@@ -477,8 +493,7 @@ def test_streaming_rolling_window_matches_batch_multibatch(spark, sf_dir, tmp_pa
     ev = load_table(spark, sf_dir, "events").where("user_id < 30")
     d = str(tmp_path / "roll")
     dest = d + "/events.parquet"
-    # three ts-ordered slices, written oldest-first with staggered
-    # mtimes so the file source replays them as in-order micro-batches
+    # three ts-ordered slices, replayed as in-order micro-batches
     lo, hi = ev.selectExpr("min(ts)", "max(ts)").first()
     span = (hi - lo) / 3
     cuts = [lo + span, lo + 2 * span]
@@ -487,22 +502,7 @@ def test_streaming_rolling_window_matches_batch_multibatch(spark, sf_dir, tmp_pa
         ev.where((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
         ev.where(F.col("ts") >= cuts[1]),
     ]
-    seen: set = set()
-    base_t = time.time()
-    for i, sl in enumerate(slices):
-        sl.coalesce(1).write.mode("append").parquet(dest)
-        for f in os.listdir(dest):
-            if f in seen:
-                continue
-            seen.add(f)
-            fp = os.path.join(dest, f)
-            os.utime(fp, (base_t + 100 * i, base_t + 100 * i))
-    schema = spark.read.parquet(dest).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dest)
-    )
+    stream = _staged_stream(spark, slices, dest)
     out = []
     sink = ChannelSink("rollwin", lambda b, _i: out.extend(b.collect()))
     q = sink.send_to(streaming_rolling_window(stream), output_mode="append", availableNow=True)
@@ -523,9 +523,6 @@ def test_streaming_user_ewma_matches_batch_multibatch(spark, sf_dir, tmp_path):
     days SPAN batches and re-emit); the LAST update-mode row per
     (user, day) must equal the batch operator exactly (decimal-exact
     daily sum AND per-step-rounded ewma)."""
-    import os
-    import time
-
     from mito_spark.engine import load_table
     from mito_spark.operators.events import events_user_ewma
     from mito_spark.streaming.stateful import streaming_user_ewma
@@ -541,22 +538,7 @@ def test_streaming_user_ewma_matches_batch_multibatch(spark, sf_dir, tmp_path):
         ev.where((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
         ev.where(F.col("ts") >= cuts[1]),
     ]
-    seen: set = set()
-    base_t = time.time()
-    for i, sl in enumerate(slices):
-        sl.coalesce(1).write.mode("append").parquet(dest)
-        for f in os.listdir(dest):
-            if f in seen:
-                continue
-            seen.add(f)
-            fp = os.path.join(dest, f)
-            os.utime(fp, (base_t + 100 * i, base_t + 100 * i))
-    schema = spark.read.parquet(dest).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dest)
-    )
+    stream = _staged_stream(spark, slices, dest)
     out = []
     sink = ChannelSink("ewmastream", lambda b, _i: out.extend(b.collect()))
     q = sink.send_to(streaming_user_ewma(stream), output_mode="update", availableNow=True)
@@ -578,9 +560,6 @@ def test_streaming_user_ewma_calendar_matches_batch_multibatch(spark, sf_dir, tm
     rows (x=0, decayed) must materialize exactly as the batch date
     spine produces them, and the LAST update-mode row per (user, day)
     must equal the batch operator bit-for-bit."""
-    import os
-    import time
-
     from mito_spark.engine import load_table
     from mito_spark.operators.events import events_user_ewma_calendar
     from mito_spark.streaming.stateful import streaming_user_ewma_calendar
@@ -596,22 +575,7 @@ def test_streaming_user_ewma_calendar_matches_batch_multibatch(spark, sf_dir, tm
         ev.where((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
         ev.where(F.col("ts") >= cuts[1]),
     ]
-    seen: set = set()
-    base_t = time.time()
-    for i, sl in enumerate(slices):
-        sl.coalesce(1).write.mode("append").parquet(dest)
-        for f in os.listdir(dest):
-            if f in seen:
-                continue
-            seen.add(f)
-            fp = os.path.join(dest, f)
-            os.utime(fp, (base_t + 100 * i, base_t + 100 * i))
-    schema = spark.read.parquet(dest).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dest)
-    )
+    stream = _staged_stream(spark, slices, dest)
     out = []
     sink = ChannelSink("ewmacalstream", lambda b, _i: out.extend(b.collect()))
     q = sink.send_to(
@@ -640,9 +604,6 @@ def test_streaming_weighted_sample_matches_batch_any_order(spark, sf_dir, tmp_pa
     make the top-k merge order-independent. Each touched stratum
     re-emits its whole reservoir, so the LAST emission per source is
     the comparison unit (evicted docs have no retraction rows)."""
-    import os
-    import time
-
     from mito_spark.engine import load_table
     from mito_spark.operators.sampling import weighted_sample_es
     from mito_spark.streaming.stateful import streaming_weighted_sample
@@ -650,21 +611,8 @@ def test_streaming_weighted_sample_matches_batch_any_order(spark, sf_dir, tmp_pa
     docs = load_table(spark, sf_dir, "documents")
     d = str(tmp_path / "ws")
     dest = d + "/documents.parquet"
-    seen: set = set()
-    base_t = time.time()
-    for i in range(3):
-        docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(dest)
-        for f in os.listdir(dest):
-            if f in seen:
-                continue
-            seen.add(f)
-            fp = os.path.join(dest, f)
-            os.utime(fp, (base_t + 100 * i, base_t + 100 * i))
-    schema = spark.read.parquet(dest).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dest)
+    stream = _staged_stream(
+        spark, [docs.where(F.col("doc_id") % 3 == i) for i in range(3)], dest
     )
     latest: dict = {}
 
@@ -697,9 +645,6 @@ def test_streaming_hll_distinct_matches_batch_any_order(spark, sf_dir, tmp_path)
     hll_distinct_by bit-for-bit after the full stream, under a
     non-chronological (doc_id mod 3) split — register merge is MAX, so
     arrival order and batch boundaries cannot matter."""
-    import os
-    import time
-
     from mito_spark.engine import load_table
     from mito_spark.operators.sketches import hll_distinct_by
     from mito_spark.functions.strings import fields
@@ -708,26 +653,9 @@ def test_streaming_hll_distinct_matches_batch_any_order(spark, sf_dir, tmp_path)
     docs = load_table(spark, sf_dir, "documents")
     d = str(tmp_path / "hll")
     dest = d + "/documents.parquet"
-    seen: set = set()
-    base_t = time.time()
-    for i in range(3):
-        docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(dest)
-        for f in os.listdir(dest):
-            if f in seen:
-                continue
-            seen.add(f)
-            os.utime(os.path.join(dest, f), (base_t + 100 * i, base_t + 100 * i))
-    schema = spark.read.parquet(dest).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dest)
-        .select(
-            "source", F.explode(fields(F.lower(F.col("text")))).alias("item")
-        )
-    )
+    stream = _staged_stream(
+        spark, [docs.where(F.col("doc_id") % 3 == i) for i in range(3)], dest
+    ).select("source", F.explode(fields(F.lower(F.col("text")))).alias("item"))
     latest: dict = {}
 
     def on_batch(b, _i):
@@ -759,9 +687,6 @@ def test_streaming_paragraph_dedup_matches_batch_rank(
     (rn > 1) on the SAME chunk frame after the full stream, under
     chronological (doc_id-range) splits at any micro-batch size —
     the in-order contract, like the EWMA twins."""
-    import os
-    import time
-
     from pyspark.sql import Window
 
     from mito_spark.engine import load_table
@@ -784,21 +709,12 @@ def test_streaming_paragraph_dedup_matches_batch_rank(
     n_docs = docs.agg(F.max("doc_id")).first()[0] + 1
     d = str(tmp_path / f"parastream{n_files}")
     dest = d + "/chunks.parquet"
-    seen: set = set()
-    base_t = time.time()
-    for i in range(n_files):
-        lo, hi = i * n_docs // n_files, (i + 1) * n_docs // n_files
-        chunks.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).coalesce(
-            1
-        ).write.mode("append").parquet(dest)
-        for f in os.listdir(dest):
-            if f not in seen:
-                seen.add(f)
-                os.utime(os.path.join(dest, f), (base_t + 100 * i, base_t + 100 * i))
-    schema = spark.read.parquet(dest).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dest)
-    )
+    cuts = [i * n_docs // n_files for i in range(n_files + 1)]
+    slices = [
+        chunks.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+        for lo, hi in zip(cuts, cuts[1:])
+    ]
+    stream = _staged_stream(spark, slices, dest)
     got: dict = {}
 
     def on_batch(b, _i):
@@ -821,9 +737,6 @@ def test_streaming_quantile_sketch_matches_batch_any_order(spark, sf_dir, tmp_pa
     merge is ADDITION, so arrival order and batch boundaries cannot
     matter. Width is frozen from the batch derivation (max/bins), the
     deployment contract."""
-    import os
-    import time
-
     from mito_spark.engine import load_table
     from mito_spark.operators.sketches import (
         QS_BINS,
@@ -837,24 +750,11 @@ def test_streaming_quantile_sketch_matches_batch_any_order(spark, sf_dir, tmp_pa
 
     d = str(tmp_path / "qsk")
     dest = d + "/ev.parquet"
-    base_t = time.time()
-    seen: set = set()
-    for i in range(3):
-        ev.select("event_id", "event_type", "value").where(
-            F.col("event_id") % 3 == i
-        ).coalesce(1).write.mode("append").parquet(dest)
-        for f in os.listdir(dest):
-            if f in seen:
-                continue
-            seen.add(f)
-            os.utime(os.path.join(dest, f), (base_t + 100 * i, base_t + 100 * i))
-    schema = spark.read.parquet(dest).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dest)
-        .select("event_type", "value")
-    )
+    slices = [
+        ev.select("event_id", "event_type", "value").where(F.col("event_id") % 3 == i)
+        for i in range(3)
+    ]
+    stream = _staged_stream(spark, slices, dest).select("event_type", "value")
     latest: dict = {}
 
     def on_batch(b, _i):
@@ -884,7 +784,7 @@ def test_cdc_python_chunker_matches_jvm_frame(spark, sf_dir):
     import hashlib
 
     from mito_spark.engine import load_table
-    from mito_spark.operators.dedup import CDC_WINDOW, _cdc_boundaries_py, _cdc_chunks
+    from mito_spark.operators.dedup import CDC_WINDOW, cdc_boundaries_py, _cdc_chunks
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # ADVICE r11: a doc of EXACTLY window length once chunked as
@@ -907,7 +807,7 @@ def test_cdc_python_chunker_matches_jvm_frame(spark, sf_dir):
     )
     py = []
     for r in docs.select("doc_id", "text").collect():
-        for k, c in enumerate(_cdc_boundaries_py(r.text or "")):
+        for k, c in enumerate(cdc_boundaries_py(r.text or "")):
             py.append((r.doc_id, k, hashlib.md5(c.encode()).hexdigest()))
     assert jvm == sorted(py) and len(jvm) > 0
 
@@ -918,9 +818,6 @@ def test_streaming_cdc_dedup_matches_batch_rank(spark, sf_dir, tmp_path):
     chronological doc_id-range splits — the in-order contract shared
     with the paragraph twin."""
     import hashlib
-    import os
-    import time
-
     from pyspark.sql import Window
 
     from mito_spark.engine import load_table
@@ -931,24 +828,12 @@ def test_streaming_cdc_dedup_matches_batch_rank(spark, sf_dir, tmp_path):
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]
     d = str(tmp_path / "cdcstream")
     dest = d + "/docs.parquet"
-    base_t = time.time()
-    seen: set = set()
     cut = max_id // 3 + 1
-    for i in range(3):
-        docs.where(
-            (F.col("doc_id") >= i * cut) & (F.col("doc_id") < (i + 1) * cut)
-        ).coalesce(1).write.mode("append").parquet(dest)
-        for f in os.listdir(dest):
-            if f in seen:
-                continue
-            seen.add(f)
-            os.utime(os.path.join(dest, f), (base_t + 100 * i, base_t + 100 * i))
-    schema = spark.read.parquet(dest).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dest)
-    )
+    slices = [
+        docs.where((F.col("doc_id") >= i * cut) & (F.col("doc_id") < (i + 1) * cut))
+        for i in range(3)
+    ]
+    stream = _staged_stream(spark, slices, dest)
     got: dict = {}
 
     def on_batch(b, _i):
@@ -979,9 +864,6 @@ def test_streaming_isotropy_matches_batch_any_order(spark, sf_dir, tmp_path):
     bit-for-bit, under a non-chronological (vec_id mod 3) split: the
     fixed-point moment state merges by integer ADDITION, so arrival
     order and batch boundaries cannot matter."""
-    import os
-    import time
-
     from mito_spark.engine import load_table
     from mito_spark.operators.similarity import (
         norm,
@@ -1000,22 +882,8 @@ def test_streaming_isotropy_matches_batch_any_order(spark, sf_dir, tmp_path):
 
     d = str(tmp_path / "isostream")
     dest = d + "/emb.parquet"
-    base_t = time.time()
-    seen: set = set()
-    for i in range(3):
-        emb.where(F.col("vec_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(dest)
-        for f in os.listdir(dest):
-            if f in seen:
-                continue
-            seen.add(f)
-            os.utime(os.path.join(dest, f), (base_t + 100 * i, base_t + 100 * i))
-    schema = spark.read.parquet(dest).schema
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dest)
+        _staged_stream(spark, [emb.where(F.col("vec_id") % 3 == i) for i in range(3)], dest)
         .select("label", F.col("embedding").cast("array<double>").alias("x"))
         .select("label", "x", norm(F.col("x")).alias("nm"))
         .where(F.col("nm") > 0)
@@ -1051,9 +919,6 @@ def test_streaming_burstiness_matches_batch_any_order(spark, sf_dir, tmp_path):
     non-chronological (doc_id mod 3) split — integer addition state,
     so arrival order and batch boundaries cannot matter; adaptation
     must also match term_burstiness_report's column on its rows."""
-    import os
-    import time
-
     from mito_spark.engine import load_table
     from mito_spark.functions.strings import fields
     from mito_spark.operators.quality import term_burstiness_report
@@ -1081,20 +946,8 @@ def test_streaming_burstiness_matches_batch_any_order(spark, sf_dir, tmp_path):
 
     d = str(tmp_path / "burststream")
     dest = d + "/docs.parquet"
-    base_t = time.time()
-    seen: set = set()
-    for i in range(3):
-        docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(dest)
-        for f in os.listdir(dest):
-            if f in seen:
-                continue
-            seen.add(f)
-            os.utime(os.path.join(dest, f), (base_t + 100 * i, base_t + 100 * i))
-    schema = spark.read.parquet(dest).schema
     stream = burstiness_stream_rows(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dest)
+        _staged_stream(spark, [docs.where(F.col("doc_id") % 3 == i) for i in range(3)], dest)
     )
     latest: dict = {}
 
@@ -1122,8 +975,6 @@ def test_streaming_kmv_matches_batch_and_replay_idempotent(spark, sf_dir, tmp_pa
     bottom-k under a non-chronological split — AND under a REPLAYED
     slice (file 0 delivered twice): bottom-k min-union is idempotent,
     the state contract the additive-counter twins cannot make."""
-    import os
-    import time
     from decimal import ROUND_HALF_UP, Decimal
 
     from mito_spark.engine import load_table
@@ -1148,21 +999,8 @@ def test_streaming_kmv_matches_batch_and_replay_idempotent(spark, sf_dir, tmp_pa
 
     d = str(tmp_path / "kmvstream")
     dest = d + "/docs.parquet"
-    base_t = time.time()
-    seen: set = set()
-    for i, sl in enumerate([0, 1, 2, 0]):  # slice 0 REPLAYED last
-        docs.where(F.col("doc_id") % 3 == sl).coalesce(1).write.mode(
-            "append"
-        ).parquet(dest)
-        for f in os.listdir(dest):
-            if f in seen:
-                continue
-            seen.add(f)
-            os.utime(os.path.join(dest, f), (base_t + 100 * i, base_t + 100 * i))
-    schema = spark.read.parquet(dest).schema
-    stream = kmv_stream_rows(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dest)
-    )
+    slices = [docs.where(F.col("doc_id") % 3 == i) for i in (0, 1, 2, 0)]  # slice 0 REPLAYED last
+    stream = kmv_stream_rows(_staged_stream(spark, slices, dest))
     latest: dict = {}
 
     def on_batch(b, _i):
@@ -1189,3 +1027,14 @@ def test_streaming_kmv_matches_batch_and_replay_idempotent(spark, sf_dir, tmp_pa
                 )
             )
             assert est == expect, s
+
+
+def test_stream_twin_roundings_stay_distinct():
+    """The twins round a double two ways: ROUND(x, dp) works on its
+    shortest repr, CAST(x AS DECIMAL(18,4)) on its exact binary
+    expansion. 2.00005 is stored just below its repr, so the two
+    disagree at the fourth place and must not be merged."""
+    from mito_spark.streaming.stateful import _half_up, _val4
+
+    assert _half_up(2.00005, 4) == 2.0001
+    assert _val4(2.00005) == 20_000
