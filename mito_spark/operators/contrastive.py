@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mito_spark.engine import load_table, spread
-from mito_spark.operators.similarity import cosine
+from mito_spark.operators.similarity import cosine, vectors
 
 N_PROBES = 16
 N_NEG = 3
@@ -37,9 +36,7 @@ def contrastive_pairs(
     """(query_id, kind, rank, neighbor_id, cos_sim): kind='positive'
     rank 1 is the nearest same-label vector; kind='hard_negative'
     ranks 1..n_neg are the nearest different-label vectors."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir, "label")
     probes = emb.where(F.col("vec_id") < n_probes).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("qlabel"),

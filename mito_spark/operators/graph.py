@@ -86,8 +86,8 @@ def _is_star_forest(e: DataFrame) -> bool:
     the star directly ends the loop one round earlier than the r1-r12
     two-equal-signatures probe, which needed a full (no-op)
     contraction round plus its probe to confirm the fixpoint. One
-    aggregate job over the tagged node list — same bounded
-    3-numbers-to-the-driver discipline as ``_signature``."""
+    aggregate job over the tagged node list; only three numbers reach
+    the driver."""
     tagged = e.select(
         F.col("u").alias("node"), F.lit(1).alias("t"), (F.col("u") > F.col("v")).alias("ok")
     ).unionAll(e.select(F.col("v").alias("node"), F.lit(2).alias("t"), F.lit(True).alias("ok")))
@@ -107,17 +107,6 @@ def _is_star_forest(e: DataFrame) -> bool:
         .first()
     )
     return int(row["both"]) == 0 and int(row["max_deg"]) <= 1 and bool(row["oriented"])
-
-
-def _signature(e: DataFrame) -> tuple[int, int]:
-    """(n_edges, order-free hash-sum) — the bounded driver-side
-    convergence probe."""
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        # bit_xor: order-free and overflow-free under ANSI mode
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).first()
-    return int(row["n"]), int(row["h"])
 
 
 def connected_components(
@@ -936,9 +925,10 @@ def graph_kcore(
     divergence at any scale; once peeling stabilizes, further rounds
     are identity, and convergence within the default budget is
     pytest-pinned at the gate SFs (tests/test_graph.py runs rounds+1
-    and asserts identical membership). The production form adds the
-    CC-style signature check (_signature) to stop early — same plan
-    per round, one extra 1-row aggregate.
+    and asserts identical membership). The production form adds a
+    fixpoint probe to stop early (one 1-row aggregate per round, as
+    ``_is_star_forest`` is for connected components) — same plan per
+    round.
 
     Scale shape: every round is two alive-semi-joins on the edge list
     + one node-keyed count — all shuffles keyed on node id over a

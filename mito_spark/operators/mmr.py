@@ -30,8 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mito_spark.engine import load_table, spread
-from mito_spark.operators.similarity import cosine, dot, norm
+from mito_spark.operators.similarity import cosine, dot, norm, vectors
 from mito_spark.operators.topk import per_key_topk
 
 
@@ -47,8 +46,7 @@ def mmr_rerank(
     Output: (query_id, neighbor_id, rank, score) where rank 1's score
     is its relevance and later ranks carry their MMR score."""
     emb = (
-        spread(load_table(spark, sf_dir, "embeddings"))
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        vectors(spark, sf_dir)
         .withColumn("nv", norm(F.col("v")))
         # zero/null-norm vectors can never yield a non-null cosine
         # (old form: rel IS NOT NULL dropped the same rows)

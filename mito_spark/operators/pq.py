@@ -32,17 +32,17 @@ beyond-reference ANN tier.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mito_spark.engine import load_table, spread
-from mito_spark.operators.topk import per_key_topk
 from mito_spark.operators.similarity import (
     IVF_TRAIN_HEX,
-    cosine,
     ivf_train_sample,
     kmeans_centroids,
+    nearest_cell_expr,
     norm,
+    rerank_topk,
+    vectors,
 )
 
 PQ_M = 4  # subspaces (64-dim gate embeddings → 16-dim slices)
@@ -67,23 +67,6 @@ def unit_norm_expr(col: Column) -> Column:
     the DuckDB twin reproduces every double bit-for-bit."""
     nrm = norm(col)
     return F.when(nrm > 0, F.transform(col, lambda x: x / nrm)).otherwise(col)
-
-
-def _nearest_code_expr(centroids: list[list[float]], col: Column) -> Column:
-    """argmin code id over codeword literals for an arbitrary slice
-    column — the slice-parameterized form of similarity's
-    ``nearest_cell_expr`` (same squared-L2 + id tie-break, so
-    assignment agrees with the oracle's ROW_NUMBER pick)."""
-    dists = [
-        F.aggregate(
-            F.zip_with(col, F.array(*[F.lit(x) for x in c]), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in centroids
-    ]
-    pairs = F.array(*[F.struct(d.alias("d"), F.lit(i).alias("i")) for i, d in enumerate(dists)])
-    return F.array_min(pairs).getField("i")
 
 
 def train_pq_codebooks(
@@ -127,11 +110,13 @@ def pq_code_columns(
     """The m code-assignment expressions (pc ride-along columns) for a
     frame with a ``src`` vector column — shared by the one-shot tier
     and the persisted index build. ``src`` must already be unit-
-    normalized (the codebooks are trained on unit vectors)."""
+    normalized (the codebooks are trained on unit vectors). Codes use
+    ``nearest_cell_expr`` on each slice, so ties go to the lower code
+    id as in the oracle's ROW_NUMBER pick."""
     m = len(codebooks)
     sub = dim // m
     return [
-        _nearest_code_expr(codebooks[s], F.slice(F.col(src), s * sub + 1, sub))
+        nearest_cell_expr(codebooks[s], F.slice(F.col(src), s * sub + 1, sub))
         .cast("int")
         .alias(f"c{s}")
         for s in range(m)
@@ -257,9 +242,7 @@ def ann_pq_topk(
     exact: codebooks, code assignment, lookup tables, the ADC sum
     order, and the re-rank all reproduce bit-for-bit on DuckDB.
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     dim = len(emb.select("v").first()["v"])
     codebooks = train_pq_codebooks(emb, m=m, k_sub=k_sub)
     coded = (
@@ -293,26 +276,13 @@ def ann_pq_topk(
             adc_expr(m).alias("adc"),
         )
     )
-    survivors = per_key_topk(
-        cand, "query_id", [F.desc("adc"), F.asc("neighbor_id")], k * rerank_factor,
-        rank_name="crank",
-    ).select("query_id", "neighbor_id")
     # the k·rerank_factor·n_queries survivor ids broadcast back onto
     # the coded frame (a hash semi-join — the only post-cut touch of
     # the float column) and the query vectors ride in from the tiny
     # probe frame, also broadcast
-    rerank = (
-        coded.select(F.col("vec_id").alias("neighbor_id"), "v")
-        .join(F.broadcast(survivors), "neighbor_id")
-        .join(F.broadcast(probe_df.select("query_id", "q")), "query_id")
-        .select("query_id", "neighbor_id", cosine(F.col("q"), F.col("v")).alias("cos"))
-        .where(F.col("cos").isNotNull())
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        rerank.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos_sim"), "rank")
+    return rerank_topk(
+        cand, [F.desc("adc"), F.asc("neighbor_id")], coded,
+        probe_df.select("query_id", "q"), k, rerank_factor,
     )
 
 

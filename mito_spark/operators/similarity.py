@@ -19,6 +19,18 @@ Two tiers, as a real 100 TB pipeline would ship them:
 
 Dot products accumulate in float64 left-to-right (F.aggregate fold),
 matching the oracle's evaluation order so scores are reproducible.
+
+The vector-search toolkit every ANN operator (here and in ann_index,
+pq, contrastive, mmr and snapshot) composes instead of re-inlining:
+
+- ``vectors``: the embeddings decode to (vec_id, ..., v array<double>).
+- ``ivf_centroids``: the IVF coarse quantizer — the auto cell count
+  and order-pinned k-means on the hash training sample.
+- ``sq_dists`` / ``nearest_cell_expr``: squared-L2 folds against the
+  centroid literals and the argmin cell (ties to the lower id), on
+  ``v`` or any vector column such as a PQ slice.
+- ``rerank_topk``: the candidate-cut-then-exact-cosine tail of the
+  compressed tiers (SQ8, binary, PQ, the persisted readers).
 """
 
 from __future__ import annotations
@@ -49,15 +61,21 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
+def vectors(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The embeddings table as (vec_id, *cols, v array<double>): the
+    one decode every vector operator reads its corpus through."""
+    return spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", *cols, F.col("embedding").cast("array<double>").alias("v")
+    )
+
+
 def cosine_topk_bruteforce(
     spark: SparkSession, sf_dir: str, n_queries: int = 10, k: int = 10
 ) -> DataFrame:
     """Exact cosine top-k: queries = vec_id < n_queries, corpus = all
     vectors (self excluded). Returns (query_id, neighbor_id, cos_sim
     rounded to 6dp, rank)."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("q")
     )
@@ -115,9 +133,7 @@ def cosine_topk_filtered(
     the same shape applies with the filter pushed to the corpus scan
     (partition/Z-order on the label) — candidate work is proportional
     to the selectivity, not the corpus."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir, "label")
     queries = emb.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("label").alias("qlabel"), F.col("v").alias("q")
     )
@@ -279,9 +295,7 @@ def cosine_topk_lsh(
     (``auto_lsh_bits``) so bucket population stays constant as the
     corpus grows; the driver-gated entry pins bits=8 to match the
     static oracle SQL."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     if bits is None:
         bits = auto_lsh_bits(emb.count())
     emb = emb.withColumn("bucket", lsh_bucket_expr(F.col("v"), dim, bits))
@@ -347,9 +361,7 @@ def embedding_near_dup(
     One shuffle per plan: rows explode to (table, bucket) keys, the
     self-join shuffles on that composite key, and only colliding pairs
     reach the cosine computation — O(n²) never materializes."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     if bits is None:
         bits = auto_lsh_bits(emb.count())
     keyed = emb.select(
@@ -572,19 +584,56 @@ def kmeans_centroids(train: DataFrame, n_cells: int, iters: int = 3) -> list[lis
     return centroids
 
 
-def nearest_cell_expr(centroids: list[list[float]]) -> Column:
-    """argmin over centroid literals: per-row cost cells × dim FMAs,
-    folded into codegen — the centroid table rides in the plan."""
-    dists = [
+def ivf_centroids(
+    emb: DataFrame, n_cells: int | None = None
+) -> tuple[int, list[list[float]]]:
+    """The IVF coarse quantizer of ``emb`` (vec_id, v): order-pinned
+    k-means on the hash training sample. ``n_cells=None`` derives the
+    cell count from the frame's size (``auto_n_cells``). Returns
+    (n_cells, centroids); k-means can return fewer centroids than
+    n_cells on a tiny sample, so size probes and ratios from the
+    returned n_cells, not len(centroids)."""
+    if n_cells is None:
+        n_cells = auto_n_cells(emb.count())
+    return n_cells, kmeans_centroids(ivf_train_sample(emb), n_cells)
+
+
+def sq_dists(col: Column, centroids: list[list[float]]) -> list[Column]:
+    """Squared L2 distance from ``col`` to each centroid literal, one
+    left-to-right fold per centroid (the oracles' evaluation order):
+    per row cells × dim FMAs in codegen, the centroid table rides in
+    the plan."""
+    return [
         F.aggregate(
-            F.zip_with(F.col("v"), F.array(*[F.lit(x) for x in c]), lambda a, b: (a - b) * (a - b)),
+            F.zip_with(col, F.array(*[F.lit(x) for x in c]), lambda a, b: (a - b) * (a - b)),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
         for c in centroids
     ]
-    pairs = F.array(*[F.struct(d.alias("d"), F.lit(i).alias("i")) for i, d in enumerate(dists)])
-    return F.array_min(pairs).getField("i")
+
+
+def _cell_pairs(col: Column, centroids: list[list[float]]) -> Column:
+    """(d, i) structs per centroid: array_min/array_sort order them by
+    squared distance, equal distances by the lower cell id."""
+    return F.array(
+        *[F.struct(d.alias("d"), F.lit(i).alias("i")) for i, d in enumerate(sq_dists(col, centroids))]
+    )
+
+
+def nearest_cell_expr(centroids: list[list[float]], col: Column | None = None) -> Column:
+    """argmin cell id of ``col`` (default ``v``) over the centroid
+    literals, ties to the lower id."""
+    return F.array_min(_cell_pairs(F.col("v") if col is None else col, centroids)).getField("i")
+
+
+def _probe_cells_expr(centroids: list[list[float]], nprobe: int) -> Column:
+    """The ``nprobe`` cells nearest to the query vector ``q``, nearest
+    first — the same order as ``nearest_cell_expr``."""
+    return F.transform(
+        F.slice(F.array_sort(_cell_pairs(F.col("q"), centroids)), 1, nprobe),
+        lambda p: p.getField("i"),
+    )
 
 
 def cosine_topk_ivf(
@@ -612,36 +661,19 @@ def cosine_topk_ivf(
     partitioned by cell, so probes prune partitions); per-query work
     drops from N to ~N·nprobe/n_cells.
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    if n_cells is None:
-        n_cells = auto_n_cells(emb.count())
+    emb = vectors(spark, sf_dir)
+    n_cells, centroids = ivf_centroids(emb, n_cells)
     if nprobe is None:
         nprobe = auto_nprobe(n_cells)
-    centroids = kmeans_centroids(ivf_train_sample(emb), n_cells)
     # localCheckpoint (not persist): tagged feeds both the query side
     # and the corpus side of the probe join; checkpoint blocks are
     # GC-cleaned with the frame instead of pinning the session cache
     # (VERDICT r4 wrong#4)
     tagged = emb.withColumn("cell", nearest_cell_expr(centroids)).localCheckpoint()
-    # query-side: nprobe nearest cells per query
-    dists = [
-        F.aggregate(
-            F.zip_with(F.col("q"), F.array(*[F.lit(x) for x in c]), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in centroids
-    ]
-    cell_pairs = F.array(*[F.struct(d.alias("d"), F.lit(i).alias("i")) for i, d in enumerate(dists)])
-    probe_cells = F.transform(
-        F.slice(F.array_sort(cell_pairs), 1, nprobe), lambda p: p.getField("i")
-    )
     queries = (
         tagged.where(F.col("vec_id") < n_queries)
         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("q"))
-        .withColumn("cell", F.explode(probe_cells))
+        .withColumn("cell", F.explode(_probe_cells_expr(centroids, nprobe)))
     )
     joined = (
         tagged.join(F.broadcast(queries), "cell")
@@ -808,12 +840,8 @@ def ivf_balance_report(
     16 at gate SFs — the static oracle's constant, same contract as
     the IVF tier itself).
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    if n_cells is None:
-        n_cells = auto_n_cells(emb.count())
-    centroids = kmeans_centroids(ivf_train_sample(emb), n_cells)
+    emb = vectors(spark, sf_dir)
+    n_cells, centroids = ivf_centroids(emb, n_cells)
     tagged = emb.withColumn("cell", nearest_cell_expr(centroids))
     sizes = tagged.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vecs"))
     tot = sizes.agg(F.sum("n_vecs").alias("n"))
@@ -874,6 +902,40 @@ ORDER BY n_vecs DESC, cell ASC
 IVF_BALANCE_SQL = _ivf_balance_sql()
 
 
+def rerank_topk(
+    cand: DataFrame,
+    order: list[Column],
+    base: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rerank_factor: int,
+) -> DataFrame:
+    """The exact re-rank tail of the compressed tiers. ``cand``
+    (query_id, neighbor_id, score) is cut to the k·rerank_factor best
+    per query under ``order`` with the two-stage ``per_key_topk``; the
+    survivor ids broadcast-join back onto ``base``'s float vectors
+    (vec_id, v), are scored with the exact cosine against ``queries``
+    (query_id, q, broadcast) and ranked by (desc cos, asc neighbor_id).
+    Zero-norm vectors (NULL cosine) drop out. Returns (query_id,
+    neighbor_id, cos_sim, rank) with at most k rows per query."""
+    survivors = per_key_topk(
+        cand, "query_id", order, k * rerank_factor, rank_name="crank"
+    ).select("query_id", "neighbor_id")
+    rerank = (
+        base.select(F.col("vec_id").alias("neighbor_id"), "v")
+        .join(F.broadcast(survivors), "neighbor_id")
+        .join(F.broadcast(queries), "query_id")
+        .select("query_id", "neighbor_id", cosine(F.col("q"), F.col("v")).alias("cos"))
+        .where(F.col("cos").isNotNull())
+    )
+    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        rerank.withColumn("rank", F.row_number().over(w2))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos_sim"), "rank")
+    )
+
+
 def cosine_topk_sq8(
     spark: SparkSession,
     sf_dir: str,
@@ -897,9 +959,7 @@ def cosine_topk_sq8(
     force; the ORACLE reproduces this entire pipeline, so the gate
     checks exactness of the implementation, not recall).
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     amax = F.array_max(F.transform(F.col("v"), F.abs))
     scale = F.when(amax > 0, F.lit(127.0) / amax).otherwise(F.lit(0.0))
     coded = emb.withColumn("scale", scale).withColumn(
@@ -933,24 +993,11 @@ def cosine_topk_sq8(
             int_dot.alias("iscore"),
         )
     )
-    survivors = per_key_topk(
-        cand, "query_id", [F.desc("iscore"), F.asc("neighbor_id")], k * rerank_factor,
-        rank_name="crank",
-    ).select("query_id", "neighbor_id")
     # phase 2: exact float re-rank — survivor ids broadcast back onto
     # the float column (k·rerank_factor rows per query in the output)
-    rerank = (
-        emb.select(F.col("vec_id").alias("neighbor_id"), "v")
-        .join(F.broadcast(survivors), "neighbor_id")
-        .join(F.broadcast(queries.select("query_id", "q")), "query_id")
-        .select("query_id", "neighbor_id", cosine(F.col("q"), F.col("v")).alias("cos"))
-        .where(F.col("cos").isNotNull())
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        rerank.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos_sim"), "rank")
+    return rerank_topk(
+        cand, [F.desc("iscore"), F.asc("neighbor_id")], emb,
+        queries.select("query_id", "q"), k, rerank_factor,
     )
 
 
@@ -1035,9 +1082,7 @@ def cosine_topk_binary(
     the pipeline exactly, so the gate checks implementation, not
     recall).
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
 
     def word(start: int) -> Column:
         # Horner over one 32-dim slice: Σ bit_p · 2^(32-p), exact long
@@ -1074,25 +1119,8 @@ def cosine_topk_binary(
         F.broadcast(queries),
         F.col("vec_id") != F.col("query_id"),
     ).select("query_id", F.col("vec_id").alias("neighbor_id"), ham.alias("hamming"))
-    survivors = per_key_topk(
-        cand,
-        "query_id",
-        [F.asc("hamming"), F.asc("neighbor_id")],
-        k * rerank_factor,
-        rank_name="crank",
-    ).select("query_id", "neighbor_id")
-    rerank = (
-        emb.select(F.col("vec_id").alias("neighbor_id"), "v")
-        .join(F.broadcast(survivors), "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select("query_id", "neighbor_id", cosine(F.col("q"), F.col("v")).alias("cos"))
-        .where(F.col("cos").isNotNull())
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        rerank.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos_sim"), "rank")
+    return rerank_topk(
+        cand, [F.asc("hamming"), F.asc("neighbor_id")], emb, qvecs, k, rerank_factor
     )
 
 
@@ -1329,12 +1357,8 @@ def semdedup(
     self-join shuffles on cell id only. Reuses the order-pinned
     k-means so the DuckDB oracle re-derives identical cells, then
     identical pairs."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    if n_cells is None:
-        n_cells = auto_n_cells(emb.count())
-    centroids = kmeans_centroids(ivf_train_sample(emb), n_cells)
+    emb = vectors(spark, sf_dir)
+    _, centroids = ivf_centroids(emb, n_cells)
     tagged = emb.withColumn(
         "cell", nearest_cell_expr(centroids).cast("bigint")
     ).localCheckpoint()
@@ -1400,20 +1424,9 @@ def embedding_cluster_profile(
     exact). Output is n_cells rows; ``n_cells=None`` derives the
     count from the corpus (``auto_n_cells``, floor 16 = the static
     oracle's constant at gate SFs)."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    if n_cells is None:
-        n_cells = auto_n_cells(emb.count())
-    centroids = kmeans_centroids(ivf_train_sample(emb), n_cells)
-    dists = [
-        F.aggregate(
-            F.zip_with(F.col("v"), F.array(*[F.lit(x) for x in c]), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in centroids
-    ]
+    emb = vectors(spark, sf_dir, "label")
+    _, centroids = ivf_centroids(emb, n_cells)
+    dists = sq_dists(F.col("v"), centroids)
     # assigned-cell distance = the argmin's distance (ties share d²)
     tagged = emb.select(
         "vec_id",
@@ -1513,21 +1526,9 @@ def embedding_outlier_report(
     broadcast-join flag pass, n_cells rows out. ``n_cells=None``
     derives via ``auto_n_cells`` (floor 16 = the static oracle).
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    if n_cells is None:
-        n_cells = auto_n_cells(emb.count())
-    centroids = kmeans_centroids(ivf_train_sample(emb), n_cells)
-    dists = [
-        F.aggregate(
-            F.zip_with(F.col("v"), F.array(*[F.lit(x) for x in c]), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in centroids
-    ]
-    d2 = F.array_min(F.array(*dists))
+    emb = vectors(spark, sf_dir)
+    _, centroids = ivf_centroids(emb, n_cells)
+    d2 = F.array_min(F.array(*sq_dists(F.col("v"), centroids)))
     tagged = emb.select(
         "vec_id",
         nearest_cell_expr(centroids).cast("bigint").alias("cell"),
@@ -1658,9 +1659,7 @@ def knn_graph(
     NULL iff its denominator is 0 or an input is NULL (try_divide), and
     Spark orders NaN like the old plan did (NaN != 0.0 is true, so NaN
     norms pass both forms)."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     keyed = emb.select(
         "vec_id",
         F.explode(
@@ -1792,25 +1791,12 @@ def cluster_silhouette(
     (SURVEY §2 — pure expression engine); this extends the
     LLM-pipeline tier alongside semdedup/cluster_profile.
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    if n_cells is None:
-        n_cells = auto_n_cells(emb.count())
-    if n_cells < 2:
+    # the derived count floors at 16, so only an explicit one can be < 2
+    if n_cells is not None and n_cells < 2:
         raise ValueError("cluster_silhouette needs >= 2 cells (b is undefined)")
-    centroids = kmeans_centroids(ivf_train_sample(emb), n_cells)
-    dists = [
-        F.aggregate(
-            F.zip_with(F.col("v"), F.array(*[F.lit(x) for x in c]), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in centroids
-    ]
-    pairs = F.array_sort(
-        F.array(*[F.struct(d.alias("d"), F.lit(i).alias("i")) for i, d in enumerate(dists)])
-    )
+    emb = vectors(spark, sf_dir)
+    _, centroids = ivf_centroids(emb, n_cells)
+    pairs = F.array_sort(_cell_pairs(F.col("v"), centroids))
     a = F.sqrt(pairs[0].getField("d"))
     b = F.sqrt(pairs[1].getField("d"))
     s = F.when(F.greatest(a, b) == 0, F.lit(0.0)).otherwise(
@@ -1939,9 +1925,7 @@ def jl_projection_report(
     """
     import math
 
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     if sample_hex is None:
         sample_hex = auto_sample_hex(emb.count())
     if len({len(h) for h in sample_hex}) != 1:
@@ -2092,8 +2076,7 @@ def embedding_dim_ablation_report(
         ]
 
     emb = (
-        spread(load_table(spark, sf_dir, "embeddings"))
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        vectors(spark, sf_dir)
         .select("vec_id", "v", *_prefix_norms("v", "nv"))
         .localCheckpoint()
     )
@@ -2239,32 +2222,15 @@ def ann_nprobe_curve_report(
     per query) and a k·n_queries-row intersection. Counts
     integer-exact; recall and probe_frac are 6dp.
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    if n_cells is None:
-        n_cells = auto_n_cells(emb.count())
     truth = (
         cosine_topk_bruteforce(spark, sf_dir, n_queries=n_queries, k=k)
         .select("query_id", "neighbor_id")
         .localCheckpoint()
     )
     n_truth = truth.count()
-    centroids = kmeans_centroids(ivf_train_sample(emb), n_cells)
+    emb = vectors(spark, sf_dir)
+    n_cells, centroids = ivf_centroids(emb, n_cells)
     tagged = emb.withColumn("cell", nearest_cell_expr(centroids)).localCheckpoint()
-    dists = [
-        F.aggregate(
-            F.zip_with(
-                F.col("q"), F.array(*[F.lit(x) for x in c]), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in centroids
-    ]
-    cell_pairs = F.array(
-        *[F.struct(d.alias("d"), F.lit(i).alias("i")) for i, d in enumerate(dists)]
-    )
     # r13 fold (the lsh_curve / dim_ablation pattern, guide §2.4): the
     # rungs are NESTED PREFIXES of one per-query cell ranking, so the
     # r9-r12 per-rung loop (one probe join + cosine pass + top-k +
@@ -2277,14 +2243,12 @@ def ann_nprobe_curve_report(
     # cosine values, per-rung candidate sets and the (desc cos, asc id)
     # total order are byte-identical to the per-rung loop.
     max_probe = min(max(nprobes), n_cells)
-    probe_cells = F.transform(
-        F.slice(F.array_sort(cell_pairs), 1, max_probe),
-        lambda p: p.getField("i"),
-    )
     qex = (
         tagged.where(F.col("vec_id") < n_queries)
         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("q"))
-        .select("query_id", "q", F.posexplode(probe_cells).alias("pos", "cell"))
+        .select(
+            "query_id", "q", F.posexplode(_probe_cells_expr(centroids, max_probe)).alias("pos", "cell")
+        )
     )
     scored = (
         tagged.join(F.broadcast(qex), "cell")

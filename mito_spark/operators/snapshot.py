@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from mito_spark.engine import load_table, spread
 from mito_spark.functions.strings import fields
+from mito_spark.operators.similarity import vectors
 
 # Simulated-snapshot buckets (of 100): [0,5) removed in the new
 # snapshot, [80,90) edited between snapshots, [90,100) newly added.
@@ -275,10 +276,8 @@ def embedding_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimals before one sqrt. Everything past the explode is bounded
     by |labels| × dim.
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("v"),
+    emb = vectors(spark, sf_dir, "label").withColumn(
+        "bkt",
         (
             F.conv(
                 F.substring(
@@ -290,7 +289,7 @@ def embedding_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 10,
             ).cast("bigint")
             % 100
-        ).alias("bkt"),
+        ),
     )
     tagged = emb.select(
         "label",

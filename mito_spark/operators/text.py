@@ -2878,7 +2878,10 @@ def _wp_chain(rounds: int = WP_ROUNDS) -> str:
     floor), so an early trainer stop leaves the chain holding the last
     encoded state exactly like the Spark loop's ``break`` — the learn
     union is unaffected (an empty m{r} emits nothing either way), and
-    the encode finish stays correct on corpora where rounds die."""
+    the encode finish stays correct on corpora where rounds die. t{r}
+    and m{r} are MATERIALIZED for the reason ``_bpe_learn_chain``
+    gives: the fallback reads each a second time, and DuckDB inlines a
+    plain CTE per reference."""
     parts = [
         r"""
 WITH t0 AS (
@@ -2902,7 +2905,7 @@ WITH t0 AS (
   SELECT t, COUNT(*) AS n_uni
   FROM (SELECT unnest(toks) AS t FROM {prev})
   GROUP BY 1
-), m{r} AS (
+), m{r} AS MATERIALIZED (
   SELECT {r} AS round, a, b, n_pair, n_a, n_b
   FROM (
     SELECT c.a, c.b, c.n_pair, ua.n_uni AS n_a, ub.n_uni AS n_b
@@ -2910,7 +2913,7 @@ WITH t0 AS (
   )
   ORDER BY CAST(n_pair AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) DESC, a, b
   LIMIT 1
-), t{r} AS (
+), t{r} AS MATERIALIZED (
   SELECT doc_id,
          CASE WHEN len(toks) = 0 THEN toks
               ELSE list_reduce(

@@ -1,61 +1,78 @@
-"""Dump .explain("formatted") for named queries() entries to
-plans/$SPARK_GRAFT_PLAN_DIR/<query>_<suffix>.txt (judge-auditable plan
-evidence; the plan dir defaults to the current round's directory).
+"""Plan fingerprints: build queries() entries, write each one's
+normalized optimized logical plan to <out_dir>/<query>.txt and print
+one JSON line {"<query>": "<md5[:12]>"} per query.
 
-Usage: python scripts/dump_plan.py <suffix> <query> [query ...]
+Normalizing strips expression ids (``#123``, ``#123L``) and
+``plan_id=N`` tags, and renumbers lambda variables (``x_4529``) by
+first appearance in the plan: those numbers come from counters that
+run across the whole session, so they move with every query built
+before (and with whether a persisted index had to be trained first).
+Two checkouts run on the same data therefore print the same lines
+exactly when their plans match, so the check for a plan-neutral
+change is:
+
+    python scripts/dump_plan.py /tmp/plans_a > a.jsonl   # checkout A
+    python scripts/dump_plan.py /tmp/plans_b > b.jsonl   # checkout B
+    diff a.jsonl b.jsonl
+
+Usage: python scripts/dump_plan.py <out_dir> [query ...]   (no query: all)
+Env: SPARK_GRAFT_SF_DIR, the test-data directory (same default as
+scripts/time_query.py).
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import re
 import sys
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mito_spark.engine import get_spark
+_VOLATILE = re.compile(r"#\d+L?|plan_id=\d+")
+_LAMBDA_VAR = re.compile(r"(lambda [xyz])_(\d+)")
 
 
-def _formatted_plan(df) -> str:
-    # Prefer the stable-ish explainString on the Java QueryExecution;
-    # fall back to capturing df.explain() if the private surface moves.
-    try:
-        return df._jdf.queryExecution().explainString(
-            df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-    except Exception:
-        import contextlib
-        import io
+def normalize(plan: str) -> str:
+    """The plan string without expression ids and plan_id tags, its
+    lambda variables numbered from 0 in order of first appearance."""
+    ids: dict[str, int] = {}
+    return _LAMBDA_VAR.sub(
+        lambda m: f"{m.group(1)}_{ids.setdefault(m.group(2), len(ids))}",
+        _VOLATILE.sub("", plan),
+    )
 
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
+
+def fingerprint(plan: str) -> str:
+    return hashlib.md5(normalize(plan).encode()).hexdigest()[:12]
 
 
 def main() -> int:
-    if len(sys.argv) < 3:
+    if len(sys.argv) < 2:
         print(__doc__, file=sys.stderr)
         return 2
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir = sys.argv[1]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entry_mod
+    from mito_spark.engine import get_spark
 
     qs = entry_mod.queries()
+    names = sys.argv[2:] or list(qs)
     spark = get_spark("dump_plan")
     spark.sparkContext.setLogLevel("ERROR")
-    plan_dir = os.environ.get("SPARK_GRAFT_PLAN_DIR", "r13")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", plan_dir
-    )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        df = qs[name](spark, sf_dir)
-        plan = _formatted_plan(df)
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-        with open(path, "w") as f:
-            f.write(plan)
-        print(f"wrote {path} ({len(plan)} bytes)")
+        try:
+            plan = qs[name](spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+        except Exception as exc:  # keep going: one broken query must not hide the rest
+            traceback.print_exc()
+            print(json.dumps({name: f"error: {type(exc).__name__}"}), flush=True)
+            continue
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write(normalize(plan))
+        print(json.dumps({name: fingerprint(plan)}), flush=True)
     spark.stop()
     return 0
 

@@ -37,7 +37,7 @@ def test_persisted_query_runs_zero_kmeans(spark, sf_dir, index_dir, monkeypatch)
         raise AssertionError("k-means ran at query time")
 
     monkeypatch.setattr(similarity, "kmeans_centroids", boom)
-    monkeypatch.setattr(ann_index, "kmeans_centroids", boom)
+    monkeypatch.setattr(ann_index, "ivf_centroids", boom)
     rows = ann_index.ann_query_persisted(spark, sf_dir, index_dir=index_dir).collect()
     assert len(rows) > 0
 
@@ -126,7 +126,7 @@ def test_persisted_sq8_zero_kmeans_and_recall(spark, sf_dir, index_dir, monkeypa
         raise AssertionError("k-means ran at query time")
 
     monkeypatch.setattr(similarity, "kmeans_centroids", boom)
-    monkeypatch.setattr(ann_index, "kmeans_centroids", boom)
+    monkeypatch.setattr(ann_index, "ivf_centroids", boom)
     sq8 = ann_index.ann_query_persisted_sq8(spark, sf_dir, index_dir=index_dir).collect()
     flt = ann_index.ann_query_persisted(spark, sf_dir, index_dir=index_dir).collect()
     assert len(sq8) > 0
@@ -337,7 +337,7 @@ def test_ivfadc_zero_kmeans_pruned_and_recall(spark, sf_dir, index_dir, monkeypa
         raise AssertionError("k-means ran at query time")
 
     monkeypatch.setattr(similarity, "kmeans_centroids", boom)
-    monkeypatch.setattr(ann_index, "kmeans_centroids", boom)
+    monkeypatch.setattr(ann_index, "ivf_centroids", boom)
     monkeypatch.setattr(pq, "kmeans_centroids", boom)
     df = ann_index.ann_query_ivfadc(spark, sf_dir, index_dir=index_dir)
     rows = df.collect()

@@ -53,13 +53,27 @@ def test_dedup_cc_manifest_invariants(spark, sf_dir):
 
 
 def test_cc_plan_bounded_driver_traffic(spark):
-    # the convergence probe is the ONLY collect in the loop: 1 row,
-    # 2 columns per round — assert the shape stays that way
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    from mito_spark.operators.graph import _signature
+    # the star probe is the ONLY driver round-trip in the loop: one
+    # action returning a bool per round, whatever the graph's size —
+    # under AQE that action is 3 jobs (its two shuffle stages run as
+    # jobs of their own, then the result job)
+    from mito_spark.operators.graph import _is_star_forest
 
-    n, h = _signature(df.select(F.col("src").alias("u"), F.col("dst").alias("v")))
-    assert isinstance(n, int) and isinstance(h, int)
+    sc = spark.sparkContext
+    cases = {
+        "star": ([(2, 1), (3, 1)], True),
+        "chain": ([(2, 1), (3, 2)], False),
+        "big_star": ([(i, 1) for i in range(2, 202)], True),
+    }
+    for name, (edges, want) in cases.items():
+        group = f"cc_probe_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            got = _is_star_forest(spark.createDataFrame(edges, "u long, v long"))
+        finally:
+            sc._jsc.clearJobGroup()
+        assert got is want, name
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3, name
 
 
 def test_cc_empty_edges(spark):
